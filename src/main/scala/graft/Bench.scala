@@ -99,7 +99,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus.toString
 
     // Whole-suite cooldown: driver benches run minutes after the build's
     // own test suite and inherit its 1-min loadavg tail — r10/r11/r12
@@ -126,23 +126,7 @@ object Bench {
     // its thread pools — session startup itself nudges the 1-min average
     // and must not count against the quiet-host check
     val load0 = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // fewer shuffle partitions than cores at bench scale: 600k-row
-      // shuffles are task-overhead-bound, and AQE coalesces upward anyway
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE stays ON in the library defaults and tests (it's the scale
-      // story: runtime coalescing, skew-join splitting). The bench
-      // disables it: these are sub-second warm-cache queries where each
-      // AQE stage barrier re-plans and serializes the DAG (~10-30 ms per
-      // shuffle), and the exchanges it would optimize hold a few MB.
-      // Measured: total 7.4 s vs 8.0 s, dedup_minhash 0.54 s vs 0.86 s.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.timing()
     spark.sparkContext.setLogLevel("ERROR")
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
@@ -237,7 +221,8 @@ object Bench {
     // Serving-shape throughput: the whole suite once more, N client
     // threads submitting concurrently through ONE session. The serial
     // numbers above pay Spark's fixed per-stage scheduler floor (60-250
-    // ms/query of pure DAG machinery — FloorProbe, BASELINE r9) one
+    // ms/query of pure DAG machinery — BASELINE r9; re-measure with
+    // graft.tools.Profile's build/plan/exec split) one
     // query at a time; concurrent submission overlaps those floors,
     // which is the regime both a 1000-executor cluster and an embedded
     // engine behind a query API actually run. Reported as aggregate
@@ -395,16 +380,11 @@ object Bench {
     // stdout line's adaptive truncation rolls sub-floor entries into
     // "other", which loses round-over-round per-query comparison
     val sidecarPath = sys.env.getOrElse("SPARK_GRAFT_SIDECAR", "bench_full.json")
-    // `cpus` is the raw env string ("32", but "*" is a valid local[*]
-    // spec): interpolated bare it must be numeric or the JSON line (and
-    // the sidecar the band loader parses) silently breaks — emit
-    // non-numeric values as a quoted string (ADVICE r15)
-    val cpusJson = cpus.toIntOption.fold("\"" + cpus + "\"")(_.toString)
     def line(qs: Seq[(String, Double)], dec: Int, other: Double): String = {
       val entries = qs.map { case (k, v) => "\"" + k + "\":" + fmt(v, dec) } ++
         (if (other > 0) Seq("\"other\":" + fmt(other, dec)) else Nil)
       val m = entries.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$m$tpStr$noiseStr,"sidecar":"$sidecarPath","cpus":$cpusJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$m$tpStr$noiseStr,"sidecar":"$sidecarPath","cpus":$cpus,"sf":"$sfDir"}"""
     }
     // 8 kB keeps every suite member individually visible (the driver's
     // per-query PERF diff needs a row per query — a truncated map reads

@@ -392,7 +392,7 @@ final class MsgEngine(val vault: MsgVault) {
     * lookup executed exactly once as the probe side, and all three
     * broadcast uses of the id list (page cut + both junction semis)
     * canonicalize to ONE exchange, which the planner's ReuseExchange
-    * builds once — measured on message_summaries_by_ids: 12 → 8 jobs
+    * builds once — measured on message_summaries_by_ids: 12 → 10 jobs
     * per run. Callers whose page is derived by filter/sort/limit (no
     * literal ids) keep the materialize-once path below.
     */

@@ -199,38 +199,30 @@ object Dedup {
     // dup ids are fine too: left_semi doesn't multiply matches
     val candIds = cand.select(explode(array(col("id_a"), col("id_b")))
       .as("doc_id"))
-    // the id semi-join rides the same strategy knob as the verify joins
+    // the id semi-join carries no broadcast hint, like the verify joins
     // below: candIds is O(candidate pairs), and forcing its broadcast
-    // at web-scale dup rates is the same driver-collect cliff (the 100×
-    // probe hit Spark's 512M-row broadcast refusal here). Default is
-    // ADAPTIVE (no hint): the planner/AQE broadcasts when the candidate
-    // set is genuinely small and falls back to a shuffle join when it is
-    // not — the only default that survives a dense-dup corpus. The hint
-    // (=true) remains an opt-in for bounded-candidate archives where
-    // skipping AQE's size probe shaves the small-case latency.
-    val hint = docs.sparkSession.conf
-      .get("spark.graft.dedup.broadcastVerify", "false").toBoolean
-    def side(d: DataFrame) = if (hint) broadcast(d) else d
+    // at web-scale dup rates is a driver-collect cliff (the 100× probe
+    // hit Spark's 512M-row broadcast refusal here). The planner/AQE
+    // broadcasts when the candidate set is genuinely small and falls
+    // back to a shuffle join when it is not.
     val shingled = docs
-      .join(side(candIds), Seq("doc_id"), "left_semi")
+      .join(candIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         org.apache.spark.sql.graft.HashingExpressions
           .wordShingles(rawTokens(col("doc_text")), shingleSize).as("__sh"))
-    // the two broadcast sides are the SAME subplan (aliased, not
-    // re-projected) so the broadcast exchange is planned once and reused —
+    // the two join sides are the SAME subplan (aliased, not re-projected)
+    // so a broadcast exchange, when chosen, is planned once and reused —
     // candidates are shingled and shipped a single time.
-    // The broadcast HINT is sound only while the candidate set is small
-    // relative to executor memory — true for archive-style corpora, NOT
-    // for a web corpus where 30-50% of docs sit in some near-dup pair:
-    // there candIds is O(corpus·dup-rate) and forcing the broadcast
-    // collects the whole shingled set to the driver (found by the 100×
-    // probe: >1 GiB of task results at 500k docs under a dense dup
-    // fixture). That is why the DEFAULT is the un-hinted plan: AQE picks
-    // the join from the REAL runtime size — broadcast when the candidate
-    // set is genuinely small, co-partitioned shuffle join when it is not.
+    // No broadcast HINT: for a web corpus where 30-50% of docs sit in
+    // some near-dup pair, candIds is O(corpus·dup-rate) and a forced
+    // broadcast collects the whole shingled set to the driver (found by
+    // the 100× probe: >1 GiB of task results at 500k docs under a dense
+    // dup fixture). AQE picks the join from the REAL runtime size —
+    // broadcast when the candidate set is genuinely small, co-partitioned
+    // shuffle join when it is not.
     cand
-      .join(side(shingled).as("A"), col("id_a") === col("A.doc_id"))
-      .join(side(shingled).as("B"), col("id_b") === col("B.doc_id"))
+      .join(shingled.as("A"), col("id_a") === col("A.doc_id"))
+      .join(shingled.as("B"), col("id_b") === col("B.doc_id"))
       .withColumn("jaccard",
         size(array_intersect(col("A.__sh"), col("B.__sh"))).cast("double") /
           size(array_union(col("A.__sh"), col("B.__sh"))).cast("double"))
@@ -337,26 +329,21 @@ object Dedup {
       .distinct()
     val cand = if (materializeCandidates) candLazy.localCheckpoint(true)
       else candLazy
-    // same verify-join strategy knob as [[nearDuplicatesWithBands]]:
-    // default adaptive (AQE picks from runtime candidate size — survives
-    // dense-dup corpora where candidates grow O(corpus·dup-rate));
-    // spark.graft.dedup.broadcastVerify=true opts back into the forced
-    // hint for bounded-candidate archives
-    val hint = fresh.sparkSession.conf
-      .get("spark.graft.dedup.broadcastVerify", "false").toBoolean
-    def side(d: DataFrame) = if (hint) broadcast(d) else d
+    // un-hinted verify joins, as in [[nearDuplicatesWithBands]]: AQE
+    // picks from the runtime candidate size, which survives dense-dup
+    // corpora where candidates grow O(corpus·dup-rate)
     val shingleOf = (d: DataFrame) => d.select(col("doc_id"),
       org.apache.spark.sql.graft.HashingExpressions
         .wordShingles(rawTokens(col("doc_text")), shingleSize).as("__sh"))
     val shIdx = shingleOf(indexed.select(id.as("doc_id"), text.as("doc_text"))
-      .join(side(cand.select(col("indexed_id").as("doc_id"))),
+      .join(cand.select(col("indexed_id").as("doc_id")),
         Seq("doc_id"), "left_semi"))
     val shNew = shingleOf(fresh.select(id.as("doc_id"), text.as("doc_text"))
-      .join(side(cand.select(col("new_id").as("doc_id"))),
+      .join(cand.select(col("new_id").as("doc_id")),
         Seq("doc_id"), "left_semi"))
     cand
-      .join(side(shNew).as("N"), col("new_id") === col("N.doc_id"))
-      .join(side(shIdx).as("I"), col("indexed_id") === col("I.doc_id"))
+      .join(shNew.as("N"), col("new_id") === col("N.doc_id"))
+      .join(shIdx.as("I"), col("indexed_id") === col("I.doc_id"))
       .withColumn("jaccard",
         size(array_intersect(col("N.__sh"), col("I.__sh"))).cast("double") /
           size(array_union(col("N.__sh"), col("I.__sh"))).cast("double"))

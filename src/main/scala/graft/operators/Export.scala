@@ -73,8 +73,7 @@ object Export {
     * lexicographic order breaks past 100k) makes safely concatenable.
     *
     * `shards = 0` (the default) derives the count from the export's row
-    * volume — `rows / `[[DefaultRowsPerShard]]` + 1`, clamped to
-    * [1, MaxShards] — so file layout follows data size at every scale
+    * volume — [[mboxShards]] — so file layout follows data size at every scale
     * (a 330-message test export is one file, a 10^9-message archive is
     * ~20k shards) instead of a fixed 32-file layout that is both too
     * many files for a small export and too few for a large one. The
@@ -89,10 +88,7 @@ object Export {
       outDir: String, shards: Int = 0): Unit = {
     require(shards >= 0 && shards <= MaxShards,
       s"shards must be in [0, $MaxShards], got $shards")
-    val n =
-      if (shards >= 1) shards
-      else math.max(1L, math.min(MaxShards.toLong,
-        messages.count() / DefaultRowsPerShard + 1L)).toInt
+    val n = if (shards >= 1) shards else mboxShards(messages.count())
     graft.queries.bucketOrderedN(
       messages.select(id.as("__id"), record.as("value")), col("__id"), n)
       // a null record (null id or null/corrupt mime) would abort the
@@ -110,6 +106,14 @@ object Export {
     * overflowing [[readMbox]]'s one-shard-per-task fast path.
     */
   val DefaultRowsPerShard: Long = 50000L
+
+  /** Derived mbox shard count for `rows` messages: ceil(rows /
+    * [[DefaultRowsPerShard]]), clamped to [1, [[MaxShards]]] — exactly
+    * 50k rows is one shard, 50,001 is two, an empty export one file.
+    */
+  def mboxShards(rows: Long): Int =
+    if (rows <= 0L) 1
+    else math.min(MaxShards.toLong, (rows - 1L) / DefaultRowsPerShard + 1L).toInt
 
   /** [[normalizeShardNames]]'s `shard-%09d` naming is good to 10^9. */
   val MaxShards: Int = 999999999

@@ -55,7 +55,7 @@ object Packing {
     // count: the input's partitioning is already size-derived (parquet
     // maxPartitionBytes, shuffle partitions, snapshot inheritance), so
     // a small counts frame stops fanning out over defaultParallelism
-    // near-empty ranges (r15 ExecDecompose: pack_summary ran 144
+    // near-empty ranges (r15, graft.tools.Profile: pack_summary ran 144
     // tasks/run over an 8-partition snapshot; the window/scan stages
     // were 32-wide for hundreds of rows each). At corpus scale the
     // input arrives with proportionally many partitions and the scan
@@ -136,7 +136,7 @@ object Packing {
     val (frame, base) = packFrameWithBase(docs, id, tokens, seqLen)
     // Default shard count follows the CORPUS TOKEN VOLUME, not a core
     // count: each writer task pays a fixed write-closure cost (~175 ms
-    // of task deserialize measured, r15 StageDecompose — 32 tasks to
+    // of task deserialize, r15 graft.tools.Profile stages — 32 tasks to
     // emit a few hundred packs), and each shard costs its readers a
     // reader-init. ~4M tokens per shard keeps one bucket inside a
     // reader task's memory (the scaladoc contract) while a 100 TB

@@ -307,7 +307,8 @@ object Similarity {
     * NOT structure-immune: production ids carry block structure (shard
     * offsets, snowflake epochs), and any common factor between the block
     * size and the stride collapses the centroid set — measured on the
-    * 20× ScaleProbe corpus (ids shifted by 1 M per copy, stride 125):
+    * 20× replicated corpus (BASELINE.md "Scale probe"; ids shifted by
+    * 1 M per copy, stride 125):
     * 16 distinct centroids out of 320, mean cluster 2 500 instead of
     * 125, and the quadratic within-cluster pair stage blew up 20×.
     * `hashStride = false` keeps the dense-id mod pick for hand-built

@@ -502,7 +502,7 @@ object CoreQueries {
       // exchanged tail, not coalesce(1): the cached events table is
       // already clustered on user_id, so the aggregate is EXCHANGE-FREE
       // — a narrow coalesce(1) here collapsed scan+aggregate+sort into
-      // ONE task (r15 ExecDecompose: 1 job / 1 stage / 1 task / 0.36 s).
+      // ONE task (r15, graft.tools.Profile: 1 job/1 stage/1 task/0.36 s).
       // repartition(1) moves only the |users| result rows to the sort.
       .repartition(1)
       .sortWithinPartitions(col("user_id").asc)

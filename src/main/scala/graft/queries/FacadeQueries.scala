@@ -97,7 +97,7 @@ object FacadeQueries {
     // single-slice ranges for the tiny dims: a bare s.range(n) splits
     // into defaultParallelism partitions, so every broadcast-exchange
     // build of a 30-row dim ran a 32-task scan job PER QUERY RUN
-    // (StageDecompose r15: recurring 32-task near-empty stages on every
+    // (r15, graft.tools.Profile: recurring 32-task near-empty stages on every
     // enriched facade query). One slice is the right layout for a
     // fixture dim at any corpus size — real deployments read dims from
     // parquet, where maxPartitionBytes sizes the scan.

@@ -235,7 +235,7 @@ object MaintenanceQueries {
       // ≤500-row frame fanned over several partitions charges every
       // audit leg a task launch per partition (measured: 381 tasks/run
       // across the union's ~30 legs; ~0.65 s wall at local[32] —
-      // ExecDecompose r15). One partition per table is the right layout
+      // graft.tools.Profile, r15). One partition per table is the right layout
       // at ANY scale: the subset is operator-bounded to `rows` rows.
       def ck(df: DataFrame) = df.coalesce(1).localCheckpoint(true)
       opened.copy(

@@ -156,7 +156,7 @@ package object queries {
     * sort, it collapses the ENTIRE post-shuffle stage (everything since
     * the last exchange) into one task — knn_graph_routed's pair-dedup +
     * rank-window stage ran 1.31 s on a single task under it (r15
-    * StageDecompose). An explicit single-partition exchange here keeps
+    * graft.tools.Profile). An explicit single-partition exchange here keeps
     * that stage at shuffle parallelism and moves only the BOUNDED
     * result (top-k / per-group rows) into the one sort task — the same
     * single sink any engine pays for a declared total order. Use when

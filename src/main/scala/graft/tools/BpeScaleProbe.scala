@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.BpeVocab
 import graft.sources.Tables
@@ -25,19 +24,14 @@ object BpeScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val target = args.lift(1).map(_.toInt).getOrElse(1024)
     val batchK = args.lift(2).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle()
     spark.sparkContext.setLogLevel("ERROR")
 
     // The synthetic documents table carries only ~31 [a-z]+ word types —
     // BPE exhausts it under 100 merges. Enrich each doc with 24 base-26
     // id-derived words (all-letter, so wordDict keeps them): ~10k word
     // types at sf0.01, enough pair diversity for a 4-digit merge budget.
-    // Same fixture spirit as ScaleProbe's copyN markers: the probe's
+    // Same fixture spirit as MakeScale's copyN markers: the probe's
     // subject is the OPERATOR's scale axis, not the tiny test corpus.
     val b26 = udf { (n: Long) =>
       (0 until 24).map { i =>

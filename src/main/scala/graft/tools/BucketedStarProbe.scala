@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{CacheBuilder, MsgEngine}
 import graft.model._
@@ -30,16 +30,11 @@ object BucketedStarProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Session.oracle(
       // disk-backed warehouse — the probe's point is the on-disk layout
-      .config("spark.sql.warehouse.dir", "/tmp/graft_bsp_warehouse")
-      .config("javax.jdo.option.ConnectionURL",
+      "spark.sql.warehouse.dir" -> "/tmp/graft_bsp_warehouse",
+      "javax.jdo.option.ConnectionURL" ->
         "jdbc:derby:;databaseName=/tmp/graft_bsp_metastore;create=true")
-      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs1 = Tables.load(spark, sfDir, "documents").select(col("doc_id"))

@@ -34,15 +34,10 @@ object ConcurrentEnginesProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val iters = args.lift(1).map(_.toInt).getOrElse(40)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.graft.page.materialize", "persist")
-      .config("spark.graft.page.materialize.retain", "4")
-      .config("spark.graft.memo.releaseGraceMs", "1500")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle(
+      "spark.graft.page.materialize" -> "persist",
+      "spark.graft.page.materialize.retain" -> "4",
+      "spark.graft.memo.releaseGraceMs" -> "1500")
     spark.sparkContext.setLogLevel("ERROR")
     val sparkB = spark.newSession()
     sparkB.conf.set("spark.graft.page.materialize", "persist")

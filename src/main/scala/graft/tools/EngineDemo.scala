@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.{MsgEngine, MsgVault}
 import graft.model._
 
@@ -12,12 +11,7 @@ import graft.model._
 object EngineDemo {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_engine_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{IvfIndex, Similarity}
 import graft.sources.Tables
@@ -13,12 +12,7 @@ import graft.sources.Tables
   */
 object IvfRecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle()
     spark.sparkContext.setLogLevel("ERROR")
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")) {

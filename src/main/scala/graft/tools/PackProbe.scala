@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: decompose `pack_write_roundtrip`'s wall into its phases —
@@ -12,13 +11,7 @@ import org.apache.spark.sql.functions._
 object PackProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.timing()
     spark.sparkContext.setLogLevel("ERROR")
     graft.sources.Tables.cacheAll(spark, sfDir)
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")

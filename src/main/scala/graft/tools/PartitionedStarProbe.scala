@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{CacheBuilder, MsgEngine, MsgVault}
 import graft.model._
@@ -37,12 +37,7 @@ object PartitionedStarProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outBase = args.lift(2).getOrElse("/dev/shm/graft-tmp/partstar")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs1 = Tables.load(spark, sfDir, "documents").select(col("doc_id"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup}
@@ -17,7 +17,7 @@ import graft.sources.Tables
   * near-dups stay near-dups) while cross-copy n-gram overlap is zero.
   * Duplicate pressure stays constant per decade — the honest web-corpus
   * growth axis. Two rejected transforms, both fixture artifacts: a
-  * prefix marker (ScaleProbe) grows Ω(factor²) true pairs (clique
+  * prefix marker (MakeScale's) grows Ω(factor²) true pairs (clique
   * explosion); an INTERLEAVED marker (`t1 k<i> t2 k<i>`) halves n-gram
   * specificity — a 4-token winnow fingerprint degrades to 2 real
   * tokens, which blew winnow pairs from 280 to 45.7M at 10× in this
@@ -32,17 +32,7 @@ object Probe100 {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val maxFactor = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      // NO spark.graft.dedup.broadcastVerify override: the probe runs
-      // with the shipped default (adaptive, r11), which is exactly what
-      // the 100× leg exists to certify — the forced hint is the knob
-      // that aborted here when it was the default
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle("spark.driver.maxResultSize" -> "4g")
     spark.sparkContext.setLogLevel("WARN")
 
     val docs1 = Tables.load(spark, sfDir, "documents")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Embed, IvfIndex, Similarity}
 import graft.sources.Tables
@@ -34,13 +34,7 @@ object ProbeVec100 {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val maxFactor = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle("spark.driver.maxResultSize" -> "4g")
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb1 = Tables.load(spark, sfDir, "embeddings")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.model.QueryResult
 
 /** One-shot raw-SQL runner over a testdata star — the analogue of the
@@ -18,12 +17,7 @@ object Sql {
     val sql = args(0)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val fmt = args.lift(2).getOrElse("table")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.oracle()
     spark.sparkContext.setLogLevel("ERROR")
     graft.sources.Tables.registerAll(spark, dir)
     org.apache.spark.sql.graft.GraftExtensions.register(spark)

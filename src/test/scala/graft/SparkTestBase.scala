@@ -12,13 +12,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", java.nio.file.Files
-      .createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The oracle layout pinned at 4 cores, whatever the host has. */
+  lazy val session: SparkSession = Session.start(Session.oracleConf(4), Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> java.nio.file.Files
+      .createTempDirectory("graft_warehouse").toString))
 }

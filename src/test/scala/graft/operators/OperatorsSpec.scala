@@ -324,7 +324,8 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("semanticAssign hash stride is immune to block-structured ids") {
-    // ids with a 1 M block offset per shard copy — the ScaleProbe shape
+    // ids with a 1 M block offset per shard copy — the replicated-corpus
+    // shape (BASELINE.md "Scale probe")
     // that collapsed the dense-id mod pick (when the stride divides the
     // block size, every block re-picks the SAME originals; identical
     // centroids then tie and only the distinct few win the argmax).
