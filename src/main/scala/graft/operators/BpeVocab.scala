@@ -190,7 +190,7 @@ object BpeVocab {
     * per word TYPE — flat in table size where the expression chain was
     * linear in plan depth and blew codegen far earlier.
     */
-  private[operators] def tokenizeWord(w: String,
+  def tokenizeWord(w: String,
       merges: Array[(String, String)]): Seq[String] = {
     var syms: Array[String] = w.map(_.toString).toArray
     val present = scala.collection.mutable.HashSet.empty[String]
@@ -222,43 +222,25 @@ object BpeVocab {
     * document's words are rewritten through the merges in learned order
     * and the resulting subword symbols are returned per document.
     *
-    * Shape: the rewrite runs over the DISTINCT-word map — |vocab| rows,
-    * not |corpus| tokens — via ONE `mapPartitions` pass carrying the
-    * broadcast merge table ([[tokenizeWord]]; measured 10× cheaper than
-    * rewriting per occurrence at sf0.1, and flat in merge-table size
-    * where the former per-merge `replace` projection chain was linear in
-    * plan depth and hit codegen/analysis budgets near ~10² merges). The
-    * map joins back onto the per-document word stream; the join side is
-    * a distinct aggregate, so the planner (or AQE, from runtime sizes)
-    * broadcasts it while the vocabulary fits and falls back to a
-    * word-keyed shuffle join when a 10⁸-type vocabulary outgrows the
-    * broadcast threshold — both plans are right at their scale.
+    * Shape: ONE narrow pass — split → explode words →
+    * explode(`bpe_subwords(word)`), no shuffle, no join, no
+    * materialization barrier. The expression
+    * ([[org.apache.spark.sql.graft.BpeSubwords]]) runs [[tokenizeWord]]
+    * (flat in merge-table size, where the former per-merge `replace`
+    * projection chain was linear in plan depth and hit codegen/analysis
+    * budgets near ~10² merges) once per distinct word per task and
+    * serves every later occurrence from a task-local memo, so the
+    * rewrite cost still follows the vocabulary, not the token stream.
     */
   def applyMerges(docs: DataFrame, id: Column, text: Column,
       merges: Seq[String]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // snapshot the word stream ONCE: it feeds BOTH the distinct vocab
-    // map and the join's probe side, which are separate physical
-    // subtrees — without this the upstream corpus lineage (a caller's
-    // quality gate + the tokenize explode) executes twice per call.
-    // The frame is two narrow columns; the materialization strategy is
-    // conf-selectable (graft.engine.Materialize — localCheckpoint
-    // default, persist/checkpoint for recompute-on-loss clusters).
-    val words = graft.engine.Materialize.snapshot(
-      docs.select(id.as("doc_id"),
-        explode(split(lower(text), "[^a-z]+")).as("word"))
-        .filter(col("word") =!= ""))
     val table = merges.map { p =>
       val Array(a, b) = p.split(" ", 2); (a, b)
-    }.toArray
-    val bc = spark.sparkContext.broadcast(table)
-    val vocabMap = words.select(col("word")).distinct().as[String]
-      .mapPartitions { it =>
-        val ms = bc.value
-        it.map(w => (w, tokenizeWord(w, ms)))
-      }.toDF("__w", "__subs")
-    words.join(vocabMap, col("word") === col("__w"))
-      .select(col("doc_id"), explode(col("__subs")).as("subword"))
+    }
+    docs.select(id.as("doc_id"),
+        explode(split(lower(text), "[^a-z]+")).as("word"))
+      .filter(col("word") =!= "")
+      .select(col("doc_id"), explode(org.apache.spark.sql.graft
+        .TextExpressions.bpeSubwords(col("word"), table)).as("subword"))
   }
 }

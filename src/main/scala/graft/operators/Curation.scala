@@ -55,10 +55,10 @@ object Curation {
       .withColumn("lang", TextFunctions.langId(col("__text")))
       .filter(col("lang").isin(langs.toSeq: _*))
     // MATERIALIZE the survivor set once: `kept` feeds nearDuplicates
-    // (which references its doc frame from the banding pass, the
-    // candidate semi-join AND both broadcast shingle sides) plus the
-    // final anti-join — without the checkpoint each reference re-executes
-    // the langId + quality + fingerprint-window subtree, multiplying the
+    // (which references its doc frame three times: the banding pass and
+    // the two shingle sides of the verify join) plus the final
+    // anti-join — without the checkpoint each reference re-executes the
+    // langId + quality + fingerprint-window subtree, multiplying the
     // dominant full-text scan ~4×. Blocks are reclaimed by the
     // ContextCleaner once the returned frame's lineage is unreachable.
     // Conf-selected strategy (Materialize.bounded): the survivor set is

@@ -74,12 +74,16 @@ object Dedup {
     // (org.apache.spark.sql.graft.MinHashSignature); no shuffle at all.
     // Spread first: single-file scans would otherwise run the whole
     // corpus on one core.
+    // The zero-token filter tests for a letter or digit (the complement
+    // of rawTokens' separator) rather than `sig IS NOT NULL`: the
+    // optimizer pushes a filter on the alias below the spread as a
+    // second signature evaluation, run on the unspread partitions.
     graft.sources.Tables.spread(
-      df.select(id.as("doc_id"), text.as("__text")))
+      df.select(id.as("doc_id"), text.as("__text"))
+        .filter(lower(col("__text")).rlike("[\\p{L}\\p{N}]")))
       .select(col("doc_id"),
         org.apache.spark.sql.graft.HashingExpressions.minhashSignature(
           rawTokens(col("__text")), numHashes, shingleSize).as("sig"))
-      .filter(col("sig").isNotNull)
 
   /** MinHash + LSH banding: docs sharing any band bucket become candidate
     * pairs (Broder/Leskovec MMDS construction). Returns distinct
@@ -107,9 +111,8 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     minhashSignatures(df, id, text, numHashes, shingleSize)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(b, slice(col("sig"), b * lit(rows) + lit(1), lit(rows))))))
+      .select(col("doc_id"), posexplode(org.apache.spark.sql.graft
+        .HashingExpressions.bandHashes(col("sig"), bands, rows)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
   }
@@ -151,25 +154,24 @@ object Dedup {
     // compiled shingle expression (≈µs/doc vs ms/doc for the interpreted
     // transform/slice/concat_ws HOF chain); NULL for zero-token inputs,
     // so degenerate docs yield NULL jaccard instead of matching on [""]
-    val sa = org.apache.spark.sql.graft.HashingExpressions
-      .wordShingles(rawTokens(textA), shingleSize)
-    val sb = org.apache.spark.sql.graft.HashingExpressions
-      .wordShingles(rawTokens(textB), shingleSize)
-    size(array_intersect(sa, sb)).cast("double") /
-      size(array_union(sa, sb)).cast("double")
+    import org.apache.spark.sql.graft.HashingExpressions._
+    distinctJaccard(wordShingles(rawTokens(textA), shingleSize),
+      wordShingles(rawTokens(textB), shingleSize))
   }
 
   /** Near-dup via MinHash-LSH candidates + exact Jaccard threshold.
     *
-    * Re-rank plan shape (the part that must survive a 100 TB corpus):
-    * the corpus is semi-joined down to the docs that appear in ANY
-    * candidate pair (ONE scan — candidate ids are broadcast into it),
-    * each surviving doc is shingled exactly once, and the small
-    * shingled set is broadcast into both sides of the pair join. The
-    * naive `pairs JOIN corpus` twice would stream the full corpus
-    * through two joins and re-shingle a doc once per pair it appears
-    * in; here re-rank cost is bounded by the candidate set, not the
-    * corpus.
+    * Re-rank plan shape: the candidate pair set is referenced ONCE — it
+    * is the spine of the verify join — and the corpus side is a
+    * candidate-independent shingle projection joined to it as A and
+    * again as B. Every document is shingled once per side; that is
+    * cheaper per document than the 64-hash signature every document
+    * already paid in banding, so it costs less than re-running the
+    * MinHash pass to semi-join the corpus down to candidate members
+    * (Spark re-executes each reference to the candidate set: exchange
+    * reuse was measured not to fire on these subplans). Each pair joins
+    * exactly one A-row and one B-row; the joins are un-hinted (see
+    * [[nearDuplicatesWithBands]]).
     */
   def nearDuplicates(df: DataFrame, id: Column, text: Column,
       threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
@@ -196,36 +198,22 @@ object Dedup {
     // once documents are big enough for the intersection to cost.
     val cand = candidatesFromBands(banded, maxBucket)
       .distinct()
-    // dup ids are fine too: left_semi doesn't multiply matches
-    val candIds = cand.select(explode(array(col("id_a"), col("id_b")))
-      .as("doc_id"))
-    // the id semi-join carries no broadcast hint, like the verify joins
-    // below: candIds is O(candidate pairs), and forcing its broadcast
-    // at web-scale dup rates is a driver-collect cliff (the 100× probe
-    // hit Spark's 512M-row broadcast refusal here). The planner/AQE
-    // broadcasts when the candidate set is genuinely small and falls
-    // back to a shuffle join when it is not.
-    val shingled = docs
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        org.apache.spark.sql.graft.HashingExpressions
-          .wordShingles(rawTokens(col("doc_text")), shingleSize).as("__sh"))
-    // the two join sides are the SAME subplan (aliased, not re-projected)
-    // so a broadcast exchange, when chosen, is planned once and reused —
-    // candidates are shingled and shipped a single time.
-    // No broadcast HINT: for a web corpus where 30-50% of docs sit in
-    // some near-dup pair, candIds is O(corpus·dup-rate) and a forced
-    // broadcast collects the whole shingled set to the driver (found by
-    // the 100× probe: >1 GiB of task results at 500k docs under a dense
-    // dup fixture). AQE picks the join from the REAL runtime size —
-    // broadcast when the candidate set is genuinely small, co-partitioned
-    // shuffle join when it is not.
+    // `shingled` does not depend on `cand`, so the MinHash pass behind
+    // `cand` runs once. No broadcast HINT on either verify join: for a
+    // web corpus where 30-50% of docs sit in some near-dup pair, the
+    // candidate set is O(corpus·dup-rate) and a forced broadcast
+    // collects it to the driver (found by the 100× probe: >1 GiB of
+    // task results at 500k docs under a dense dup fixture). AQE picks
+    // each join from the REAL runtime sizes — broadcast when a side is
+    // genuinely small, co-partitioned shuffle join when it is not.
+    val shingled = docs.select(col("doc_id"),
+      org.apache.spark.sql.graft.HashingExpressions
+        .wordShingles(rawTokens(col("doc_text")), shingleSize).as("__sh"))
     cand
       .join(shingled.as("A"), col("id_a") === col("A.doc_id"))
       .join(shingled.as("B"), col("id_b") === col("B.doc_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("A.__sh"), col("B.__sh"))).cast("double") /
-          size(array_union(col("A.__sh"), col("B.__sh"))).cast("double"))
+      .withColumn("jaccard", org.apache.spark.sql.graft.HashingExpressions
+        .distinctJaccard(col("A.__sh"), col("B.__sh")))
       .filter(col("jaccard") >= threshold)
       // no trailing distinct: cand is already distinct and each pair
       // joins exactly one A-row and one B-row
@@ -274,10 +262,11 @@ object Dedup {
     * `materializeCandidates = true` eagerly `localCheckpoint`s the
     * bounded candidate set: its lineage holds the MinHash pass over the
     * whole fresh batch, and the verify plan references it three times
-    * (spine + two semi-join broadcasts). Spark's ReuseExchange usually
-    * deduplicates those identical subplans anyway, so this is a
-    * measured-but-modest win (~15%) that also makes the reuse structural
-    * instead of optimizer-dependent. It is OFF by default because it (a)
+    * (spine + two semi-joins that keep the shingling O(delta)). Exchange
+    * reuse was measured NOT to fire on those identical subplans, so
+    * without the checkpoint the MinHash pass over `fresh` runs three
+    * times; the checkpoint makes the single pass structural (a
+    * measured ~15% win on the probe). It is OFF by default because it (a)
     * runs a Spark job at DataFrame-construction time — a surprise for a
     * plan-building API — and (b) stores lineage-truncated blocks on
     * executors, which a dynamic-allocation decommission cannot recompute.
@@ -344,9 +333,8 @@ object Dedup {
     cand
       .join(shNew.as("N"), col("new_id") === col("N.doc_id"))
       .join(shIdx.as("I"), col("indexed_id") === col("I.doc_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("N.__sh"), col("I.__sh"))).cast("double") /
-          size(array_union(col("N.__sh"), col("I.__sh"))).cast("double"))
+      .withColumn("jaccard", org.apache.spark.sql.graft.HashingExpressions
+        .distinctJaccard(col("N.__sh"), col("I.__sh")))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("indexed_id"), col("jaccard"))
   }

@@ -1206,11 +1206,11 @@ object DocQueries {
 
   /** The APPLY side ([[graft.operators.BpeVocab.applyMerges]]): tokenize
     * the full corpus with the learned merges, top-50 subwords by
-    * occurrence. The Spark side counts per word OCCURRENCE (distinct-
-    * word rewrite map joined back onto the corpus word stream); the
-    * oracle skips the join and weights the rewritten DICTIONARY by
-    * frequency — the gate proves the two formulations agree, which is
-    * exactly the train-on-dict / apply-to-corpus contract.
+    * occurrence. The Spark side counts per word OCCURRENCE (each word
+    * of the corpus stream rewritten, memoized per task); the oracle
+    * weights the rewritten DICTIONARY by frequency — the gate proves
+    * the two formulations agree, which is exactly the train-on-dict /
+    * apply-to-corpus contract.
     */
   def vocabBpeSubwords(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
@@ -1238,7 +1238,7 @@ object DocQueries {
     * score `TextFunctions.qualityScore` produces — the round is part of
     * the contract, see [[duckQualityScore]]),
     * subword counts aggregate per word OCCURRENCE on the Spark side
-    * (vocab-map join) vs frequency-dictionary lookup in the oracle, and
+    * (per-word rewrite) vs frequency-dictionary lookup in the oracle, and
     * the pack offsets
     * ride the two-level distributed scan vs the oracle's single window.
     */
@@ -1248,7 +1248,7 @@ object DocQueries {
     val kept = docs.filter(TextFunctions.qualityScore(col("text")) >= 0.5)
     // snapshot the per-doc counts before packing: the two-level scan's
     // repartitionByRange SAMPLES its child, which would re-execute the
-    // whole tokenize-join-aggregate subtree a second time just to pick
+    // whole tokenize-aggregate subtree a second time just to pick
     // range bounds. The frame is two narrow columns (~16 B/doc — tens
     // of GB at a 10^9-doc corpus, executor-storage scale), so
     // materializing once is far cheaper than the double execution.

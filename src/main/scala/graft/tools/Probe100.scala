@@ -108,9 +108,9 @@ object Probe100 {
           translate(col("text"), "0123456789", "abcdefghij").as("text"))
         graft.operators.BpeVocab.learnMerges(dd, col("text"), 6).count()
       }),
-      // full composed pipeline (quality gate → vocab-map tokenize with
+      // full composed pipeline (quality gate → subword tokenize with
       // freshly learned merges → packing rollup) — certifies the
-      // composition's growth, not just each stage's: the vocab map
+      // composition's growth, not just each stage's: the vocabulary
       // grows ×factor (alphabetic renaming), the corpus word stream
       // ×factor, and the two-level pack scan stays two shuffles.
       ("pipeline_pack", d => {

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -190,6 +190,92 @@ case class WordShingles(child: Expression, n: Int, shortFallback: Boolean)
     copy(child = newChild)
 }
 
+/** Jaccard similarity of two DISTINCT string arrays (shingle sets):
+  * |a ∩ b| / |a ∪ b|, with the union size taken as |a| + |b| − |a ∩ b|.
+  * For distinct inputs this equals
+  * `size(array_intersect(a, b)) / size(array_union(a, b))` bit for bit
+  * (the same two ints, the same double division) without materializing
+  * either intermediate array: one hash set over the smaller side, one
+  * probe pass over the larger. A null element counts as one member,
+  * as it does in `array_intersect`/`array_union`. Null in → null out;
+  * two empty arrays (0/0) → null, as non-ANSI division by zero is.
+  * Arrays with repeated elements get a wrong union size — feed it
+  * [[WordShingles]] outputs, which are distinct and never empty.
+  */
+case class DistinctJaccard(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(StringType), ArrayType(StringType))
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "distinct_jaccard"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (small, large) = {
+      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+      if (x.numElements() <= y.numElements()) (x, y) else (y, x)
+    }
+    val ns = small.numElements()
+    val nl = large.numElements()
+    if (ns + nl == 0) return null
+    val set = new java.util.HashSet[UTF8String](ns * 2)
+    var smallNull = false
+    var i = 0
+    while (i < ns) {
+      if (small.isNullAt(i)) smallNull = true else set.add(small.getUTF8String(i))
+      i += 1
+    }
+    var inter = 0
+    i = 0
+    while (i < nl) {
+      if (large.isNullAt(i)) { if (smallNull) inter += 1 }
+      else if (set.contains(large.getUTF8String(i))) inter += 1
+      i += 1
+    }
+    inter.toDouble / (ns + nl - inter).toDouble
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): DistinctJaccard =
+    copy(left = newLeft, right = newRight)
+}
+
+/** LSH band keys of a MinHash signature: element b is
+  * `xxhash64(b, slice(sig, b * rows + 1, rows))` with Spark's seed 42,
+  * bit for bit (an int child hashes with hashInt, each array element
+  * chains through hashLong). Compiled, so banding is one tight loop per
+  * signature instead of `bands` interpreted lambda calls that each
+  * allocate a slice.
+  */
+case class BandHashes(child: Expression, bands: Int, rows: Int)
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  require(bands > 0 && rows > 0)
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "band_hashes"
+
+  override def nullSafeEval(input: Any): Any = {
+    val sig = input.asInstanceOf[ArrayData]
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = XXH64.hashInt(b, 42L)
+      var r = b * rows
+      val end = math.min(r + rows, sig.numElements())
+      while (r < end) {
+        if (!sig.isNullAt(r)) h = XXH64.hashLong(sig.getLong(r), h)
+        r += 1
+      }
+      out(b) = h
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BandHashes =
+    copy(child = newChild)
+}
+
 object HashingExpressions {
   def simhash64(toks: Column): Column =
     ExpressionUtils.column(SimHash64(ExpressionUtils.expression(toks)))
@@ -202,4 +288,11 @@ object HashingExpressions {
       shortFallback: Boolean = true): Column =
     ExpressionUtils.column(WordShingles(
       ExpressionUtils.expression(toks), n, shortFallback))
+
+  def bandHashes(sig: Column, bands: Int, rows: Int): Column =
+    ExpressionUtils.column(BandHashes(ExpressionUtils.expression(sig), bands, rows))
+
+  def distinctJaccard(a: Column, b: Column): Column =
+    ExpressionUtils.column(DistinctJaccard(
+      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -339,6 +339,54 @@ object RedactPii {
       s"|(?<![0-9.])$octet(?:\\.$octet){3}(?![0-9.])")
 }
 
+/** BPE subwords of one word under a learned merge table: the symbols
+  * `graft.operators.BpeVocab.tokenizeWord` produces, as an
+  * array<string>. Null in → null out.
+  *
+  * Words repeat Zipf-style, so each task keeps a memo from word to its
+  * subword array: a word is rewritten once per task and every later
+  * occurrence is one hash lookup. The memo is `@transient`, so every
+  * deserialized copy of the expression (one per task, both in
+  * generated code and in interpreted projections) starts empty and is
+  * only ever touched by its task's thread. Keys are copied: the input
+  * `UTF8String` may point into a reused row buffer. The memo is cleared
+  * when it reaches [[BpeSubwords.MemoWords]] entries, so a hostile
+  * corpus of all-distinct words costs a rewrite per occurrence instead
+  * of unbounded task memory.
+  */
+case class BpeSubwords(child: Expression, merges: Seq[(String, String)])
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "bpe_subwords"
+  // the merge table can hold 10⁴+ pairs: print its size, not its body
+  override def toString: String = s"$prettyName($child, ${merges.size} merges)"
+
+  @transient private lazy val table = merges.toArray
+  @transient private lazy val memo =
+    new java.util.HashMap[UTF8String, ArrayData]()
+
+  override def nullSafeEval(input: Any): Any = {
+    val w = input.asInstanceOf[UTF8String]
+    val hit = memo.get(w)
+    if (hit != null) return hit
+    val subs = graft.operators.BpeVocab.tokenizeWord(w.toString, table)
+    val out = new GenericArrayData(subs.map(UTF8String.fromString).toArray[Any])
+    if (memo.size >= BpeSubwords.MemoWords) memo.clear()
+    memo.put(w.clone(), out)
+    out
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): BpeSubwords =
+    copy(child = newChild)
+}
+
+object BpeSubwords {
+  /** Memo capacity per task: far above a natural-language partition's
+    * word types (~10⁴), small enough (~10 MB) to bound task memory. */
+  private val MemoWords = 1 << 16
+}
+
 object TextExpressions {
   def simhash60Md5(toks: Column): Column =
     ExpressionUtils.column(SimHash60Md5(ExpressionUtils.expression(toks)))
@@ -355,4 +403,7 @@ object TextExpressions {
 
   def redactPii(text: Column): Column =
     ExpressionUtils.column(RedactPii(ExpressionUtils.expression(text)))
+
+  def bpeSubwords(word: Column, merges: Seq[(String, String)]): Column =
+    ExpressionUtils.column(BpeSubwords(ExpressionUtils.expression(word), merges))
 }

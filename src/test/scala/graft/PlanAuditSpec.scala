@@ -600,21 +600,34 @@ class PlanAuditSpec extends SparkTestBase {
       s"pack aggregate did not shuffle on pack_id: $keys\n$plan")
   }
 
-  test("BPE apply: rewrite rides the distinct vocab, no range/single-task stage") {
+  test("nearDuplicates runs the MinHash pass once: one signature, one pair distinct") {
+    val docs = Tables.load(spark, sf, "documents")
+    val df = graft.operators.Dedup.nearDuplicates(docs, col("doc_id"),
+      col("text"))
+    val plan = executed(df).toString
+    // the candidate set is referenced once (the verify spine); the two
+    // shingle sides read the corpus without it, so neither the MinHash
+    // pass nor the pair distinct behind it may be planned again
+    val sigs = "minhash_signature\\(".r.findAllIn(plan).size
+    assert(sigs == 1, s"expected one MinHash pass, got $sigs:\n$plan")
+    val pairDistincts = "Exchange hashpartitioning\\(id_a#\\d+L?, id_b#".r
+      .findAllIn(plan).size
+    assert(pairDistincts <= 1,
+      s"expected at most one pair-distinct exchange, got $pairDistincts:\n$plan")
+  }
+
+  test("BPE apply is one narrow pass: no exchange, join or checkpoint") {
     val docs = Tables.load(spark, sf, "documents")
     val df = graft.operators.BpeVocab.applyMerges(docs, col("doc_id"),
       col("text"), Seq("e s", "t h"))
     val plan = executed(df).toString
-    // corpus-wide exchanges key on the word join / distinct only — a
-    // range exchange or single-partition stage would mean a global sort
-    // or driver funnel crept into the apply path
-    assert(!plan.contains("Exchange rangepartitioning"),
-      s"range exchange in BPE apply:\n$plan")
-    assert(!plan.contains("Exchange SinglePartition"),
-      s"single-task stage in BPE apply:\n$plan")
-    val keys = "Exchange hashpartitioning\\(([^,#]*)".r
-      .findAllMatchIn(plan).map(_.group(1)).toSet
-    assert(keys.forall(k => k == "word" || k == "__w"),
-      s"unexpected shuffle keys $keys:\n$plan")
+    // split → explode → explode(bpe_subwords): any exchange, join or
+    // snapshot (an RDD scan of a localCheckpoint) means the distinct
+    // vocab map and its join-back crept back in
+    assert(!plan.contains("Exchange"), s"exchange in BPE apply:\n$plan")
+    assert(!plan.contains("Join"), s"join in BPE apply:\n$plan")
+    assert(!plan.contains("ExistingRDD") && !plan.contains("LogicalRDD"),
+      s"materialized snapshot in BPE apply:\n$plan")
+    assert(plan.contains("bpe_subwords("), s"no compiled rewrite:\n$plan")
   }
 }
