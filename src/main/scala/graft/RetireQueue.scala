@@ -1,9 +1,7 @@
 package graft
 
-/** Deferred-release queue shared by the memoized-index eviction
-  * (graft.queries) and the page-materialization retention ring
-  * (graft.engine.Materialize). One definition of the non-obvious
-  * recipe both need:
+/** Deferred-release queue behind the memoized-index eviction
+  * (graft.queries, its one user). The non-obvious recipe:
   *
   *   - grace ≤ 0 releases immediately (the single-engine default);
   *     grace > 0 RETIRES the value and releases it only once the

@@ -482,17 +482,15 @@ object CacheBuilder {
     // a live source between the two scans — the state would advance past
     // ids this build never exported. Persisted because the frame is read
     // five times (stats, messages write, three junction semi-joins).
-    // Materialize.snapshot, NOT persist: persist is best-effort — a
+    // localCheckpoint, NOT persist: persist is best-effort — a
     // reclaimed executor's lost cache blocks RECOMPUTE from the live
     // source, so the watermark (fixed first) and the later writes could
     // see different row sets, re-opening exactly the divergence this
-    // snapshot exists to close. snapshot() therefore refuses the persist
-    // conf (degrades to fail-honest localCheckpoint: a lost block FAILS
-    // the build, retried honestly, instead of silently exporting rows
-    // past the recorded watermark); =checkpoint is the fault-tolerant
-    // cluster option (reliable storage, no recompute).
-    val newRows = Materialize.snapshot(
-      input.messages.filter(col("id") > watermark))
+    // snapshot exists to close. A lost checkpoint block instead FAILS
+    // the build, retried honestly, rather than silently exporting rows
+    // past the recorded watermark.
+    val newRows = input.messages.filter(col("id") > watermark)
+      .localCheckpoint(true)
     // release on EVERY exit path (early return, the empty-input
     // require, a failed parquet write): without the finally, a throw
     // before the tail would pin the whole new-slice snapshot for the
@@ -703,10 +701,11 @@ object CacheBuilder {
     // would let a message inserted mid-build pass a junction semi-join
     // while being absent from the already-written messages table — a
     // torn star.
-    val live = Materialize.snapshot(input.messages
+    val live = input.messages
       .filter(col("deleted_at").isNull && col("sent_at").isNotNull)
       .withColumn("year", year(col("sent_at")))
-      .withColumn("month", month(col("sent_at"))))
+      .withColumn("month", month(col("sent_at")))
+      .localCheckpoint(true)
     try {
       live.write.mode(SaveMode.Overwrite)
         .bucketBy(buckets, "id").sortBy("id")

@@ -312,18 +312,21 @@ final class MsgEngine(val vault: MsgVault) {
       filter.pagination.limit, filter.pagination.offset, defaultLimit = 500)
   }
 
-  /** The shared LIMIT/OFFSET page cut: order → offset → limit → (drop) →
+  /** The shared page cut: (cursor) → order → offset → limit → (drop) →
     * enrich → re-order. Enrichment joins do not preserve order, so the
     * page is cut FIRST — only the page rows ride through the joins — and
     * the ordering re-applies at the result edge. Default page sizes
     * differ BY DESIGN per surface (reference: messages 500, search 100,
     * text search 50 — duckdb.go:776/1238/1850, duckdb_text.go:409), so
     * the default is a parameter with one point of truth per call site.
+    * A keyset `cursor` (see [[cursorFiltered]]) applies before the sort;
+    * it assumes the [[MsgEngine.NewestFirst]] ordering.
     */
   private[engine] def pageThenEnrich(df: DataFrame, ordering: Seq[Column],
       limit: Int, offset: Int, defaultLimit: Int,
-      dropBeforeEnrich: Seq[String] = Nil): DataFrame = {
-    val ordered = df.orderBy(ordering: _*)
+      dropBeforeEnrich: Seq[String] = Nil,
+      cursor: Option[(java.sql.Timestamp, Long)] = None): DataFrame = {
+    val ordered = cursorFiltered(df, cursor).orderBy(ordering: _*)
     val off = if (offset > 0) ordered.offset(offset) else ordered
     val page = off.limit(if (limit > 0) limit else defaultLimit)
     enrich(page.drop(dropBeforeEnrich: _*)).orderBy(ordering: _*)
@@ -337,13 +340,9 @@ final class MsgEngine(val vault: MsgVault) {
     * [[listMessages]]'s default (sent_at DESC, id DESC).
     */
   def listMessagesAfter(filter: MessageFilter,
-      cursor: Option[(java.sql.Timestamp, Long)], limit: Int = 500): DataFrame = {
-    val page = cursorFiltered(filters.compile(filter), cursor)
-    val sorted = page
-      .orderBy(col("sent_at").desc_nulls_last, col("id").desc)
-      .limit(if (limit > 0) limit else 500)
-    enrich(sorted).orderBy(col("sent_at").desc_nulls_last, col("id").desc)
-  }
+      cursor: Option[(java.sql.Timestamp, Long)], limit: Int = 500): DataFrame =
+    pageThenEnrich(filters.compile(filter), MsgEngine.NewestFirst, limit,
+      offset = 0, defaultLimit = 500, cursor = cursor)
 
   /** Email-surface search base: every search surface in the reference
     * restricts to email message types (SearchFast duckdb.go:2310, deep
@@ -358,7 +357,7 @@ final class MsgEngine(val vault: MsgVault) {
     * last) — the predicate must keep them reachable: a dated cursor
     * admits every null row; a null cursor pages within the null tail.
     */
-  private[engine] def cursorFiltered(df: DataFrame,
+  private def cursorFiltered(df: DataFrame,
       cursor: Option[(java.sql.Timestamp, Long)]): DataFrame =
     cursorPredicate(cursor).foldLeft(df)(_.filter(_))
 
@@ -406,20 +405,16 @@ final class MsgEngine(val vault: MsgVault) {
     // / 4.3 s of task time for a 50-row page; 0.3 s after). Sound at any
     // scale: every caller passes a LIMIT-bounded page, so the
     // checkpoint holds ≤ page-size rows — this is paginate-before-join
-    // completing its own argument. Strategy is conf-selected
-    // ([[Materialize.bounded]]): the default localCheckpoint is NOT
-    // fault-tolerant (executor loss fails the page query rather than
-    // recomputing — acceptable for a bounded retry); cluster operators
-    // wanting recompute-on-loss set spark.graft.page.materialize=persist
-    // (sound here: the page derivation is deterministic over the opened
-    // parquet snapshot) or =checkpoint for reliable storage.
+    // completing its own argument. localCheckpoint is NOT
+    // fault-tolerant: executor loss fails the page query rather than
+    // recomputing, which a bounded page retry absorbs.
     //
     // With a literal id list the barrier is unnecessary: the page's
     // only multi-use subtree IS the id list, which the driver already
     // holds — see [[enrich]]'s knownIds overload doc.
     val page = knownIds match {
       case Some(_) => pageIn
-      case None => Materialize.bounded(pageIn)
+      case None => pageIn.localCheckpoint(true)
     }
     // fresh aliases everywhere: the page's lineage already contains the
     // recipients/participants frames (filter semi-joins), so reusing the
@@ -651,7 +646,7 @@ final class MsgEngine(val vault: MsgVault) {
   def searchFast(query: String, filter: MessageFilter = MessageFilter()): DataFrame = {
     val q = SearchParser.parse(query)
     val msg = filters.compileSearch(emailSearchBase(filter), q)
-    pageThenEnrich(msg, Seq(col("sent_at").desc, col("id").desc),
+    pageThenEnrich(msg, MsgEngine.NewestFirst,
       filter.pagination.limit, filter.pagination.offset, defaultLimit = 100)
   }
 
@@ -666,10 +661,8 @@ final class MsgEngine(val vault: MsgVault) {
       limit: Int = 100): DataFrame = {
     val q = SearchParser.parse(query)
     val msg = filters.compileSearch(emailSearchBase(filter), q)
-    val page = cursorFiltered(msg, cursor)
-      .orderBy(col("sent_at").desc_nulls_last, col("id").desc)
-      .limit(if (limit > 0) limit else 100)
-    enrich(page).orderBy(col("sent_at").desc_nulls_last, col("id").desc)
+    pageThenEnrich(msg, MsgEngine.NewestFirst, limit, offset = 0,
+      defaultLimit = 100, cursor = cursor)
   }
 
   /** Materialize-once search (reference SearchFastWithStats
@@ -814,8 +807,7 @@ final class MsgEngine(val vault: MsgVault) {
     */
   def searchDeep(query: String, bodies: DataFrame,
       filter: MessageFilter = MessageFilter()): DataFrame = {
-    pageThenEnrich(deepMatches(query, bodies, filter),
-      Seq(col("sent_at").desc, col("id").desc),
+    pageThenEnrich(deepMatches(query, bodies, filter), MsgEngine.NewestFirst,
       filter.pagination.limit, filter.pagination.offset, defaultLimit = 100,
       dropBeforeEnrich = Seq("__b_mid", "tokens"))
   }
@@ -828,14 +820,10 @@ final class MsgEngine(val vault: MsgVault) {
   def searchDeepAfter(query: String, bodies: DataFrame,
       filter: MessageFilter = MessageFilter(),
       cursor: Option[(java.sql.Timestamp, Long)] = None,
-      limit: Int = 100): DataFrame = {
-    val matched = cursorFiltered(deepMatches(query, bodies, filter), cursor)
-    val page = matched
-      .orderBy(col("sent_at").desc_nulls_last, col("id").desc)
-      .limit(if (limit > 0) limit else 100)
-      .drop("__b_mid", "tokens")
-    enrich(page).orderBy(col("sent_at").desc_nulls_last, col("id").desc)
-  }
+      limit: Int = 100): DataFrame =
+    pageThenEnrich(deepMatches(query, bodies, filter), MsgEngine.NewestFirst,
+      limit, offset = 0, defaultLimit = 100,
+      dropBeforeEnrich = Seq("__b_mid", "tokens"), cursor = cursor)
 
   /** Shared match stage of the deep-search paths: metadata filters +
     * subject: terms compile FIRST (semi-joining the body table down), then
@@ -1155,7 +1143,7 @@ final class MsgEngine(val vault: MsgVault) {
     before.foreach(t =>
       msg = msg.filter(col("sent_at") < date_trunc("DAY", lit(t))))
     val matched = msg.join(ids, msg("id") === ids("message_id"), "left_semi")
-    pageThenEnrich(matched, Seq(col("sent_at").desc, col("id").desc),
+    pageThenEnrich(matched, MsgEngine.NewestFirst,
       MsgEngine.domainSearchLimit(limit), offset, defaultLimit = 100)
   }
 
@@ -1514,7 +1502,7 @@ final class MsgEngine(val vault: MsgVault) {
     // the newest 50 chats via the vacuous-true term reduce
     val matched = if (q.textTerms.nonEmpty) matched0
       else matched0.filter(lit(false))
-    pageThenEnrich(matched, Seq(col("sent_at").desc, col("id").desc),
+    pageThenEnrich(matched, MsgEngine.NewestFirst,
       limit, offset, defaultLimit = 50,
       dropBeforeEnrich = Seq("__b_mid", "tokens"))
   }
@@ -1545,6 +1533,13 @@ final class MsgEngine(val vault: MsgVault) {
 }
 
 object MsgEngine {
+  /** The timeline order every search/keyset page uses: sent_at DESC
+    * (Spark's desc is NULLS LAST), id DESC as the unique tie-break —
+    * the order the keyset cursor predicate assumes.
+    */
+  private[engine] val NewestFirst: Seq[Column] =
+    Seq(col("sent_at").desc, col("id").desc)
+
   /** SearchByDomains paging contract (sqlite.go:1184-1189): anything
     * above 1000 clamps to 1000; limit <= 0 passes through UNCHANGED so
     * pageThenEnrich's defaultLimit = 100 remains the single owner of the
@@ -1576,20 +1571,16 @@ final case class SearchWithStats(matches: DataFrame, engine: MsgEngine) {
   def totalCount: Long = matches.count()
 
   def page(limit: Int, offset: Int): DataFrame =
-    engine.pageThenEnrich(matches, Seq(col("sent_at").desc, col("id").desc),
+    engine.pageThenEnrich(matches, MsgEngine.NewestFirst,
       limit, offset, defaultLimit = 100)
 
   /** Keyset page over the SAME persisted match set — deep paging through
     * a large result without re-sorting every match per page.
     */
   def pageAfter(cursor: Option[(java.sql.Timestamp, Long)],
-      limit: Int = 100): DataFrame = {
-    val after = engine.cursorFiltered(matches, cursor)
-      .orderBy(col("sent_at").desc_nulls_last, col("id").desc)
-      .limit(if (limit > 0) limit else 100)
-    engine.enrich(after)
-      .orderBy(col("sent_at").desc_nulls_last, col("id").desc)
-  }
+      limit: Int = 100): DataFrame =
+    engine.pageThenEnrich(matches, MsgEngine.NewestFirst, limit, offset = 0,
+      defaultLimit = 100, cursor = cursor)
 
   /** Search-scoped totals (reference computeSearchStats
     * duckdb.go:2144-2190): the same rollup + distinct-label-name shape as

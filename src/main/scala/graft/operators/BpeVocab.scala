@@ -66,7 +66,7 @@ import org.apache.spark.sql.functions._
   *   - '''bounded plan depth''': each accepted merge appends one literal
   *     `replace` projection to the dictionary plan; after
   *     [[SnapshotEvery]] accumulated replaces the dictionary is
-  *     re-materialized ([[graft.engine.Materialize.snapshot]]) and the
+  *     re-materialized (`localCheckpoint(true)`) and the
   *     chain resets. Plan depth and per-round recompute are both bounded
   *     by [[SnapshotEvery]] narrow projections over the vocab-bounded
   *     dictionary — without this, iteration k replays all k-1 prior
@@ -167,7 +167,7 @@ object BpeVocab {
             // bound exists to prevent
             chainLen += 1
             if (chainLen >= SnapshotEvery && done < iterations) {
-              d = graft.engine.Materialize.snapshot(d)
+              d = d.localCheckpoint(true)
               chainLen = 0
             }
           }

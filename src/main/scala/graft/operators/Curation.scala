@@ -61,14 +61,11 @@ object Curation {
     // langId + quality + fingerprint-window subtree, multiplying the
     // dominant full-text scan ~4×. Blocks are reclaimed by the
     // ContextCleaner once the returned frame's lineage is unreachable.
-    // Conf-selected strategy (Materialize.bounded): the survivor set is
-    // deterministically re-derivable from the input corpus, so the
-    // fault-tolerant persist mode is sound on clusters over frozen
-    // corpora; the default localCheckpoint fails the job on executor
-    // loss (re-run the curation) instead of recomputing.
-    val kept = graft.engine.Materialize.bounded(
-      curate(base, col("doc_id"), col("__text"), minQuality)
-        .join(base, "doc_id"))
+    // Executor loss fails the job (re-run the curation) instead of
+    // recomputing.
+    val kept = curate(base, col("doc_id"), col("__text"), minQuality)
+      .join(base, "doc_id")
+      .localCheckpoint(true)
     val nearDupLosers = Dedup.nearDuplicates(kept, col("doc_id"),
       col("__text"), nearDupThreshold)
       .select(col("id_b").as("doc_id")) // keep the lower id of each pair

@@ -349,12 +349,16 @@ object Dedup {
   def simhashSignatures(df: DataFrame, id: Column, toks: Column): DataFrame =
     // per-row scalar, same reasoning as [[minhashSignatures]] — the
     // explode → 64-aggregate encoding existed only to dodge interpreted
-    // HOFs and cost a full shuffle of the exploded tokens
+    // HOFs and cost a full shuffle of the exploded tokens.
+    // The zero-token filter tests the tokens (exactly the expression's
+    // NULL condition) rather than `simhash IS NOT NULL`, which the
+    // optimizer would push below the spread as a second signature
+    // evaluation (same trap as [[minhashSignatures]]).
     graft.sources.Tables.spread(df.select(id.as("doc_id"), toks.as("__toks")))
+      .filter(exists(col("__toks"), t => length(t) > 0))
       .select(col("doc_id"),
         org.apache.spark.sql.graft.HashingExpressions
           .simhash64(col("__toks")).as("simhash"))
-      .filter(col("simhash").isNotNull)
 
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -432,13 +436,16 @@ object Dedup {
   def winnowPairs(df: DataFrame, id: Column, text: Column,
       k: Int = 4, w: Int = 5, minShared: Int = 2,
       maxBucket: Int = 1000): DataFrame = {
-    val fps = graft.sources.Tables.spread(
+    // explode the expression itself, with no `fps IS NOT NULL` filter:
+    // explode of a NULL array emits no rows already, and a filter on (or
+    // an explode of) an aliased fps column is pushed below the spread as
+    // a second fingerprint evaluation (the optimizer infers
+    // `size(fps) > 0 AND fps IS NOT NULL` for an explode of an attribute)
+    graft.sources.Tables.spread(
       df.select(id.as("doc_id"), text.as("__text")))
-      .select(col("doc_id"),
+      .select(col("doc_id"), explode(
         org.apache.spark.sql.graft.TextExpressions.winnowFingerprints(
-          rawTokens(col("__text")), k, w).as("fps"))
-      .filter(col("fps").isNotNull)
-    fps.select(col("doc_id"), explode(col("fps")).as("fp"))
+          rawTokens(col("__text")), k, w)).as("fp"))
       .groupBy(col("fp"))
       .agg(collect_list(col("doc_id")).as("members"))
       .filter(size(col("members")) > 1 && size(col("members")) <= maxBucket)

@@ -69,20 +69,19 @@ object Packing {
     // stage 2: local prefix within each partition id (parallel window)
     val w = Window.partitionBy(col("__pid")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    // SNAPSHOTTED ([[graft.engine.Materialize.snapshot]] — the
-    // codebase's helper for exactly this hazard): the partial totals
-    // and the placement join both consume this frame, and an unpinned
+    // SNAPSHOTTED (eager localCheckpoint): the partial totals and the
+    // placement join both consume this frame, and an unpinned
     // re-derivation could re-sample the range boundaries and assign
     // rows DIFFERENT partition ids than the ones the driver computed
-    // base offsets for — silently wrong offsets. snapshot truncates
-    // lineage eagerly and self-cleans via the ContextCleaner (a bare
-    // persist would pin one cache entry per call for the session's
-    // lifetime — r14 review find). Narrow projection (4 columns).
-    val local = graft.engine.Materialize.snapshot(
-      parted.withColumn("__before",
+    // base offsets for — silently wrong offsets. localCheckpoint
+    // truncates lineage eagerly and self-cleans via the ContextCleaner
+    // (a bare persist would pin one cache entry per call for the
+    // session's lifetime — r14 review find). Narrow projection (4
+    // columns).
+    val local = parted.withColumn("__before",
         coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .select(col("doc_id"), col("n_tokens"), col("__pid"),
-          col("__before")))
+      .select(col("doc_id"), col("n_tokens"), col("__pid"), col("__before"))
+      .localCheckpoint(true)
     // stage 3: P partial totals -> driver -> cumulative base offsets
     val partials = local.groupBy(col("__pid"))
       .agg(sum(col("n_tokens")).as("__psum"))
@@ -184,8 +183,8 @@ object Packing {
       seqLen: Int): (DataFrame, DataFrame) = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
     val sl = seqLen.toLong
-    val base = graft.engine.Materialize.snapshot(
-      docs.select(id.as("doc_id"), tokens.as("__toks")))
+    val base = docs.select(id.as("doc_id"), tokens.as("__toks"))
+      .localCheckpoint(true)
     val placement = packPlacement(base, col("doc_id"), size(col("__toks")),
       seqLen)
     // span row = (doc, one pack it touches); empty docs occupy no slots

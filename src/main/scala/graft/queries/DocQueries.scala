@@ -325,13 +325,21 @@ object DocQueries {
     * is the throughput path.
     */
   def dedupSimhashMd5(s: SparkSession, dir: String): DataFrame =
-    bucketOrdered(
-      Tables.spread(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          org.apache.spark.sql.graft.TextExpressions.simhash60Md5(
-            TextFunctions.rawTokens(col("text"))).as("simhash"))
-        .filter(col("simhash").isNotNull),
-      col("doc_id"))
+    bucketOrdered(simhashMd5Signatures(s, dir), col("doc_id"))
+
+  /** (doc_id, simhash) over the md5 twin; docs with zero real tokens are
+    * absent. The filter tests the text for a letter or digit (exactly
+    * when rawTokens yields a non-empty token, i.e. when the expression
+    * is non-NULL) rather than `simhash IS NOT NULL`: the optimizer
+    * pushes a filter on the alias below the spread as a second signature
+    * evaluation.
+    */
+  private def simhashMd5Signatures(s: SparkSession, dir: String): DataFrame =
+    Tables.spread(t(s, dir, "documents"))
+      .filter(lower(col("text")).rlike("[\\p{L}\\p{N}]"))
+      .select(col("doc_id"),
+        org.apache.spark.sql.graft.TextExpressions.simhash60Md5(
+          TextFunctions.rawTokens(col("text"))).as("simhash"))
 
   /** The md5-simhash construction as a DuckDB CTE chain ending in
     * `s(doc_id, simhash)` — shared by the signature query and the
@@ -373,15 +381,9 @@ object DocQueries {
     * and unlike the minhash gate this equivalence is a THEOREM, not a
     * per-dataset observation.
     */
-  def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val sigs = Tables.spread(t(s, dir, "documents"))
-      .select(col("doc_id"),
-        org.apache.spark.sql.graft.TextExpressions.simhash60Md5(
-          TextFunctions.rawTokens(col("text"))).as("simhash"))
-      .filter(col("simhash").isNotNull)
-    orderedAtTail(Dedup.simhashPairs(sigs, maxHamming = 3, sigBits = 60),
-      col("id_a").asc, col("id_b").asc)
-  }
+  def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
+    orderedAtTail(Dedup.simhashPairs(simhashMd5Signatures(s, dir),
+      maxHamming = 3, sigBits = 60), col("id_a").asc, col("id_b").asc)
 
   val dedupSimhashPairsSql: String =
     s"""$simhashMd5Cte
@@ -1252,9 +1254,9 @@ object DocQueries {
     // range bounds. The frame is two narrow columns (~16 B/doc — tens
     // of GB at a 10^9-doc corpus, executor-storage scale), so
     // materializing once is far cheaper than the double execution.
-    val counts = graft.engine.Materialize.snapshot(
-      BpeVocab.applyMerges(kept, col("doc_id"), col("text"), merges)
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sub")))
+    val counts = BpeVocab.applyMerges(kept, col("doc_id"), col("text"), merges)
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sub"))
+      .localCheckpoint(true)
     bucketOrdered(
       graft.operators.Packing.packSummary(
         graft.operators.Packing.packPlacement(

@@ -304,22 +304,7 @@ package object queries {
     * pays, and it is what makes a long-lived session safe over a corpus
     * that gets rewritten in place.
     */
-  // Optional fingerprint TTL (ms): 0 (default) = re-list on every memo
-  // lookup, the strict freshness the invalidation spec guarantees. On a
-  // remote store where the recursive listing is a real metadata
-  // round-trip per query, set spark.graft.memo.fingerprintTtlMs to trade
-  // bounded staleness (a rewrite noticed within the TTL) for hot-path
-  // latency.
-  private val fpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-
   private[graft] def corpusFingerprint(s: SparkSession, dir: String): String = {
-    val ttl = s.conf.get("spark.graft.memo.fingerprintTtlMs", "0").toLong
-    val now = System.currentTimeMillis()
-    if (ttl > 0) {
-      val hit = fpCache.get(dir)
-      if (hit != null && now - hit._1 < ttl) return hit._2
-    }
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(s.sessionState.newHadoopConf())
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -332,9 +317,7 @@ package object queries {
     }
     val md = java.security.MessageDigest.getInstance("MD5")
     entries.sorted.foreach(e => md.update(e.getBytes("UTF-8")))
-    val fp = md.digest().map("%02x".format(_)).mkString
-    if (ttl > 0) fpCache.put(dir, (now, fp))
-    fp
+    md.digest().map("%02x".format(_)).mkString
   }
 
   // Eviction vs in-flight queries: releasing a superseded artifact frees
@@ -349,9 +332,9 @@ package object queries {
   // `grace` ms later (drained on subsequent memo activity), letting
   // in-flight queries on the old artifact finish. Queries longer than
   // the grace remain exposed by design — documented, bounded staleness.
-  // grace/deadline semantics live in the shared graft.RetireQueue (the
-  // Materialize ring uses the same one); the release thunk re-checks the
-  // owner session at drain time — blocks of a stopped session are gone
+  // grace/deadline semantics live in graft.RetireQueue; the release
+  // thunk re-checks the owner session at drain time — blocks of a
+  // stopped session are gone
   private val retired = new graft.RetireQueue[(SparkSession, AnyRef)]({
     case (owner, v) => if (!owner.sparkContext.isStopped) release(v)
   })
@@ -361,7 +344,7 @@ package object queries {
     if (owner.sparkContext.isStopped) return // blocks already gone
     // the OWNER's grace, not the evicting caller's: a collision-eviction
     // can come from a different session whose grace=0 default must not
-    // override the owner's opt-in (same rule as Materialize.retain)
+    // override the owner's opt-in
     val grace =
       try owner.conf.get("spark.graft.memo.releaseGraceMs", "0").toLong
       catch { case _: NumberFormatException => 0L }
@@ -461,12 +444,12 @@ package object queries {
     * MsgEngine.releaseCaches both call it — an inline second copy is a
     * drift hazard for a recipe this non-obvious).
     */
-  /** ROOT-only, matching Materialize.release: a checkpointed frame's
-    * analyzed plan IS a bare LogicalRDD, so the root match frees exactly
-    * the artifact this release owns. Walking the whole tree would also
-    * unpersist any localCheckpointed frame the artifact was DERIVED
-    * from (an engine's star tables — no lineage, irrecoverable), the
-    * collateral-damage bug the r11 soak caught in the ring's twin.
+  /** ROOT-only: a checkpointed frame's analyzed plan IS a bare
+    * LogicalRDD, so the root match frees exactly the artifact this
+    * release owns. Walking the whole tree would also unpersist any
+    * localCheckpointed frame the artifact was DERIVED from (an engine's
+    * star tables — no lineage, irrecoverable), the collateral-damage
+    * bug the r11 concurrent-engines soak caught.
     */
   private[graft] def unpersistWithCheckpointLeaves(df: DataFrame): Unit = {
     df.unpersist(false)

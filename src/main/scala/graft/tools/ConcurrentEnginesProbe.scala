@@ -2,31 +2,29 @@ package graft.tools
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.SparkSession
-import graft.engine.{Materialize, MsgEngine}
+import graft.engine.MsgEngine
 import graft.model._
 import graft.queries.FacadeQueries
 import graft.sources.Tables
 
-/** Dev tool: concurrent-engines soak for the shared mutable state the
-  * r10 round introduced — the [[Materialize]] retention ring (a global
-  * queue shared by every engine), the memoized-index grace queue, and
-  * the per-engine volatile relative-date search slot. Each is spec'd in
-  * isolation; this probe runs them together under real contention:
+/** Dev tool: concurrent-engines soak for shared mutable state — the
+  * memoized-index grace queue and the per-engine volatile relative-date
+  * search slot. Each is spec'd in isolation; this probe runs them
+  * together under real contention:
   *
   *   - TWO MsgEngine instances on the base session + ONE on a second
   *     `spark.newSession()` (separate SQL conf, SHARED CacheManager —
   *     the sharing that makes cross-session eviction casualties possible)
   *   - 6 worker threads hammering paged search / aggregate / list /
   *     stats surfaces round-robin across the three engines, with
-  *     page.materialize=persist, a deliberately small retention ring
-  *     (retain=4) and releaseGraceMs=1500 so evictions DO happen while
-  *     queries are in flight — the exact failure mode ADVICE r10 flagged
+  *     releaseGraceMs=1500 so memo evictions defer behind in-flight
+  *     queries — the exact failure mode ADVICE r10 flagged
   *   - every op's row-/value-shape is precomputed single-threaded first;
   *     any deviation (or exception) under contention is a failure
   *
   * Pass = N queries, 0 failures, 0 wrong answers, and persisted-RDD
-  * count back to a bounded level after the soak (ring + grace queue
-  * drain; the search-stats LRU keeps its ≤32 by design).
+  * count back to a bounded level after the soak (grace queue drain;
+  * the search-stats LRU keeps its ≤32 by design).
   *
   * Usage: runMain graft.tools.ConcurrentEnginesProbe [sfDir] [itersPerThread]
   */
@@ -35,13 +33,9 @@ object ConcurrentEnginesProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val iters = args.lift(1).map(_.toInt).getOrElse(40)
     val spark = graft.Session.oracle(
-      "spark.graft.page.materialize" -> "persist",
-      "spark.graft.page.materialize.retain" -> "4",
       "spark.graft.memo.releaseGraceMs" -> "1500")
     spark.sparkContext.setLogLevel("ERROR")
     val sparkB = spark.newSession()
-    sparkB.conf.set("spark.graft.page.materialize", "persist")
-    sparkB.conf.set("spark.graft.page.materialize.retain", "4")
     sparkB.conf.set("spark.graft.memo.releaseGraceMs", "1500")
 
     def mkEngine(s: SparkSession): MsgEngine =
@@ -49,7 +43,7 @@ object ConcurrentEnginesProbe {
         FacadeQueries.starFromDocs(s, Tables.load(s, sfDir, "documents")))
     val engines = Seq(mkEngine(spark), mkEngine(spark), mkEngine(sparkB))
 
-    // the op mix: page materialization (ring pressure), aggregate
+    // the op mix: page materialization, aggregate
     // (broadcast dims), LRU'd stats search, volatile relative-date slot
     val ops: Seq[(String, MsgEngine => Long)] = Seq(
       ("search_page", e => e.searchFast("invoice",
@@ -104,7 +98,8 @@ object ConcurrentEnginesProbe {
     val wall = (System.nanoTime() - t0) / 1e9
     val rdds1 = spark.sparkContext.getPersistentRDDs.size
 
-    // drain the grace queue: one more materialization after the grace
+    // let the grace window pass and run one more query, then flush the
+    // search caches
     Thread.sleep(1600)
     engines.head.searchFast("invoice",
       MessageFilter(pagination = Pagination(limit = 5))).count()
@@ -114,13 +109,13 @@ object ConcurrentEnginesProbe {
     println(f"[soak] ${done.get()} queries over 6 threads × 3 engines " +
       f"(2 sessions) in ${wall}%.1f s; failures=${failures.size}")
     println(s"[soak] persistentRDDs: before=$rdds0 after-soak=$rdds1 " +
-      s"after-drain=$rdds2 (ring cap 4 + grace window; LRU flushed)")
+      s"after-drain=$rdds2 (grace window; LRU flushed)")
     failures.forEach(f => println(s"[soak] FAIL $f"))
     val totalQ = 6L * iters
     require(failures.isEmpty, s"${failures.size} failures")
     require(done.get() == totalQ, s"${done.get()} != $totalQ")
-    // bound, not exact: the ring holds ≤4, the two star engines pin their
-    // localCheckpoints (4 frames × 3 engines), volatile slots ≤3
+    // bound, not exact: the star engines pin their localCheckpoints
+    // (4 frames × 3 engines), volatile slots ≤3
     require(rdds2 <= rdds0 + 24,
       s"persisted RDDs grew unboundedly: $rdds0 -> $rdds2")
     println("[soak] PASS")

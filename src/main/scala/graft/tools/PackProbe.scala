@@ -43,8 +43,8 @@ object PackProbe {
     }
     time("assembly via slices (noop)") {
       import org.apache.spark.sql.DataFrame
-      val base = graft.engine.Materialize.snapshot(
-        docs.select(col("doc_id"), split(col("text"), " ").as("__toks")))
+      val base = docs.select(col("doc_id"), split(col("text"), " ").as("__toks"))
+        .localCheckpoint(true)
       val placement = graft.operators.Packing.packPlacement(
         base, col("doc_id"), size(col("__toks")), 512)
       val seqLen = 512L

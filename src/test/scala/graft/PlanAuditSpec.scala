@@ -343,6 +343,23 @@ class PlanAuditSpec extends SparkTestBase {
     assert(nScans == 1, s"winnow should be one corpus scan, got $nScans:\n$plan")
   }
 
+  test("simhash and winnow signatures are evaluated once per executed plan") {
+    // a filter on the signature's alias (`simhash IS NOT NULL`) is
+    // pushed below the spread as a SECOND evaluation of the expression
+    val docs = Tables.load(spark, sf, "documents")
+    Seq(
+      "simhash64(" -> queries.DocQueries.dedupSimhash(spark, sf),
+      "simhash60_md5(" -> queries.DocQueries.dedupSimhashMd5(spark, sf),
+      "simhash60_md5(" -> queries.DocQueries.dedupSimhashPairs(spark, sf),
+      "winnow_fingerprints(" -> graft.operators.Dedup.winnowPairs(docs,
+        col("doc_id"), col("text")))
+      .foreach { case (fn, df) =>
+        val plan = executed(df).toString
+        val n = java.util.regex.Pattern.quote(fn).r.findAllIn(plan).size
+        assert(n == 1, s"$fn evaluated $n times:\n$plan")
+      }
+  }
+
   test("simhashPairs: one corpus scan, no join — sigs ride the band shuffle") {
     val docs = Tables.load(spark, sf, "documents")
     val sigs = docs.select(col("doc_id"),

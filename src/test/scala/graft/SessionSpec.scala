@@ -38,14 +38,27 @@ class SessionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("spark.sql.shuffle.partitions"))
   }
 
-  test("graft/Session.scala is the only SparkSession.builder in src/main") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala
+  private val mainRoot = Paths.get("src/main/scala")
+  private lazy val mainSources: Seq[Path] = {
+    val files = Files.walk(mainRoot).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 50, s"scan found too few sources under $root")
-    val builders = files.filter(p =>
+    assert(files.size > 50, s"scan found too few sources under $mainRoot")
+    files
+  }
+
+  test("graft/Session.scala is the only SparkSession.builder in src/main") {
+    val builders = mainSources.filter(p =>
       Files.readString(p).contains("SparkSession.builder"))
-      .map(p => root.relativize(p).toString)
+      .map(p => mainRoot.relativize(p).toString)
     assert(builders == Seq("graft/Session.scala"))
+  }
+
+  test("spark.graft.memo.releaseGraceMs is the only spark.graft.* key in src/main") {
+    // a new key must update this set AND the README's runtime
+    // configuration table
+    val literal = "\"(spark\\.graft\\.[^\"]*)\"".r
+    val keys = mainSources.flatMap(p =>
+      literal.findAllMatchIn(Files.readString(p)).map(_.group(1))).toSet
+    assert(keys == Set("spark.graft.memo.releaseGraceMs"))
   }
 }

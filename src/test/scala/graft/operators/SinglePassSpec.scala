@@ -10,8 +10,9 @@ import org.apache.spark.sql.graft.TextExpressions.bpeSubwords
 /** The single-pass curation operators against the formulations they
   * replaced: `distinct_jaccard` vs `size(array_intersect)/size(array_union)`,
   * `bpe_subwords` vs [[BpeVocab.tokenizeWord]], `band_hashes` vs the
-  * `transform` lambda, the letter-or-digit prefilter vs the signature's
-  * NULL, and [[Dedup.nearDuplicates]]
+  * `transform` lambda, the letter-or-digit / token prefilters vs the
+  * signature's NULL (minhash, simhash, md5 simhash; winnow's explode of
+  * NULL), and [[Dedup.nearDuplicates]]
   * / [[BpeVocab.applyMerges]] vs the multi-pass plans (semi-joined
   * shingle sides; snapshot + distinct vocab map + join-back), inlined
   * here as they were. Doubles are compared bit for bit.
@@ -122,6 +123,53 @@ class SinglePassSpec extends SparkTestBase {
     assert(want.size == 10 && !want.contains(0L) && !want.contains(5L))
   }
 
+  // empty, whitespace-only, punctuation-only and null texts, plus a few
+  // of the script / case-mapping edge cases above
+  private lazy val tokenless = Seq("real tokens here", "", "   ", "\t\n",
+    "!!! ... ---", null, "_", "— … ·", "😀", "x😀", "İ", "ǅ", "١٢٣", "́",
+    "a", "2024")
+    .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+
+  private def sigSet(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("simhashSignatures ≡ evaluate-then-drop-NULL on token-less texts") {
+    import org.apache.spark.sql.graft.HashingExpressions.simhash64
+    val toks = Seq(rawTokens(col("text")),
+      graft.functions.TextFunctions.tokens(col("text")), split(col("text"), " "))
+    for (t <- toks) {
+      val want = sigSet(tokenless.select(col("doc_id"), simhash64(t).as("s"))
+        .filter(col("s").isNotNull))
+      // a raw space split keeps "\t\n" and punctuation as real tokens
+      assert(want.map(_._1).contains(0L) &&
+        !want.map(_._1).exists(Set(1L, 2L, 5L)))
+      assert(sigSet(Dedup.simhashSignatures(tokenless, col("doc_id"), t)) == want,
+        s"tokens: $t")
+    }
+  }
+
+  test("md5 simhash signatures ≡ evaluate-then-drop-NULL on token-less texts") {
+    import org.apache.spark.sql.graft.TextExpressions.simhash60Md5
+    val dir = java.nio.file.Files.createTempDirectory("graft_simhash_md5").toString
+    tokenless.withColumn("lang", lit("en"))
+      .write.parquet(s"$dir/documents.parquet")
+    val want = sigSet(tokenless
+      .select(col("doc_id"), simhash60Md5(rawTokens(col("text"))).as("s"))
+      .filter(col("s").isNotNull))
+    assert(want.map(_._1).contains(0L) &&
+      !want.map(_._1).exists(Set(1L, 2L, 3L, 4L, 5L)))
+    assert(sigSet(graft.queries.DocQueries.dedupSimhashMd5(spark, dir)) == want)
+  }
+
+  test("winnow fingerprints: explode without the NULL filter emits the same rows") {
+    import org.apache.spark.sql.graft.TextExpressions.winnowFingerprints
+    val fps = tokenless.select(col("doc_id"),
+      winnowFingerprints(rawTokens(col("text")), 4, 5).as("fps"))
+    def rows(df: DataFrame) = sigSet(df.select(col("doc_id"), explode(col("fps"))))
+    assert(rows(fps).nonEmpty)
+    assert(rows(fps) == rows(fps.filter(col("fps").isNotNull)))
+  }
+
   test("band_hashes ≡ transform(sequence, xxhash64(b, slice(sig)))") {
     val sigs = Dedup.minhashSignatures(corpus, col("doc_id"), col("text"))
     for ((bands, rows) <- Seq((16, 4), (32, 2), (1, 64))) {
@@ -176,10 +224,10 @@ class SinglePassSpec extends SparkTestBase {
   test("applyMerges ≡ the snapshot + distinct vocab map + join-back plan") {
     val table = merges.toSeq.map { case (a, b) => s"$a $b" }
     def parent(docs: DataFrame, ms: Seq[String]): DataFrame = {
-      val words = graft.engine.Materialize.snapshot(
-        docs.select(col("doc_id"),
+      val words = docs.select(col("doc_id"),
           explode(split(lower(col("text")), "[^a-z]+")).as("word"))
-          .filter(col("word") =!= ""))
+        .filter(col("word") =!= "")
+        .localCheckpoint(true)
       val pairs = ms.map { p => val Array(a, b) = p.split(" ", 2); (a, b) }.toArray
       val bc = spark.sparkContext.broadcast(pairs)
       val vocabMap = words.select(col("word")).distinct().as[String]

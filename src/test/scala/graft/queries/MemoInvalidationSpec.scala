@@ -52,29 +52,40 @@ class MemoInvalidationSpec extends SparkTestBase {
     assert(builds == 3)
   }
 
-  test("fingerprint TTL trades bounded staleness for listing-free lookups") {
-    // spark.graft.memo.fingerprintTtlMs > 0: a rewrite inside the TTL
-    // window is deliberately NOT noticed (the remote-store trade the knob
-    // documents); setting it back to 0 restores strict freshness
-    // immediately — the cached fingerprint is ignored, not just expired.
+  test("memo eviction releases ONLY the artifact, never nested localCheckpoint bases") {
+    // the r11 concurrent-engines soak bug: a release that walked the
+    // evicted artifact's whole analyzed plan unpersisted every
+    // LogicalRDD in it — including localCheckpointed frames the artifact
+    // was BUILT ON, which have no lineage to recompute from. One eviction
+    // then killed every later query over the base
+    // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_memo_ttl").toString
+    val dir = Files.createTempDirectory("graft_memo_root").toString
     Files.write(Paths.get(dir, "t.parquet"), "v1".getBytes("UTF-8"))
+    val base = spark.range(20).toDF("n").localCheckpoint(true)
 
     var builds = 0
-    def lookup(): String =
-      memoizedIndex[String](spark, dir, "spec_ttl") { builds += 1; s"b$builds" }
+    def lookup(): DataFrame =
+      memoizedIndex[DataFrame](spark, dir, "spec_root_only") {
+        builds += 1
+        // distinct plan per build (see the grace test): no CacheManager
+        // key collision between the evicted and the fresh artifact
+        val df = base.filter(lit(builds) === lit(builds)).limit(2 + builds)
+          .persist(StorageLevel.MEMORY_ONLY)
+        df.count()
+        df
+      }
 
-    try {
-      spark.conf.set("spark.graft.memo.fingerprintTtlMs", "600000")
-      assert(lookup() == "b1")
-      Files.write(Paths.get(dir, "t.parquet"), "v2-longer".getBytes("UTF-8"))
-      assert(lookup() == "b1",
-        "inside the TTL the rewrite must be invisible (bounded staleness)")
-      spark.conf.set("spark.graft.memo.fingerprintTtlMs", "0")
-      assert(lookup() == "b2",
-        "TTL off must re-list immediately and mint a fresh artifact")
-    } finally spark.conf.unset("spark.graft.memo.fingerprintTtlMs")
+    val first = lookup()
+    Files.write(Paths.get(dir, "t.parquet"), "v2-longer".getBytes("UTF-8"))
+    val second = lookup()
+    assert(second ne first)
+    assert(first.storageLevel == StorageLevel.NONE,
+      "the evicted artifact itself must be released")
+    assert(base.count() === 20,
+      "nested localCheckpoint base must survive a memo eviction")
+    second.unpersist()
+    base.unpersist()
   }
 
   test("evicting a memoized engine releases its checkpoint blocks and search cache") {
