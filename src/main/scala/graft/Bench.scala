@@ -15,9 +15,8 @@ import org.apache.spark.sql.SparkSession
   * carries the COMPLETE per-query map (VERDICT r15 #1: the old 1800-char
   * budget rolled 125/153 queries into "other", which manufactured 29
   * false "dropped_from_bench" rows and a phantom "other" regression in
-  * PERF_r15) — 153 entries at 2-3 decimals is ~4-5 kB, within the
-  * consumer's tail capture; the adaptive rounding + slowest-N fallback
-  * stays as a guard for a far larger future suite; (b) nothing may print
+  * PERF_r15) at 3 decimals, held to [[LineBudget]] by `BenchLineSpec`
+  * (see [[line]]); (b) nothing may print
   * after it — logs run at ERROR and the line is emitted after
   * spark.stop().
   */
@@ -272,13 +271,12 @@ object Bench {
     // window itself was disturbed. Failure count rides the min pass.
     val tpPasses: Seq[(Double, Int)] =
       if (tpClients <= 0) Nil else Seq(tpPass(), tpPass(), tpPass())
-    val (tpWall, tpFailedN): (Double, Int) =
-      if (tpPasses.isEmpty) (-1.0, 0) else tpPasses.minBy(_._1)
     // the burst window gets its OWN load observation (r14 second
     // review pass: moving the serial noise sample before the burst
-    // left tpWall unobserved — a co-tenant arriving during the burst
-    // would contaminate the headline throughput number with no flag)
-    val tpLoadAfter = if (tpWall < 0) -1.0 else loadAvg()
+    // left the burst wall unobserved — a co-tenant arriving during the
+    // burst would contaminate the headline throughput number with no
+    // flag)
+    val tpLoadAfter = if (tpPasses.isEmpty) -1.0 else loadAvg()
     val ownCores = if (pcSec >= 0 && wallSec > 0) pcSec / wallSec else -1.0
     // ext_load needs BOTH readings: without ownCores the bench's own
     // multi-core load would count as "external" and flag every quiet
@@ -309,118 +307,117 @@ object Bench {
         case (name, first) => (name, first, timedRun(bench(name)))
       }
 
-    // Emit under the consumer's tail budget: try 3-decimal values, then
-    // 2-decimal, then keep only the slowest entries + an "other" sum.
-    // Locale.ROOT: String.format honors the default locale, and a JVM on
-    // a comma-decimal locale would emit "0,123" — invalid JSON.
-    def fmt(v: Double, dec: Int): String = {
-      val s = ("%." + dec + "f").formatLocal(java.util.Locale.ROOT, v)
-      if (s == "-1." + "0" * dec) "-1" else s
-    }
-    val noiseStr = {
-      val rr =
-        if (rerun.isEmpty) ""
-        else rerun.map { case (k, first, second) =>
-          val best = if (second >= 0) math.min(first, second) else first
-          "\"" + k + "\":{\"first\":" + fmt(first, 2) +
-            ",\"rerun\":" + fmt(second, 2) + ",\"min\":" + fmt(best, 2) + "}"
-        }.mkString(",\"rerun\":{", ",", "}")
-      val fr =
-        if (flagReasons.isEmpty) ""
-        else flagReasons.mkString(",\"flag_reason\":\"", "+", "\"")
-      // band summary: how many queries had a band, how many tripped it
-      // and were re-timed, and the worst ≤5 still-out-of-band readings
-      // (value vs quiet) for the adjudicating reader
-      val bd =
-        if (band.isEmpty) ",\"band\":\"absent\""
-        else {
-          val viol = bandViolations
-            .sortBy { case (n, v) => -(v / band(n)) }.take(5)
-            .map { case (n, v) =>
-              // both adjudication readings ride along: sec is the kept
-              // min, first/rerun show whether the re-time confirmed the
-              // elevation (both high) or the min itself is the burst
-              val fr = bandRerun.get(n).fold("") { case (first, second) =>
-                ",\"first\":" + fmt(first, 2) + ",\"rerun\":" + fmt(second, 2)
-              }
-              "\"" + n + "\":{\"sec\":" + fmt(v, 2) + fr +
-                ",\"quiet\":" + fmt(band(n), 2) + "}"
-            }.mkString("{", ",", "}")
-          s""","band":{"n":${band.size},"retimed":${bandRerun.size},""" +
-            s""""viol":${bandViolations.size},"violations":$viol}"""
-        }
-      s""","noise":{"load_at_launch":${fmt(loadAtLaunch, 2)},""" +
-        s""""cooldown_sec":${fmt(cooldownSec, 0)},""" +
-        s""""load_before":${fmt(load0, 2)},"load_after":${fmt(load1, 2)},""" +
-        s""""own_cores":${fmt(ownCores, 2)},"cgroup_cpu_sec":${fmt(cgSec, 1)},""" +
-        s""""wall_sec":${fmt(wallSec, 1)},"ext_load":${fmt(extLoad, 2)},""" +
-        s""""flagged":$flagged$fr$bd$rr}"""
-    }
-    // aggregate wall under concurrent submission — the floor-amortized
-    // serving number (BASELINE "throughput mode")
-    val tpStr =
-      if (tpWall < 0) ""
-      else {
-        val served = bench.size - tpFailedN
-        // tp_load_after minus this JVM's own burst cores is not
-        // separable post-hoc; readers compare it against the client
-        // count — a value well above `clients` means co-tenant load
-        // rode the burst window
-        val walls = tpPasses.map(p => fmt(p._1, 2)).mkString("[", ",", "]")
-        val spreadPct =
-          (tpPasses.map(_._1).max - tpWall) / math.max(tpWall, 1e-9) * 100
-        s""","throughput":{"clients":$tpClients,""" +
-          s""""wall_sec":${fmt(tpWall, 2)},"walls":$walls,""" +
-          s""""spread_pct":${fmt(spreadPct, 1)},"n":${bench.size},""" +
-          s""""failed":$tpFailedN,""" +
-          s""""load_after":${fmt(tpLoadAfter, 2)},""" +
-          s""""qps":${fmt(served / math.max(tpWall, 1e-9), 1)}}"""
-      }
-    // companion sidecar carries the FULL 3-decimal per-query map — the
-    // stdout line's adaptive truncation rolls sub-floor entries into
-    // "other", which loses round-over-round per-query comparison
+    val noise = Noise(loadAtLaunch, cooldownSec, load0, load1, ownCores,
+      cgSec, wallSec, extLoad, flagReasons, band, bandViolations,
+      bandRerun.toMap, rerun)
+    val tp = throughputBlock(tpClients, tpPasses, bench.size, tpLoadAfter)
+    // the companion sidecar carries the same line, for round-over-round
+    // per-query comparison without the surrounding log
     val sidecarPath = sys.env.getOrElse("SPARK_GRAFT_SIDECAR", "bench_full.json")
-    def line(qs: Seq[(String, Double)], dec: Int, other: Double): String = {
-      val entries = qs.map { case (k, v) => "\"" + k + "\":" + fmt(v, dec) } ++
-        (if (other > 0) Seq("\"other\":" + fmt(other, dec)) else Nil)
-      val m = entries.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$m$tpStr$noiseStr,"sidecar":"$sidecarPath","cpus":$cpus,"sf":"$sfDir"}"""
-    }
-    // 8 kB keeps every suite member individually visible (the driver's
-    // per-query PERF diff needs a row per query — a truncated map reads
-    // as "dropped_from_bench"); the slowest-N fallback below only
-    // engages if the suite outgrows even this
-    val budget = 8000
-    val out = {
-      val l3 = line(results, 3, 0.0)
-      if (l3.length <= budget) l3
-      else {
-        val l2 = line(results, 2, 0.0)
-        if (l2.length <= budget) l2
-        else {
-          // keep the slowest queries (the informative ones) until it
-          // fits — but ALWAYS keep failure markers (-1): they sort to
-          // the tail and would otherwise be truncated away, turning a
-          // failed run into a plausible-looking clean one
-          val (failed, ok) = results.partition(_._2 < 0)
-          val bySlow = ok.sortBy(-_._2)
-          var keep = bySlow.length
-          var cur = l2
-          while (cur.length > budget && keep > 10) {
-            keep -= 5
-            val kept = (bySlow.take(keep) ++ failed).sortBy(_._1)
-            val other = bySlow.drop(keep).map(_._2).sum
-            cur = line(kept, 2, other)
-          }
-          cur
-        }
-      }
-    }
+    val out = line(results, total, tp, noiseBlock(noise), sidecarPath, cpus, sfDir)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(sidecarPath),
-      (line(results, 3, 0.0) + "\n").getBytes("UTF-8"))
+      (out + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () } // sidecar is best-effort telemetry
     spark.stop()
     println(out)
   }
+
+  /** Fixed-decimal JSON number; -1 (the failure and "absent" marker)
+    * prints bare. Locale.ROOT: String.format honors the default locale,
+    * and a JVM on a comma-decimal locale would emit "0,123" — invalid
+    * JSON. */
+  def fmt(v: Double, dec: Int): String = {
+    val s = ("%." + dec + "f").formatLocal(java.util.Locale.ROOT, v)
+    if (s == "-1." + "0" * dec) "-1" else s
+  }
+
+  /** The run's host-noise telemetry and quiet-band outcome. */
+  final case class Noise(loadAtLaunch: Double, cooldownSec: Double,
+      loadBefore: Double, loadAfter: Double, ownCores: Double,
+      cgroupCpuSec: Double, wallSec: Double, extLoad: Double,
+      flagReasons: Seq[String], band: Map[String, Double],
+      bandViolations: Seq[(String, Double)],
+      bandRerun: Map[String, (Double, Double)],
+      rerun: Seq[(String, Double, Double)])
+
+  /** The `noise` block, with its leading comma. */
+  def noiseBlock(n: Noise): String = {
+    val rr =
+      if (n.rerun.isEmpty) ""
+      else n.rerun.map { case (k, first, second) =>
+        val best = if (second >= 0) math.min(first, second) else first
+        "\"" + k + "\":{\"first\":" + fmt(first, 2) +
+          ",\"rerun\":" + fmt(second, 2) + ",\"min\":" + fmt(best, 2) + "}"
+      }.mkString(",\"rerun\":{", ",", "}")
+    val fr =
+      if (n.flagReasons.isEmpty) ""
+      else n.flagReasons.mkString(",\"flag_reason\":\"", "+", "\"")
+    // band summary: how many queries had a band, how many tripped it
+    // and were re-timed, and the worst ≤5 still-out-of-band readings
+    // (value vs quiet) for the adjudicating reader
+    val bd =
+      if (n.band.isEmpty) ",\"band\":\"absent\""
+      else {
+        val viol = n.bandViolations
+          .sortBy { case (q, v) => -(v / n.band(q)) }.take(5)
+          .map { case (q, v) =>
+            // both adjudication readings ride along: sec is the kept
+            // min, first/rerun show whether the re-time confirmed the
+            // elevation (both high) or the min itself is the burst
+            val fr = n.bandRerun.get(q).fold("") { case (first, second) =>
+              ",\"first\":" + fmt(first, 2) + ",\"rerun\":" + fmt(second, 2)
+            }
+            "\"" + q + "\":{\"sec\":" + fmt(v, 2) + fr +
+              ",\"quiet\":" + fmt(n.band(q), 2) + "}"
+          }.mkString("{", ",", "}")
+        s""","band":{"n":${n.band.size},"retimed":${n.bandRerun.size},""" +
+          s""""viol":${n.bandViolations.size},"violations":$viol}"""
+      }
+    s""","noise":{"load_at_launch":${fmt(n.loadAtLaunch, 2)},""" +
+      s""""cooldown_sec":${fmt(n.cooldownSec, 0)},""" +
+      s""""load_before":${fmt(n.loadBefore, 2)},"load_after":${fmt(n.loadAfter, 2)},""" +
+      s""""own_cores":${fmt(n.ownCores, 2)},"cgroup_cpu_sec":${fmt(n.cgroupCpuSec, 1)},""" +
+      s""""wall_sec":${fmt(n.wallSec, 1)},"ext_load":${fmt(n.extLoad, 2)},""" +
+      s""""flagged":${n.flagReasons.nonEmpty}$fr$bd$rr}"""
+  }
+
+  /** The `throughput` block (aggregate wall under concurrent submission —
+    * the floor-amortized serving number, BASELINE "throughput mode"),
+    * with its leading comma; empty when no pass ran. The failure count
+    * rides the min pass. */
+  def throughputBlock(clients: Int, passes: Seq[(Double, Int)], n: Int,
+      loadAfter: Double): String =
+    if (passes.isEmpty) ""
+    else {
+      val (wall, failed) = passes.minBy(_._1)
+      // load_after minus this JVM's own burst cores is not separable
+      // post-hoc; readers compare it against the client count — a value
+      // well above `clients` means co-tenant load rode the burst window
+      val walls = passes.map(p => fmt(p._1, 2)).mkString("[", ",", "]")
+      val spreadPct = (passes.map(_._1).max - wall) / math.max(wall, 1e-9) * 100
+      s""","throughput":{"clients":$clients,""" +
+        s""""wall_sec":${fmt(wall, 2)},"walls":$walls,""" +
+        s""""spread_pct":${fmt(spreadPct, 1)},"n":$n,"failed":$failed,""" +
+        s""""load_after":${fmt(loadAfter, 2)},""" +
+        s""""qps":${fmt((n - failed) / math.max(wall, 1e-9), 1)}}"""
+    }
+
+  /** The stdout line: every query at 3 decimals, never truncated — a
+    * per-query comparison of two runs needs a row per query, and a
+    * missing one reads as "dropped_from_bench" (VERDICT r15 #1).
+    *
+    * The consumer parses the last JSON line out of a bounded tail of
+    * combined stdout/stderr. That tail's size is set outside this
+    * repository and is not verified here; [[LineBudget]] is the size
+    * this line is held to, and `BenchLineSpec` fails when the line for
+    * the whole suite at its widest values outgrows it. */
+  def line(queries: Seq[(String, Double)], total: Double, throughput: String,
+      noise: String, sidecar: String, cpus: String, sf: String): String = {
+    val m = queries.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":$m$throughput$noise,"sidecar":"$sidecar","cpus":$cpus,"sf":"$sf"}"""
+  }
+
+  val LineBudget = 8000
 }

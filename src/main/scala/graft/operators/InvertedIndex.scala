@@ -59,8 +59,9 @@ object InvertedIndex {
     * separate %_docsize table it point-reads per matched doc, but in
     * Spark that lookup is a join whose stream side scans the WHOLE
     * doc-length table per query; denormalizing one int into each posting
-    * makes query cost ∝ matched postings at any corpus size (the
-    * ProbeFts100 decade tables are the evidence). The doclens table is
+    * makes query cost ∝ matched postings at any corpus size (BASELINE
+    * Round 13's decade tables are the evidence; `bm25_rank_indexed` on a
+    * `MakeScale … disjoint` corpus re-times it). The doclens table is
     * still returned for corpus stats ([[corpusStats]], computed once per
     * snapshot).
     */
@@ -89,9 +90,9 @@ object InvertedIndex {
     * one blocking pass over the doc-length table. Callers serving many
     * queries over one index snapshot precompute this once — without it
     * every query re-pays an O(corpus) doclens aggregate just to learn
-    * two scalars that are fixed per snapshot (the knee ProbeFts100
-    * measures: the postings lookup is flat per decade, the stats scan
-    * is linear).
+    * two scalars that are fixed per snapshot (the knee BASELINE Round
+    * 13 measured: the postings lookup is flat per decade, the stats
+    * scan is linear).
     */
   def corpusStats(doclens: DataFrame): (Long, Double) = {
     val statsRow =

@@ -93,8 +93,9 @@ object SearchQueries {
 
   /** Same ranking (and the SAME oracle SQL) as [[bm25Rank]], answered
     * through the persistent ranked index instead of a corpus scan — the
-    * serving shape ProbeFts100 certifies flat-per-decade for scoped
-    * terms (BASELINE Round 13): postings carry tf AND dl
+    * serving shape measured flat-per-decade for scoped terms (BASELINE
+    * Round 13; re-time with `Profile` on a `MakeScale … disjoint`
+    * corpus): postings carry tf AND dl
     * (`buildRanked(withDl = true)`), corpus stats are a one-time
     * snapshot, so the per-query plan touches matched index rows only —
     * no corpus scan, no doclens join, no per-query stats aggregate.

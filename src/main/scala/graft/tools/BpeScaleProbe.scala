@@ -31,7 +31,7 @@ object BpeScaleProbe {
     // BPE exhausts it under 100 merges. Enrich each doc with 24 base-26
     // id-derived words (all-letter, so wordDict keeps them): ~10k word
     // types at sf0.01, enough pair diversity for a 4-digit merge budget.
-    // Same fixture spirit as MakeScale's copyN markers: the probe's
+    // Same fixture spirit as MakeScale's copy renaming: the probe's
     // subject is the OPERATOR's scale axis, not the tiny test corpus.
     val b26 = udf { (n: Long) =>
       (0 until 24).map { i =>

@@ -1,16 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.file.Paths
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Dev tool: build a LARGER synthetic SF by replicating an existing SF
-  * directory `factor`× with consistent key shifts — the measurement
-  * target VERDICT r15 #4 asks for (sf0.1 is scheduler-floor bound:
-  * 8-core scaling ratios ≈ 1 across the suite, so per-query signal needs
-  * more data). NOT an oracle corpus: the driver's correctness gate stays
-  * at sf0.01; this exists purely so optimization A/Bs measure compute,
-  * not the local-mode job floor.
+/** Dev tool, and the repo's one corpus generator: build a LARGER
+  * synthetic SF by replicating an existing SF directory `factor`× with
+  * consistent key shifts — the measurement target VERDICT r15 #4 asks for
+  * (sf0.1 is scheduler-floor bound: 8-core scaling ratios ≈ 1 across the
+  * suite, so per-query signal needs more data). NOT an oracle corpus: the
+  * correctness gate stays at sf0.01; this exists purely so
+  * optimization A/Bs and growth runs measure compute, not the local-mode
+  * job floor. Growth runs time the generated corpus with [[Profile]]:
+  *
+  * {{{
+  * runMain graft.tools.MakeScale <sf0.1 dir> <out dir> 10 disjoint
+  * runMain graft.tools.Profile <out dir> dedup_minhash knn_graph ...
+  * }}}
   *
   * Replication contract (copy 0 is the identity, so every literal-id
   * point lookup in the suite still hits):
@@ -19,42 +26,126 @@ import org.apache.spark.sql.types._
   *    relationships hold and per-key cardinalities stay flat (10× users,
   *    10× orders — not 10× rows per user);
   *  - dims `region`/`nation` stay 1× (low-cardinality lookup tables);
-  *  - `documents.text` gains a "copyN " prefix for copies ≥ 1:
-  *    copies are NEAR-dups of the original —
-  *    realistic dedup pressure instead of a degenerate 10-deep
-  *    exact-dup multiset;
-  *  - `embeddings.embedding` gains a small copy-keyed additive offset
-  *    (±0.05·sin((i+1)·copy), identity at copy 0): cosine structure is
-  *    preserved per copy, copies of one vector are near- (not exact-)
-  *    neighbors, so cluster/pair volumes grow the way a real 10× corpus
-  *    grows rather than collapsing into exact-duplicate stacks;
+  *  - `documents.text` and `embeddings.embedding` of copies ≥ 1 are
+  *    perturbed by the [[Mode]] ([[Near]] by default, [[Disjoint]] for
+  *    growth runs);
   *  - column dtypes are cast back to the source schema so a consumer
   *    sees the exact same relation shape — and every shifted key is
   *    checked to FIT that dtype before anything is written
   *    ([[shiftFits]]): a non-ANSI cast would otherwise wrap a 32-bit
   *    key silently into a colliding, wrong corpus.
   *
-  * Usage: runMain graft.tools.MakeScale [srcDir] [dstDir] [factor]
+  * Usage: runMain graft.tools.MakeScale <src> <dst> <factor> [near|disjoint]
   */
 object MakeScale {
+
+  /** How copy `c` (a long column, ≥ 1 where it matters) perturbs the
+    * payload columns. Copy 0 comes out unchanged in every mode. */
+  sealed abstract class Mode(val name: String) {
+    /** Rewritten `documents` columns, by name. */
+    def documents(c: Column): Map[String, Column]
+    /** Rewritten `embeddings.embedding`. */
+    def embedding(c: Column): Column
+  }
+
+  /** Copies are NEAR-dups of the original: realistic dedup pressure
+    * instead of a degenerate exact-dup multiset. Text gains a "copyN "
+    * prefix; vectors a small copy-keyed additive offset
+    * (±0.05·sin((i+1)·copy)), so copies of one vector are near- (not
+    * exact-) neighbors. Cross-copy pairs grow Ω(factor²) — the recipe of
+    * the committed sf1 bands and of perfbench's curation corpus. */
+  case object Near extends Mode("near") {
+    def documents(c: Column): Map[String, Column] = Map(
+      "text" -> when(c === 0, col("text"))
+        .otherwise(concat(lit("copy"), c.cast("string"), lit(" "), col("text"))))
+
+    def embedding(c: Column): Column =
+      when(c === 0, col("embedding"))
+        .otherwise(zip_with(col("embedding"),
+          sequence(lit(1), size(col("embedding"))),
+          (x, i) => (x.cast("double") +
+            sin(i.cast("double") * c.cast("double")) * 0.05).cast("float")))
+  }
+
+  /** Copies keep the source's structure and share nothing across copies,
+    * so duplicate and cluster pressure per copy stays constant — the
+    * honest growth axis for dedup, clustering and search:
+    *  - text: every maximal letter/digit run gains the all-letter suffix
+    *    [[tokenSuffix]] — a per-copy bijective token renaming under
+    *    whitespace splits, `rawTokens` and the `[a-z]+` BPE word
+    *    tokenizer (each keeps the suffix inside the token; for `[a-z]+`
+    *    that holds whenever a run ends in a lowercase letter, as every
+    *    word of the generated corpus does). Within-copy n-gram and
+    *    token-set structure is exactly the source's, cross-copy overlap
+    *    is zero, and `n_chars` grows by the characters added;
+    *  - vectors: a per-(copy, dimension) sign flip (murmur3 parity) — a
+    *    diagonal orthogonal map, so every within-copy cosine is
+    *    bit-equal to the source pair's while cross-copy cosines scramble
+    *    toward 0. */
+  case object Disjoint extends Mode("disjoint") {
+    def documents(c: Column): Map[String, Column] = {
+      val renamed = when(c === 0, col("text")).otherwise(regexp_replace(
+        col("text"), lit("([\\p{L}\\p{N}]+)"), concat(lit("$1"), tokenSuffix(c))))
+      Map("text" -> renamed,
+        "n_chars" -> (col("n_chars") + length(renamed) - length(col("text"))))
+    }
+
+    def embedding(c: Column): Column =
+      when(c === 0, col("embedding"))
+        .otherwise(transform(col("embedding"),
+          (x, j) => when(pmod(hash(c, j), lit(2)) === 0, x).otherwise(-x)))
+  }
+
+  val Modes: Seq[Mode] = Seq(Near, Disjoint)
+
+  /** "x" + the copy number with digits spelled a-j (copy 12 → "xbc"):
+    * letters only, and no suffix contains a second "x", so the last "x"
+    * of a renamed token marks where its suffix starts — distinct copies
+    * never produce the same token. */
+  private def tokenSuffix(c: Column): Column =
+    concat(lit("x"), translate(c.cast("string"), "0123456789", "abcdefghij"))
+
+  final case class Args(src: String, dst: String, factor: Int, mode: Mode)
+
+  val Usage = "usage: MakeScale <src> <dst> <factor> [near|disjoint]"
+
+  /** Parses and checks the command line, before a session starts or a
+    * file is read: factor ≥ 1 (0 would write empty fact tables beside
+    * full dims), a `dst` that is not `src` (the overwrite would destroy
+    * the input), and a known mode. */
+  def parse(args: Seq[String]): Args = {
+    require(args.length == 3 || args.length == 4, Usage)
+    val Seq(src, dst, f) = args.take(3)
+    val factor = f.toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"factor '$f' is not an integer"))
+    require(factor >= 1, s"factor must be ≥ 1, got $factor")
+    def norm(p: String) = Paths.get(p).toAbsolutePath.normalize
+    require(norm(src) != norm(dst), s"dst '$dst' is the source directory")
+    val mode = args.lift(3).fold[Mode](Near)(m => Modes.find(_.name == m)
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown mode '$m' — valid: ${Modes.map(_.name).mkString(", ")}")))
+    Args(src, dst, factor, mode)
+  }
+
   def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dst = args.lift(1).getOrElse("/root/sf1")
-    val factor = args.lift(2).map(_.toInt).getOrElse(10)
+    val a = parse(args.toSeq)
     val spark = graft.Session.oracle()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, a.src, a.dst, a.factor, a.mode)
+    finally spark.stop()
+  }
 
+  /** Writes `factor` copies of every table under `src` to `dst`; the
+    * arguments are the ones [[parse]] accepts. */
+  def run(spark: SparkSession, src: String, dst: String, factor: Int,
+      mode: Mode): Unit = {
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
 
     // one shared offset per key FAMILY (power of 10 above the source
     // max) so every referencing table shifts identically
-    def offsetOf(name: String, key: String): Long = {
-      val mx = read(name).agg(max(col(key).cast(LongType))).head().getLong(0)
-      var p = 10L
-      while (p <= mx) p *= 10
-      p
-    }
+    def offsetOf(name: String, key: String): Long =
+      offsetAbove(read(name).agg(max(col(key).cast(LongType))).head().getLong(0))
     val offs = Map(
       "cust" -> offsetOf("customer", "c_custkey"),
       "supp" -> offsetOf("supplier", "s_suppkey"),
@@ -64,7 +155,7 @@ object MakeScale {
       "user" -> offsetOf("events", "user_id"),
       "doc" -> offsetOf("documents", "doc_id"),
       "vec" -> offsetOf("embeddings", "vec_id"))
-    println(s"[make-scale] offsets: $offs")
+    println(s"[make-scale] mode=${mode.name} offsets: $offs")
 
     /** One replicated table: factor copies with the named keys shifted
       * (dtypes restored) and the named columns mutated per copy. */
@@ -88,23 +179,24 @@ object MakeScale {
 
     def write(c: Copy): Unit = {
       val base = read(c.name)
-      val types = base.schema.fields.map(f => f.name -> f.dataType).toMap
       val copies = spark.range(factor).withColumnRenamed("id", "__copy")
         .crossJoin(base)
-      val out = base.columns.foldLeft(copies) { (df, k) =>
-        val shifted = c.shifts.get(k) match {
+      // one select, so every rewrite reads the source columns
+      val out = copies.select(base.schema.fields.map { f =>
+        val k = f.name
+        c.shifts.get(k) match {
           case Some(off) =>
             (col(k).cast(LongType) + col("__copy") * lit(off))
-              .cast(types(k))
-          case None => c.mutate.getOrElse(k, col(k))
+              .cast(f.dataType).as(k)
+          case None => c.mutate.getOrElse(k, col(k)).as(k)
         }
-        df.withColumn(k, shifted)
-      }.select(base.columns.map(col): _*)
+      }.toSeq: _*)
       out.repartition(c.outFiles)
         .write.mode("overwrite").parquet(s"$dst/${c.name}.parquet")
       println(s"[make-scale] ${c.name} done")
     }
 
+    val copy = col("__copy")
     val tables = Seq(
       Copy("customer", Map("c_custkey" -> offs("cust")), outFiles = 2),
       Copy("supplier", Map("s_suppkey" -> offs("supp")), outFiles = 1),
@@ -120,17 +212,9 @@ object MakeScale {
         Map("event_id" -> offs("event"), "user_id" -> offs("user")),
         outFiles = 4),
       Copy("documents", Map("doc_id" -> offs("doc")), outFiles = 4,
-        mutate = Map("text" -> when(col("__copy") === 0, col("text"))
-          .otherwise(concat(lit("copy"), col("__copy").cast("string"),
-            lit(" "), col("text"))))),
+        mutate = mode.documents(copy)),
       Copy("embeddings", Map("vec_id" -> offs("vec")), outFiles = 2,
-        mutate = Map("embedding" ->
-          when(col("__copy") === 0, col("embedding"))
-            .otherwise(zip_with(col("embedding"),
-              sequence(lit(1), size(col("embedding"))),
-              (x, i) => (x.cast("double") +
-                sin(i.cast("double") * col("__copy").cast("double")) * 0.05)
-                .cast("float"))))))
+        mutate = Map("embedding" -> mode.embedding(copy))))
     // every key is checked before the first file is written: a failed
     // check leaves no half-written corpus behind
     tables.foreach(check)
@@ -142,8 +226,15 @@ object MakeScale {
       println(s"[make-scale] $n copied 1x")
     }
     tables.foreach(write)
-    println(s"[make-scale] wrote ${factor}x of $src to $dst")
-    spark.stop()
+    println(s"[make-scale] wrote ${factor}x ${mode.name} of $src to $dst")
+  }
+
+  /** The key shift between consecutive copies: the least power of 10
+    * above the source's largest key. */
+  def offsetAbove(maxKey: Long): Long = {
+    var p = 10L
+    while (p <= maxKey) p *= 10
+    p
   }
 
   /** True when every shifted value `maxKey + (factor-1)·offset` fits

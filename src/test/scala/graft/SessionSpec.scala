@@ -53,6 +53,19 @@ class SessionSpec extends AnyFunSuite {
     assert(builders == Seq("graft/Session.scala"))
   }
 
+  test("MakeScale is the only corpus replicator in src/main") {
+    // a replicator is spark.range(n) cross-joined with a table. The two
+    // star probes keep their own: they spread document ids by 500 so the
+    // facade star spans year partitions, which MakeScale's power-of-ten
+    // key shift does not do.
+    val replicate = "(?s)spark\\.range\\(.{0,200}?\\.crossJoin\\(".r
+    val replicators = mainSources.filter(p =>
+      replicate.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(p => mainRoot.relativize(p).toString).sorted
+    assert(replicators == Seq("graft/tools/BucketedStarProbe.scala",
+      "graft/tools/MakeScale.scala", "graft/tools/PartitionedStarProbe.scala"))
+  }
+
   test("spark.graft.memo.releaseGraceMs is the only spark.graft.* key in src/main") {
     // a new key must update this set AND the README's runtime
     // configuration table
