@@ -579,7 +579,7 @@ object DocQueries {
     }
     // nProbe=12 of 16: this corpus is near-random (ANN-hostile — top
     // cosine ≈ 0.37), so expected recall ≈ nProbe/nList and 8/16 fell to
-    // 0.5 at sf0.1. Measured (tools/IvfRecallProbe): 12/16 gives
+    // 0.5 at sf0.1. Measured (BASELINE, IVF recall history): 12/16 gives
     // recall@10 of 1.0 / 0.9 / 1.0 at sf0.001/0.01/0.1 — the honest
     // probe budget for data with no cluster structure; real embedding
     // corpora cluster, which is what lets production IVF probe far fewer
@@ -602,7 +602,7 @@ object DocQueries {
     * [[IvfIndex.build]]) AND query-side probe ranking routed
     * ([[IvfIndex.searchAssignedRouted]] — the ~1M-list driver-ranking
     * knee fix). Both approximations active at once, recall-gated vs
-    * brute force like `vector_knn_ivf`. Measured (tools/IvfRecallProbe,
+    * brute force like `vector_knn_ivf`. Measured (BASELINE history,
     * nProbe=14, searchRouted rProbe=3): recall@10 = 1.0 / 0.8 / 0.7 at
     * sf0.001/0.01/0.1 on this ANN-hostile near-random corpus — gate at
     * ≥ 0.6 for headroom against testdata regeneration; real clustered

@@ -51,10 +51,10 @@ object FacadeQueries {
   private[queries] def star(s: SparkSession, dir: String): MsgVault =
     starFromDocs(s, Tables.load(s, dir, "documents"))
 
-  /** [[star]] over an arbitrary documents frame — the reuse hook for the
-    * partitioned-star probe (graft.tools.PartitionedStarProbe), which
-    * derives the same star from a REPLICATED corpus and writes it
-    * through [[graft.engine.CacheBuilder.build]].
+  /** [[star]] over an arbitrary documents frame — the reuse hook for
+    * PlanAuditSpec's partition-pruning test, which derives the same star
+    * from spread doc ids and writes it through
+    * [[graft.engine.CacheBuilder.build]].
     */
   private[graft] def starFromDocs(s: SparkSession,
       docsIn: DataFrame): MsgVault = {
@@ -813,9 +813,8 @@ object FacadeQueries {
     * any sort, where OFFSET must sort-and-skip `offset + limit` rows per
     * page at any depth. This entry gates the cursor predicate's exact
     * semantics (strict (ts, id) descent + the null-timestamp tail rule)
-    * against the oracle's replay; the DEPTH economics are certified by
-    * the BucketedStarProbe deep-page leg (offset page-1000 vs this twin
-    * on the bucketed disk star).
+    * against the oracle's replay; the DEPTH economics (offset page-1000
+    * vs this twin on the bucketed disk star) are BASELINE history.
     */
   def listMessagesKeyset(s: SparkSession, dir: String): DataFrame =
     engine(s, dir)

@@ -426,6 +426,25 @@ package object queries {
     }
   }
 
+  /** Drops every memo entry session `s` owns, each released through the
+    * eviction path (after the owner's grace, when it set one), and
+    * returns how many it dropped: the next lookup rebuilds. A profiler
+    * calls it so a timed run builds the artifact instead of probing it.
+    */
+  private[graft] def dropMemo(s: SparkSession): Int = {
+    var dropped = 0
+    val it = memo.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.getValue.session eq s) {
+        it.remove()
+        dropped += 1
+        retireOrRelease(s, s, e.getValue.value)
+      }
+    }
+    dropped
+  }
+
   /** Unpersist any DataFrames held (one Product wrapper deep) by a
     * discarded memo artifact. Composite artifacts (IvfIndex.Index,
     * tuples of frames) hold their persisted frames one wrapper deep, so

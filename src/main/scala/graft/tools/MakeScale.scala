@@ -50,14 +50,18 @@ object MakeScale {
 
   /** Copies are NEAR-dups of the original: realistic dedup pressure
     * instead of a degenerate exact-dup multiset. Text gains a "copyN "
-    * prefix; vectors a small copy-keyed additive offset
+    * prefix (`n_chars` grows by its length); vectors a small copy-keyed
+    * additive offset
     * (±0.05·sin((i+1)·copy)), so copies of one vector are near- (not
     * exact-) neighbors. Cross-copy pairs grow Ω(factor²) — the recipe of
     * the committed sf1 bands and of perfbench's curation corpus. */
   case object Near extends Mode("near") {
-    def documents(c: Column): Map[String, Column] = Map(
-      "text" -> when(c === 0, col("text"))
-        .otherwise(concat(lit("copy"), c.cast("string"), lit(" "), col("text"))))
+    def documents(c: Column): Map[String, Column] = {
+      val prefixed = when(c === 0, col("text"))
+        .otherwise(concat(lit("copy"), c.cast("string"), lit(" "), col("text")))
+      Map("text" -> prefixed,
+        "n_chars" -> (col("n_chars") + length(prefixed) - length(col("text"))))
+    }
 
     def embedding(c: Column): Column =
       when(c === 0, col("embedding"))

@@ -5,6 +5,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.BusDrain
 import graft.{Session, SparkEntry}
+import graft.queries.dropMemo
 
 /** Dev tool: the per-query profile of SparkEntry.benchQueries entries, in
   * the timing layout [[graft.Bench]] runs (cached tables, warm JIT). For
@@ -22,10 +23,16 @@ import graft.{Session, SparkEntry}
   *     task time ÷ cores is driver-side: DAG submission, stage barriers,
   *     the sink commit;
   *   - a per-stage table of the best warm run, naming the stage that
-  *     carries an anomaly in a multi-job query.
+  *     carries an anomaly in a multi-job query;
+  *   - for a memoized query (an index, pair table or merge table built
+  *     once per session), `rebuild_best`: the best of [[Runs]] with the
+  *     memo dropped before each run, so the operator is timed and not
+  *     only the memo probe. The memo is left empty after each query.
   *
   * Every run is tagged with a job group (`<query>#<run>`), so the
   * listener charges each job, stage and task to the run that caused it.
+  *
+  * Exits non-zero, naming them, when any query fails.
   *
   * Usage: runMain graft.tools.Profile <sfDir> [names...]  (default: all)
   */
@@ -93,13 +100,19 @@ object Profile {
     graft.sources.Tables.cacheAll(spark, sfDir)
     val listener = new GroupListener
     spark.sparkContext.addSparkListener(listener)
-    names.foreach { name =>
-      try profile(spark, sfDir, name, listener)
+    val failed = names.filter { name =>
+      try { profile(spark, sfDir, name, listener); false }
       catch { case e: Throwable =>
         println(s"[profile] $name FAILED ${String.valueOf(e.getMessage).take(200)}")
+        dropMemo(spark) // the next query's rebuild check sees only its own
+        true
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      println(s"[profile] ${failed.size} query(ies) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
   private def profile(spark: SparkSession, sfDir: String, name: String,
@@ -149,6 +162,16 @@ object Profile {
       println(f"[profile]   ${s.id}%6d ${s.tasks}%6d ${s.runMs / 1000.0}%8.3f " +
         f"${s.deserMs / 1000.0}%8.3f ${s.resSerMs / 1000.0}%9.3f " +
         f"${s.gcMs / 1000.0}%7.3f  ${s.name.take(80)}")
+    }
+
+    if (dropMemo(spark) > 0) {
+      val rebuild = (1 to Runs).map { i =>
+        val t = run(s"$name#rebuild$i")
+        dropMemo(spark)
+        t
+      }
+      println(f"[profile] $name%-28s rebuild_best=${rebuild.min}%.3f s  " +
+        f"(best of $Runs, memo dropped before each)")
     }
   }
 }

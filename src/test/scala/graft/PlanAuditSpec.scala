@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 
 /** Physical-plan regression tests: the properties that keep queries fast at
   * 100 TB — predicate pushdown into the Parquet scan, column pruning,
@@ -273,6 +274,37 @@ class PlanAuditSpec extends SparkTestBase {
     assert(scan.metadata.getOrElse("PartitionFilters", "").contains("year"),
       s"year filter not a partition filter: ${scan.metadata}")
     assert(filtered.count() == 1)
+  }
+
+  test("facade star through CacheBuilder.build: a one-year scan reads fewer files than the full scan") {
+    import graft.engine.{CacheBuilder, MsgVault}
+    import graft.queries.FacadeQueries
+    // sent_at is epoch + doc_id minutes: ids 50 000 apart put about ten
+    // messages in each of six years
+    val star = FacadeQueries.starFromDocs(spark,
+      spark.range(60).select((col("id") * 50000L).as("doc_id")))
+    val out = java.nio.file.Files.createTempDirectory("graft_star_prune").toString
+    CacheBuilder.build(spark, star, out)
+    val messages = MsgVault.open(spark, out).messages
+
+    /** (files the scan reads, sorted (id, year) rows). The count comes
+      * off the scan's FileScanRDD partitions: its `numFiles` metric
+      * reads 0 on this path. */
+    def scanFiles(df: DataFrame): (Int, Seq[(Long, Int)]) = {
+      val q = df.select(col("id"), col("year"))
+      val rows = q.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+      val files = scans(executed(q)).head.inputRDDs().head.partitions.map {
+        case p: FilePartition => p.files.length
+      }.sum
+      (files, rows)
+    }
+    val (allFiles, all) = scanFiles(messages)
+    val years = all.map(_._2).distinct
+    assert(years.size >= 3, s"star spans too few years: $years")
+    val year = years(years.size / 2)
+    val (oneFiles, one) = scanFiles(messages.filter(col("year") === year))
+    assert(oneFiles < allFiles, s"year $year read $oneFiles of $allFiles files")
+    assert(one.nonEmpty && one == all.filter(_._2 == year))
   }
 
   test("binned range join plans as an equi-join, not a nested loop") {

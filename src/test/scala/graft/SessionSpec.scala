@@ -54,16 +54,28 @@ class SessionSpec extends AnyFunSuite {
   }
 
   test("MakeScale is the only corpus replicator in src/main") {
-    // a replicator is spark.range(n) cross-joined with a table. The two
-    // star probes keep their own: they spread document ids by 500 so the
-    // facade star spans year partitions, which MakeScale's power-of-ten
-    // key shift does not do.
+    // a replicator is spark.range(n) cross-joined with a table
     val replicate = "(?s)spark\\.range\\(.{0,200}?\\.crossJoin\\(".r
     val replicators = mainSources.filter(p =>
       replicate.findFirstIn(Files.readString(p)).nonEmpty)
       .map(p => mainRoot.relativize(p).toString).sorted
-    assert(replicators == Seq("graft/tools/BucketedStarProbe.scala",
-      "graft/tools/MakeScale.scala", "graft/tools/PartitionedStarProbe.scala"))
+    assert(replicators == Seq("graft/tools/MakeScale.scala"))
+  }
+
+  test("the only mains in src/main are Verify, Bench and the four tools") {
+    val mains = mainSources.filter(p =>
+      Files.readString(p).contains("def main("))
+      .map(p => mainRoot.relativize(p).toString).sorted
+    assert(mains == Seq("graft/Bench.scala", "graft/Verify.scala",
+      "graft/tools/MakeScale.scala", "graft/tools/Profile.scala",
+      "graft/tools/Sql.scala", "graft/tools/Sweep.scala"))
+  }
+
+  test("Profile holds the only addSparkListener in src/main") {
+    val calls = mainSources.flatMap(p =>
+      Seq.fill("addSparkListener\\(".r
+        .findAllIn(Files.readString(p)).size)(mainRoot.relativize(p).toString))
+    assert(calls == Seq("graft/tools/Profile.scala"))
   }
 
   test("spark.graft.memo.releaseGraceMs is the only spark.graft.* key in src/main") {

@@ -113,4 +113,58 @@ class BpeVocabSpec extends SparkTestBase {
       .collect().map(_.getString(1)).toSeq
     assert(sub == Seq(alpha))
   }
+
+  test("batched learning across 8 SnapshotEvery boundaries: exact counts, apply = tokenizeWord") {
+    // 24 base-26 words per doc id (all-letter, so wordDict keeps them):
+    // tens of thousands of word types, pair diversity no toy corpus has
+    val docs = (0L until 2000L).map { n =>
+      n -> (0 until 24).map { i =>
+        var v = n * 31 + i * 7919
+        val sb = new StringBuilder
+        while (sb.length < 6) { sb.append(('a' + (v % 26)).toChar); v /= 26 }
+        sb.toString
+      }.mkString(" ")
+    }
+    val df = docs.toDF("doc_id", "text")
+    val target = 8 * BpeVocab.SnapshotEvery
+    val m = BpeVocab.learnMerges(df, col("text"), target, batchK = 16)
+      .orderBy("iteration").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    val table = m.map { case (_, p, _) => val Array(a, b) = p.split(" ", 2); (a, b) }.toArray
+    val freq = docs.flatMap(_._2.split(" ")).groupBy(identity)
+      .map { case (w, ws) => w -> ws.size.toLong }
+    // short only when every word is fully merged
+    assert(m.size == target ||
+      freq.keys.forall(w => BpeVocab.tokenizeWord(w, table).size == 1))
+    assert(m.map(_._1) == (1L to m.size.toLong))
+
+    // replay one merge at a time: each learned count is the pair's
+    // adjacent-occurrence count after the merges before it (a batch's
+    // pairs share no symbol, so their round-start counts stay exact)
+    def adjacent(syms: IndexedSeq[String], a: String, b: String): Int =
+      (0 until syms.length - 1).count(j => syms(j) == a && syms(j + 1) == b)
+    def merge(syms: IndexedSeq[String], a: String, b: String): IndexedSeq[String] = {
+      val out = IndexedSeq.newBuilder[String]
+      var j = 0
+      while (j < syms.length) {
+        if (j + 1 < syms.length && syms(j) == a && syms(j + 1) == b) {
+          out += a + b; j += 2
+        } else { out += syms(j); j += 1 }
+      }
+      out.result()
+    }
+    var words = freq.toSeq.map { case (w, f) => (w.map(_.toString): IndexedSeq[String], f) }
+    table.zip(m).foreach { case ((a, b), (i, _, cnt)) =>
+      assert(words.map { case (syms, f) => f * adjacent(syms, a, b) }.sum == cnt,
+        s"merge $i ($a $b)")
+      words = words.map { case (syms, f) => (merge(syms, a, b), f) }
+    }
+
+    val got = BpeVocab.applyMerges(df, col("doc_id"), col("text"), m.map(_._2))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val want = docs.flatMap { case (id, text) =>
+      text.split(" ").toSeq.flatMap(w => BpeVocab.tokenizeWord(w, table).map(id -> _))
+    }
+    assert(got == want)
+  }
 }

@@ -167,6 +167,31 @@ class MemoInvalidationSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.memo.releaseGraceMs")
   }
 
+  test("dropMemo releases only its session's entries, and the next lookup rebuilds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_drop").toString
+    val other = spark.newSession()
+    var builds = 0
+    def lookup(s: org.apache.spark.sql.SparkSession): DataFrame =
+      memoizedIndex[DataFrame](s, dir, "spec_drop") {
+        builds += 1
+        val df = s.range(20 + builds).toDF("n").persist(StorageLevel.MEMORY_ONLY)
+        df.count()
+        df
+      }
+    val first = lookup(other)
+    val kept = lookup(spark)
+    assert(builds == 2)
+    assert(dropMemo(other) == 1)
+    assert(first.storageLevel == StorageLevel.NONE,
+      "a dropped artifact's persisted frames must be released")
+    assert(kept.storageLevel != StorageLevel.NONE)
+    assert(lookup(other) ne first)
+    assert(builds == 3)
+    assert(lookup(spark) eq kept)
+    assert(dropMemo(other) == 1)
+    kept.unpersist()
+  }
+
   test("indexed FTS search returns fresh results after an in-place corpus rewrite") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_memo_fts").toString

@@ -147,6 +147,11 @@ class MakeScaleSpec extends SparkTestBase {
           assert(copy0.exceptAll(s).isEmpty && s.exceptAll(copy0).isEmpty, t)
         }
     }
+
+    test(s"${m.name}: n_chars follows the renamed text") {
+      val d = read(out(m), "documents")
+      assert(d.filter(col("n_chars") =!= length(col("text"))).isEmpty)
+    }
   }
 
   // ---- disjoint: structure kept within a copy, nothing shared across ----
@@ -215,10 +220,5 @@ class MakeScaleSpec extends SparkTestBase {
       for (c <- 0 until factor; d <- c + 1 until factor)
         assert((vocab(c) & vocab(d)).isEmpty, s"$name: copies $c and $d")
     }
-  }
-
-  test("disjoint: n_chars follows the renamed text") {
-    val d = read(out(MakeScale.Disjoint), "documents")
-    assert(d.filter(col("n_chars") =!= length(col("text"))).isEmpty)
   }
 }
