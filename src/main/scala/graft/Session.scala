@@ -9,9 +9,8 @@ import org.apache.spark.sql.SparkSession
   *     `local[cpus]`, shuffle partitions = cpus, AQE at the Spark
   *     default;
   *   - [[timingConf]]: what the timing harness ([[Bench]]) runs —
-  *     `local[cpus]`, shuffle partitions from `SPARK_GRAFT_SHUFFLE`
-  *     (default 8: 600k-row shuffles are task-overhead-bound), AQE from
-  *     `SPARK_GRAFT_AQE` (default off: these are sub-second warm-cache
+  *     `local[cpus]`, 8 shuffle partitions (600k-row shuffles are
+  *     task-overhead-bound) and AQE off (these are sub-second warm-cache
   *     queries where each AQE stage barrier re-plans the DAG and the
   *     exchanges it would optimize hold a few MB — measured total 7.4 s
   *     vs 8.0 s, dedup_minhash 0.54 s vs 0.86 s). AQE stays on in the
@@ -36,12 +35,11 @@ object Session {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
-  def timingConf(cpus: Int,
-      env: String => Option[String] = sys.env.get): Seq[(String, String)] = Seq(
+  def timingConf(cpus: Int): Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$cpus]",
-    "spark.sql.shuffle.partitions" -> env("SPARK_GRAFT_SHUFFLE").getOrElse("8"),
+    "spark.sql.shuffle.partitions" -> "8",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.adaptive.enabled" -> env("SPARK_GRAFT_AQE").getOrElse("false"),
+    "spark.sql.adaptive.enabled" -> "false",
     "spark.ui.enabled" -> "false")
 
   /** Oracle layout at [[cpus]], plus `extra`. */

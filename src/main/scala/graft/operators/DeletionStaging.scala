@@ -121,20 +121,14 @@ object DeletionStaging {
     require(s.getAs[Long]("bad") == 0L,
       s"manifest '$manifestId': ${s.getAs[Long]("bad")} non-gmail " +
         "candidates — remote deletion only operates on gmail sources")
-    // File count follows the MANIFEST SIZE, not the candidate frame's
-    // partition count: the checkpointed candidates arrive at shuffle
-    // parallelism, and writing that layout verbatim emits that many
-    // near-empty files per manifest — files this store's read-back
-    // (members/validate, run per review query) pays a reader-init each.
-    // ~250k member rows per file: one file for a typical manifest,
-    // proportional fan-out for a mass deletion. coalesce is narrow and
-    // reduce-only — a small manifest never shuffles, a huge one keeps
-    // its parallelism up to the session's core count.
-    val memberFiles = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      s.getAs[Long]("n") / 250000L + 1L))
+    // file count follows manifest size (Sizing.manifestFiles), not the
+    // checkpointed candidates' shuffle parallelism, whose near-empty files
+    // each read-back would pay a reader-init for. coalesce is narrow and
+    // reduce-only — a small manifest never shuffles.
+    val memberFiles = graft.Sizing.manifestFiles(s.getAs[Long]("n"),
+      graft.Sizing.cores(spark))
     member.drop("source_type")
-      .coalesce(memberFiles.toInt)
+      .coalesce(memberFiles)
       .write.mode(SaveMode.Overwrite)
       .partitionBy("manifest_id") // idempotent re-stage of the same id
       .option("partitionOverwriteMode", "dynamic")

@@ -73,22 +73,18 @@ object Export {
     * lexicographic order breaks past 100k) makes safely concatenable.
     *
     * `shards = 0` (the default) derives the count from the export's row
-    * volume — [[mboxShards]] — so file layout follows data size at every scale
-    * (a 330-message test export is one file, a 10^9-message archive is
-    * ~20k shards) instead of a fixed 32-file layout that is both too
-    * many files for a small export and too few for a large one. The
-    * count is a cheap count() over the unframed input (column-pruned —
-    * the MIME framing expression does not execute); deliberately NOT
-    * capped at defaultParallelism: shard count is a file-size/reader
-    * knob, not a parallelism knob, and the bucket exchange parallelizes
-    * by partition count regardless. Callers with a target layout pass
-    * an explicit count, which is honored verbatim.
+    * volume ([[graft.Sizing.mboxShards]], one cheap column-pruned count()
+    * over the unframed input), so file layout follows data size. The
+    * count is not capped at the core count: it is a file-size/reader
+    * choice, and the bucket exchange parallelizes regardless. Callers
+    * with a target layout pass an explicit count, honored verbatim.
     */
   def writeMbox(messages: DataFrame, id: Column, record: Column,
       outDir: String, shards: Int = 0): Unit = {
     require(shards >= 0 && shards <= MaxShards,
       s"shards must be in [0, $MaxShards], got $shards")
-    val n = if (shards >= 1) shards else mboxShards(messages.count())
+    val n = if (shards >= 1) shards
+      else graft.Sizing.mboxShards(messages.count(), MaxShards)
     graft.queries.bucketOrderedN(
       messages.select(id.as("__id"), record.as("value")), col("__id"), n)
       // a null record (null id or null/corrupt mime) would abort the
@@ -100,20 +96,6 @@ object Export {
       .write.mode("overwrite").text(outDir)
     normalizeShardNames(messages.sparkSession, outDir)
   }
-
-  /** Default mbox sizing: ~50k messages per shard (a few hundred MB of
-    * typical MIME) — inside the 128 MB-1 GB output-file band without
-    * overflowing [[readMbox]]'s one-shard-per-task fast path.
-    */
-  val DefaultRowsPerShard: Long = 50000L
-
-  /** Derived mbox shard count for `rows` messages: ceil(rows /
-    * [[DefaultRowsPerShard]]), clamped to [1, [[MaxShards]]] — exactly
-    * 50k rows is one shard, 50,001 is two, an empty export one file.
-    */
-  def mboxShards(rows: Long): Int =
-    if (rows <= 0L) 1
-    else math.min(MaxShards.toLong, (rows - 1L) / DefaultRowsPerShard + 1L).toInt
 
   /** [[normalizeShardNames]]'s `shard-%09d` naming is good to 10^9. */
   val MaxShards: Int = 999999999

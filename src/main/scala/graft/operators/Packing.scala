@@ -126,30 +126,17 @@ object Packing {
     * on pack_id — groups are seqLen-bounded by construction, so the
     * aggregate is skew-free at any corpus size. Shards ride the same
     * bucket-ordered writer contract as the mbox export
-    * ([[Export.writeMbox]]): `buckets` parallel writer tasks, file set
+    * ([[Export.writeMbox]]): one writer task per bucket, file set
     * concatenates in bucket order, and a reader bounds memory by
-    * packs/buckets.
+    * packs/buckets. The bucket count follows the corpus token volume
+    * ([[graft.Sizing.packShards]]); the total is one tiny aggregate over
+    * the already-snapshotted input.
     */
   def writePacks(docs: DataFrame, id: Column, tokens: Column, seqLen: Int,
-      outDir: String, buckets: Int = 0): Unit = {
+      outDir: String): Unit = {
     val (frame, base) = packFrameWithBase(docs, id, tokens, seqLen)
-    // Default shard count follows the CORPUS TOKEN VOLUME, not a core
-    // count: each writer task pays a fixed write-closure cost (~175 ms
-    // of task deserialize, r15 graft.tools.Profile stages — 32 tasks to
-    // emit a few hundred packs), and each shard costs its readers a
-    // reader-init. ~4M tokens per shard keeps one bucket inside a
-    // reader task's memory (the scaladoc contract) while a 100 TB
-    // corpus (~2.5e13 tokens) still fans out over ~6M shards-worth of
-    // parallel writers, capped per call by the explicit knob. The token
-    // total is one tiny aggregate over the already-snapshotted input —
-    // no corpus re-derivation.
-    val n =
-      if (buckets > 0) buckets
-      else {
-        val total = base.agg(coalesce(sum(size(col("__toks"))), lit(0L)))
-          .head().getLong(0)
-        math.max(1L, math.min(4096L, total / 4000000L + 1L)).toInt
-      }
+    val n = graft.Sizing.packShards(
+      base.agg(coalesce(sum(size(col("__toks"))), lit(0L))).head().getLong(0))
     graft.queries.bucketOrderedN(frame, col("pack_id"), n)
       .write.mode("overwrite").parquet(outDir)
   }

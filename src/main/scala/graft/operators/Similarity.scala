@@ -559,13 +559,8 @@ object Similarity {
     */
   private def clusterGroups(assigned: DataFrame,
       clusterHint: Int): (DataFrame, Int) = {
-    val salt =
-      if (clusterHint <= 0) 1
-      else {
-        val cores = assigned.sparkSession.sparkContext.defaultParallelism
-        math.max(1, math.min(32,
-          math.ceil(2.0 * cores / clusterHint).toInt))
-      }
+    val cores = graft.Sizing.cores(assigned.sparkSession)
+    val salt = graft.Sizing.clusterSalt(clusterHint, cores)
     val base = assigned.filter(col("cluster").isNotNull)
       .select(col("cluster"),
         struct(col("vec_id"), col("embedding")).as("__m"))
@@ -576,18 +571,14 @@ object Similarity {
           .withColumn("__salt", lit(0))
       else {
         // the salt exists because clusters < ~2/core — an explicit
-        // partition COUNT must ride along (the old salted join did the
-        // same): the aggregate would otherwise plan its exchange at
-        // spark.sql.shuffle.partitions, which a bench or small job may
-        // hold well under the core count, capping the very parallelism
-        // the salt buys (measured: 64 salted groups on 8 shuffle
-        // partitions ran the quadratic scan 8-wide on 32 cores). The
-        // repartition's hashpartitioning(cluster, __salt) satisfies the
-        // aggregate's clustering, so this is one exchange, not two.
-        val n = assigned.sparkSession.sparkContext.defaultParallelism
+        // partition COUNT must ride along: the aggregate would otherwise
+        // plan its exchange at spark.sql.shuffle.partitions, which may sit
+        // under the core count the salt is sized for. The repartition's
+        // hashpartitioning(cluster, __salt) satisfies the aggregate's
+        // clustering, so this is one exchange, not two.
         base.withColumn("__salt",
           explode(array((0 until salt).map(lit): _*)))
-          .repartition(n, col("cluster"), col("__salt"))
+          .repartition(cores, col("cluster"), col("__salt"))
           .groupBy(col("cluster"), col("__salt"))
           .agg(collect_list(col("__m")).as("__members"))
       }

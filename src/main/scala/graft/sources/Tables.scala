@@ -42,10 +42,9 @@ object Tables {
     * InMemoryRelation keeps its child's partitioning, which would pin the
     * map side of every downstream stage to a single core. On real
     * multi-file data `maxPartitionBytes` splitting delivers parallelism
-    * natively; here the partition count is sized to the work: `documents`
-    * feeds per-row-heavy text pipelines (tokenize/hash/shingle) and gets
-    * full parallelism, large fact tables get enough partitions to spread
-    * a scan-agg, and small dimensions stay single-partition (local-mode
+    * natively; here [[graft.Sizing.cacheParts]] sizes the count to the
+    * work: `documents` feeds per-row-heavy text pipelines and gets full
+    * parallelism, and small dimensions stay single-partition (local-mode
     * task launch costs ~5 ms each — 32 tasks over 15 k rows is pure
     * overhead).
     */
@@ -83,38 +82,8 @@ object Tables {
     val key = (System.identityHashCode(spark), sfDir, n)
     if (!cached.containsKey(key)) {
       val raw = load(spark, sfDir, n)
-      val par = spark.sparkContext.defaultParallelism
-      // Work-proportional sizing for the tables whose rows are HEAVY to
-      // process, with a rows-per-partition target floored at the old
-      // constant and capped at the core count: at 32 cores the counts
-      // are EXACTLY the pre-r16 constants for every driver SF
-      // (sf0.001-0.1), so bench comparability holds; on a larger corpus
-      // the count follows data size (measured at 10x: the 20k-row
-      // embeddings table landed on ONE partition, serializing the
-      // posexplode centroid pass — embed_outliers 1.04→0.57,
-      // vector_quantize_int8 0.88→0.34; documents at 8 partitions
-      // underfed the tokenize/shingle pipelines — quality_classifier
-      // 0.84→0.54, ngram_docfreq 0.81→0.49). lineitem/orders/events
-      // deliberately KEEP the core-derived constant: a 10x A/B showed
-      // more map partitions LOSES on the aggregate-dominated fact
-      // queries (each extra partition is another partial-aggregate
-      // state for the reduce to merge — agg_quantiles' single
-      // QuantileSummaries merge task went 0.72→1.88 s at 32 partials)
-      // and washes on events.
-      def sized(rowsPerPart: Long, floor: Int): Int =
-        math.max(1, math.max(floor,
-          math.min(par, (raw.count() / rowsPerPart).toInt)))
-      val parts =
-        if (n == "documents") sized(600L, par / 4)
-        else if (n == "lineitem" || n == "orders") math.max(1, par / 4)
-        // events feeds per-row-heavy work (get_json_object, per-user
-        // windows, funnel/retention sequence logic) like documents does —
-        // a plain rows/75k sizing put its ~45k sf0.1 rows on ONE
-        // partition and serialized every events query onto a single core
-        // (measured: scalar_json = one 0.23 s task; 8-way it's ~0.07 s)
-        else if (n == "events") math.max(1, par / 4)
-        else if (n == "embeddings") sized(5000L, 1)
-        else math.max(1, math.min(par / 2, (raw.count() / 75000L).toInt))
+      val parts = graft.Sizing.cacheParts(n, raw.count(),
+        graft.Sizing.cores(spark))
       val df = clusterKey.get(n) match {
         case Some(k) =>
           raw.repartition(parts, org.apache.spark.sql.functions.col(k))
@@ -252,25 +221,24 @@ object Tables {
     * has ≥ parallelism partitions and this is an identity — no shuffle is
     * ever added to a large scan.
     */
-  def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // metadata-only probe: `df.rdd.getNumPartitions` would be exact but
-    // forces a second full physical planning of the query on the driver
-    // (measurable per-query latency); the file count is free and the
-    // single-file case is precisely the one that needs spreading. A
-    // non-file DataFrame reports zero files — provenance unknown, so
-    // leave its partitioning alone (repartitioning an already-wide
-    // in-memory relation would add a gratuitous shuffle).
+  def spread(df: DataFrame): DataFrame =
     // a cached df was already repartitioned by cacheAll — its inputFiles
     // still name the original single parquet file, so check storage first
-    val isCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val nFiles =
-      try df.inputFiles.length
-      catch { case scala.util.control.NonFatal(_) => 0 }
-    if (!isCached && nFiles > 0 && nFiles < math.min(4, target)) df.repartition(target)
-    else df
-  }
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+    else {
+      // metadata-only probe: `df.rdd.getNumPartitions` would be exact but
+      // forces a second full physical planning of the query on the driver
+      // (measurable per-query latency); the file count is free and the
+      // single-file case is precisely the one that needs spreading. A
+      // non-file DataFrame reports zero files — provenance unknown, so
+      // leave its partitioning alone (repartitioning an already-wide
+      // in-memory relation would add a gratuitous shuffle).
+      val nFiles =
+        try df.inputFiles.length
+        catch { case scala.util.control.NonFatal(_) => 0 }
+      graft.Sizing.spreadTo(nFiles, graft.Sizing.cores(df.sparkSession))
+        .fold(df)(n => df.repartition(n))
+    }
 
   /** Schema probe — reference probes cache Parquet with
     * `DESCRIBE SELECT * FROM read_parquet(...)` (views.go:26-56) to discover

@@ -84,7 +84,7 @@ object SinkCompaction {
     */
   def compact(spark: SparkSession, dir: String,
       innerPartitions: Seq[String] = Nil, minSources: Int = 2,
-      targetFiles: Int = 32, staleLeaseMs: Long = leaseMs): Int = {
+      staleLeaseMs: Long = leaseMs): Int = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return 0
@@ -148,12 +148,13 @@ object SinkCompaction {
     val src = spark.read.parquet(dir)
       .filter(col("batch").isin(sources.toSeq: _*))
     // with inner partitions: one writer (= one file) per inner value;
-    // flat sinks: `targetFiles` writers — fewer files is the goal, ONE
-    // file would funnel the whole compacted corpus through one task
+    // flat sinks: writers by the sources' on-disk bytes, a metadata-only
+    // listing
     val clustered =
       if (innerPartitions.nonEmpty)
         src.repartition(innerPartitions.map(col): _*)
-      else src.repartition(targetFiles)
+      else src.repartition(graft.Sizing.compactFiles(sources.toSeq.map(t =>
+        fs.getContentSummary(new Path(root, s"batch=$t")).getLength).sum))
     clustered
       .withColumn("batch", lit(tag))
       .write.mode(SaveMode.Overwrite)

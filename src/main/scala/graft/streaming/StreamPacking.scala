@@ -128,20 +128,12 @@ object StreamPacking {
     val own = new org.apache.hadoop.fs.Path(sinkDir, s"batch=$tag")
     val fs = own.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(own)) { fs.delete(own, true); () }
-    // Output file count follows BATCH SIZE, not the placement scan's
-    // partition count: packPlacement ranges the batch over
-    // defaultParallelism partitions, and writing that layout verbatim
-    // emits up to that many near-empty files PER MICRO-BATCH — a
-    // small-files swamp whose reader pays a parquet-reader init per
-    // split (measured: the placement read-back burned 5.1 s of summed
-    // task time over 32 splits for a 4-batch local sink). `total` (the
-    // batch's token count) is already computed for the ledger, so size
-    // files at ~500k placement-row-tokens each: one file per small
-    // batch, proportional fan-out for a large one. coalesce is narrow
-    // and reduce-only — a batch below one file's worth never shuffles.
-    val files = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, total / 500000L + 1L))
-    shifted.coalesce(files.toInt).withColumn("batch", lit(tag))
+    // file count follows batch size (Sizing.streamPackFiles), not the
+    // placement scan's partition count: writing that layout verbatim
+    // emits up to a core count of near-empty files per micro-batch.
+    // coalesce is narrow and reduce-only — a small batch never shuffles.
+    val files = graft.Sizing.streamPackFiles(total, graft.Sizing.cores(spark))
+    shifted.coalesce(files).withColumn("batch", lit(tag))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch").parquet(sinkDir)

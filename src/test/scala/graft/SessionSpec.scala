@@ -16,20 +16,12 @@ class SessionSpec extends AnyFunSuite {
   }
 
   test("timing layout: the conf Bench has always run, env defaults") {
-    assert(Session.timingConf(8, _ => None).toMap == Map(
+    assert(Session.timingConf(8).toMap == Map(
       "spark.master" -> "local[8]",
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.adaptive.enabled" -> "false",
       "spark.ui.enabled" -> "false"))
-  }
-
-  test("timing layout reads SPARK_GRAFT_SHUFFLE and SPARK_GRAFT_AQE") {
-    val env = Map("SPARK_GRAFT_SHUFFLE" -> "32", "SPARK_GRAFT_AQE" -> "true")
-    val conf = Session.timingConf(4, env.get).toMap
-    assert(conf("spark.sql.shuffle.partitions") == "32")
-    assert(conf("spark.sql.adaptive.enabled") == "true")
-    assert(conf("spark.master") == "local[4]")
   }
 
   test("extras may not override a layout key") {
@@ -76,6 +68,13 @@ class SessionSpec extends AnyFunSuite {
       Seq.fill("addSparkListener\\(".r
         .findAllIn(Files.readString(p)).size)(mainRoot.relativize(p).toString))
     assert(calls == Seq("graft/tools/Profile.scala"))
+  }
+
+  test(".defaultParallelism is read in src/main only by graft/Sizing.scala") {
+    val readers = mainSources.filter(p =>
+      Files.readString(p).contains(".defaultParallelism"))
+      .map(p => mainRoot.relativize(p).toString)
+    assert(readers == Seq("graft/Sizing.scala"))
   }
 
   test("spark.graft.memo.releaseGraceMs is the only spark.graft.* key in src/main") {
