@@ -1,8 +1,12 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.collection.immutable.ListMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ControlFile
 
 /** ETL: normalized input → denormalized Parquet analytics star — the Spark
   * rebuild of `msgvault build-cache` (reference:
@@ -88,25 +92,14 @@ object CacheBuilder {
   final case class SyncState(lastMessageId: Long, schemaVersion: Int,
       lastSyncAtSec: Long)
 
-  private def statePath(dir: String) = Paths.get(dir, "_last_sync.json")
+  /** The sync-state file, also [[graft.operators.StarSubset]]'s
+    * destination-exists witness. */
+  val StateFile = "_last_sync.json"
 
-  def readState(dir: String): Option[SyncState] = {
-    val p = statePath(dir)
-    if (!Files.exists(p)) None
-    else {
-      val s = new String(Files.readAllBytes(p), "UTF-8")
-      // signed: a watermark of Long.MinValue (empty rebuild, no dated
-      // rows ever) must round-trip so a later id-0 row still compares
-      // greater (r13 fifth review round)
-      val id = """"last_message_id"\s*:\s*(-?\d+)""".r
-        .findFirstMatchIn(s).map(_.group(1).toLong)
-      val v = """"schema_version"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(s).map(_.group(1).toInt)
-      val at = """"last_sync_at"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(s).map(_.group(1).toLong)
-      for (i <- id; sv <- v) yield SyncState(i, sv, at.getOrElse(0L))
-    }
-  }
+  def readState(dir: String): Option[SyncState] =
+    ControlFile.readJson(new Path(dir, StateFile)).map(j =>
+      SyncState(j.long("last_message_id"), j.long("schema_version").toInt,
+        j.optLong("last_sync_at").getOrElse(0L)))
 
   /** Test seam: rewind the watermark to replay an increment (the
     * crashed-before-state-write scenario CacheBuilderSpec simulates).
@@ -117,19 +110,20 @@ object CacheBuilder {
   // ------------------------------------------- bounded restore check
 
   private def restoreCheckPath(dir: String) =
-    Paths.get(dir, "_restore_check.json")
+    new Path(dir, "_restore_check.json")
 
   /** Coverage floor of the bounded restore-check chain: every live
     * dated id ≤ this value was proven present in the star by a prior
     * check (or is awaiting one — MinValue before the first).
     */
-  def readRestoreCheckFloor(dir: String): Long = {
-    val p = restoreCheckPath(dir)
-    if (!Files.exists(p)) Long.MinValue
-    else """"covered_to"\s*:\s*(-?\d+)""".r
-      .findFirstMatchIn(new String(Files.readAllBytes(p), "UTF-8"))
-      .map(_.group(1).toLong).getOrElse(Long.MinValue)
-  }
+  def readRestoreCheckFloor(dir: String): Long =
+    ControlFile.readJson(restoreCheckPath(dir))
+      .fold(Long.MinValue)(_.long("covered_to"))
+
+  private[graft] def writeRestoreCheckFloor(dir: String,
+      coveredTo: Long): Unit =
+    ControlFile.publishJson(restoreCheckPath(dir),
+      Map("covered_to" -> coveredTo))
 
   /** Incremental form of the opt-in deep restore check (r13 advice #6):
     * instead of anti-joining the FULL live corpus against the full star
@@ -177,10 +171,7 @@ object CacheBuilder {
           .filter(col("id") > floor).select(col("id"))
         probe.join(starIds, Seq("id"), "left_anti").count()
       }
-    if (restored == 0L)
-      Files.write(restoreCheckPath(outDir),
-        s"""{"covered_to":${st.lastMessageId}}""".getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    if (restored == 0L) writeRestoreCheckFloor(outDir, st.lastMessageId)
     restored
   }
 
@@ -240,15 +231,11 @@ object CacheBuilder {
 
   private def nowSec(): Long = System.currentTimeMillis() / 1000L
 
-  private def writeState(dir: String, st: SyncState): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    Files.write(statePath(dir),
-      (s"""{"last_message_id":${st.lastMessageId},""" +
-        s""""last_sync_at":${st.lastSyncAtSec},""" +
-        s""""schema_version":${st.schemaVersion}}""")
-        .getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
+  private[graft] def writeState(dir: String, st: SyncState): Unit =
+    ControlFile.publishJson(new Path(dir, StateFile), ListMap(
+      "last_message_id" -> st.lastMessageId,
+      "last_sync_at" -> st.lastSyncAtSec,
+      "schema_version" -> st.schemaVersion))
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -264,7 +251,8 @@ object CacheBuilder {
     * (tui.go:197-330) with its deletion legs made EXACT (r13, third
     * review round):
     *
-    *   - no/unparseable/version-mismatched state → full rebuild;
+    *   - no or version-mismatched state → full rebuild (an unparseable
+    *     one fails loudly, naming the file — [[graft.ControlFile]]);
     *   - new DATED ids past the watermark (MAX(id) over
     *     `deleted_from_source_at IS NULL AND sent_at IS NOT NULL`,
     *     tui.go:236-239) → incremental;
@@ -454,13 +442,12 @@ object CacheBuilder {
     */
   def build(spark: SparkSession, input: MsgVault, outDir: String,
       forceFull: Boolean = false): Long = {
-    // whether ANY prior cache exists — a parseable state file of ANY
-    // version, or table files on disk (an operator-deleted/corrupt
-    // state must not turn an emptied-archive rebuild into the eternal
-    // first-build refusal; r13 fifth review round). Kept separately
-    // from `prior` (which forceFull and version mismatches erase) so
-    // the empty-rebuild path can distinguish a FIRST build from an
-    // EMPTIED archive.
+    // whether ANY prior cache exists — a state file of ANY version, or
+    // table files on disk (an operator-deleted state must not turn an
+    // emptied-archive rebuild into the eternal first-build refusal; r13
+    // fifth review round). Kept separately from `prior` (which forceFull
+    // and version mismatches erase) so the empty-rebuild path can
+    // distinguish a FIRST build from an EMPTIED archive.
     val state0 = readState(outDir)
     val hadState =
       state0.isDefined || !missingRequiredParquet(spark, outDir)
@@ -570,8 +557,8 @@ object CacheBuilder {
         }
       // the watermark verbatim — clamping MinValue to 0 would conflate
       // "no dated rows" with "max dated id is 0" and permanently skip
-      // an id-0 row dated later (readState's regex accepts the signed
-      // value; r13 fifth review round)
+      // an id-0 row dated later (the JSON state keeps the signed value;
+      // r13 fifth review round)
       writeState(outDir,
         SyncState(newWatermark, SchemaVersion, buildWatermarkSec))
       return 0L

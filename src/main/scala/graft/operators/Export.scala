@@ -151,18 +151,14 @@ object Export {
       return 0
     }
     val taken = files.collect { case shardName(k) => k.toLong }
-    val pairs: Seq[(String, String)] =
-      if (fs.exists(planPath)) {
+    val pairs: Seq[(String, String)] = graft.ControlFile.read(planPath) match {
+      case Some(text) =>
         // RESUME: replay the recorded assignment for surviving parts.
         // The first line is the ENTRY COUNT — on stores where rename is
         // copy-based (S3A) a truncated plan is reachable, and a plan cut
         // at a line boundary would otherwise parse cleanly and resume
         // with an incomplete record; the count makes truncation loud.
-        val in = fs.open(planPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .filter(_.nonEmpty).toList
-          finally in.close()
+        val lines = text.linesIterator.filter(_.nonEmpty).toList
         require(lines.nonEmpty && lines.head.forall(_.isDigit),
           s"$dir/$RenamePlanName is corrupt (no count header); " +
             "clear the dir and re-export")
@@ -183,7 +179,7 @@ object Export {
             s"(${unknown.take(3).map(_._2).mkString(", ")}…) — a second " +
             "export wrote into this dir; clear it and re-export")
         parts.map(p => (p._2, plan(p._2)))
-      } else {
+      case None =>
         // no plan on disk: only a FRESH pass is assignable — shard files
         // next to plan-less parts cannot be proven to be a crashed
         // single pass rather than a completed pass + a second export
@@ -196,14 +192,9 @@ object Export {
         // publish the plan atomically (tmp + rename) BEFORE any rename:
         // a crash leaves either no plan and no renames, or a replayable
         // record — never an ambiguous partial state
-        val tmp = new org.apache.hadoop.fs.Path(root, RenamePlanName + ".tmp")
-        val out = fs.create(tmp, true)
-        try out.write((s"${ps.size}\n" +
+        graft.ControlFile.publish(planPath, (s"${ps.size}\n" +
           ps.map { case (s0, d0) => s"$s0\t$d0" }.mkString("", "\n", "\n"))
           .getBytes("UTF-8"))
-        finally out.close()
-        if (!fs.rename(tmp, planPath)) throw new IllegalStateException(
-          s"could not publish the rename plan in $dir")
         ps
       }
     if (pairs.size <= 1000) {

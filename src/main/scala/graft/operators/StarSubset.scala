@@ -64,7 +64,7 @@ object StarSubset {
   def copySubset(spark: SparkSession, src: MsgVault, outDir: String,
       rows: Int): Result = {
     require(rows > 0, s"rows must be positive, got $rows")
-    val statePath = new org.apache.hadoop.fs.Path(outDir, "_last_sync.json")
+    val statePath = new org.apache.hadoop.fs.Path(outDir, CacheBuilder.StateFile)
     val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(statePath),
       s"destination archive already exists: $outDir")

@@ -1,8 +1,12 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.collection.immutable.ListMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ControlFile
 
 /** Versioned embedding index with a building→active→retired generation
   * lifecycle (reference: internal/vector/sqlitevec/schema.sql:8-29 +
@@ -29,104 +33,29 @@ object VectorIndex {
   final case class BuildingState(id: Long, model: String, dimension: Int,
       startedAt: String)
 
-  private def metaPath(dir: String) = Paths.get(dir, "_index.json")
-  private def buildingPath(dir: String) = Paths.get(dir, "_building.json")
+  private def metaPath(dir: String) = new Path(dir, "_index.json")
+  private def buildingPath(dir: String) = new Path(dir, "_building.json")
 
-  // string fields round-trip through escape/unescape: a quote or
-  // backslash in a caller-supplied fingerprint/model would otherwise
-  // corrupt the concatenated JSON and shift the reader's parse — a
-  // needsRebuild that never converges
-  private def jsonEscape(v: String): String = v.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  private def jsonUnescape(v: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    while (i < v.length) {
-      if (v(i) == '\\' && i + 1 < v.length) {
-        v(i + 1) match {
-          case '"' => out += '"'; i += 2
-          case '\\' => out += '\\'; i += 2
-          case 'n' => out += '\n'; i += 2
-          case 'r' => out += '\r'; i += 2
-          case 't' => out += '\t'; i += 2
-          case 'u' if i + 6 <= v.length =>
-            out += Integer.parseInt(v.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case other => out += other; i += 2
-        }
-      } else { out += v(i); i += 1 }
-    }
-    out.toString
-  }
-  private def strField(s: String, key: String): Option[String] =
-    (""""""" + key + """"\s*:\s*"((?:[^"\\]|\\.)*)"""").r
-      .findFirstMatchIn(s).map(m => jsonUnescape(m.group(1)))
-  private def numField(s: String, key: String): Option[Long] =
-    (""""""" + key + """"\s*:\s*(\d+)""").r.findFirstMatchIn(s).map(_.group(1).toLong)
+  def readState(dir: String): Option[IndexState] =
+    ControlFile.readJson(metaPath(dir)).map(j =>
+      IndexState(j.long("active"), j.str("fingerprint"),
+        model = j.optStr("model").getOrElse(""),
+        dimension = j.optLong("dimension").getOrElse(0L).toInt,
+        activatedAt = j.optStr("activated_at").getOrElse("")))
 
-  def readState(dir: String): Option[IndexState] = {
-    val p = metaPath(dir)
-    if (!Files.exists(p)) None
-    else {
-      val s = new String(Files.readAllBytes(p), "UTF-8")
-      for (g <- numField(s, "active"); f <- strField(s, "fingerprint"))
-        yield IndexState(g, f,
-          model = strField(s, "model").getOrElse(""),
-          dimension = numField(s, "dimension").getOrElse(0L).toInt,
-          activatedAt = strField(s, "activated_at").getOrElse(""))
-    }
-  }
+  def readBuilding(dir: String): Option[BuildingState] =
+    ControlFile.readJson(buildingPath(dir)).map(j =>
+      BuildingState(j.long("id"),
+        model = j.optStr("model").getOrElse(""),
+        dimension = j.optLong("dimension").getOrElse(0L).toInt,
+        startedAt = j.optStr("started_at").getOrElse("")))
 
-  def readBuilding(dir: String): Option[BuildingState] = {
-    val p = buildingPath(dir)
-    if (!Files.exists(p)) None
-    else {
-      val s = new String(Files.readAllBytes(p), "UTF-8")
-      for (id <- numField(s, "id"))
-        yield BuildingState(id,
-          model = strField(s, "model").getOrElse(""),
-          dimension = numField(s, "dimension").getOrElse(0L).toInt,
-          startedAt = strField(s, "started_at").getOrElse(""))
-    }
-  }
-
-  /** Publish a small state file atomically: write a same-directory tmp,
-    * then rename over the target (ATOMIC_MOVE — POSIX rename replaces
-    * atomically). An in-place TRUNCATE_EXISTING write would let a
-    * concurrent [[readState]] observe an empty/half-written pointer,
-    * spuriously report "no active index", and kick off a redundant full
-    * rebuild — the same tmp+rename discipline the streaming-sink
-    * manifests use.
-    */
-  private val tmpSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private def atomicWrite(target: java.nio.file.Path,
-      bytes: Array[Byte]): Unit = {
-    // pid + in-process counter: two THREADS of one JVM writing state for
-    // the same dir must not share a tmp path — TRUNCATE_EXISTING would
-    // interleave their bytes and one move would publish the torn file
-    val tmp = target.resolveSibling(target.getFileName.toString +
-      s".tmp.${java.lang.ProcessHandle.current().pid()}" +
-      s".${tmpSeq.incrementAndGet()}")
-    Files.write(tmp, bytes,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def writeState(dir: String, st: IndexState): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    atomicWrite(metaPath(dir),
-      (s"""{"active":${st.active},"fingerprint":"${jsonEscape(st.fingerprint)}",""" +
-        s""""model":"${jsonEscape(st.model)}","dimension":${st.dimension},""" +
-        s""""activated_at":"${jsonEscape(st.activatedAt)}"}""").getBytes("UTF-8"))
-  }
+  // published through ControlFile (tmp + rename): an in-place write
+  // would let a concurrent [[readState]] observe a half-written pointer
+  private[graft] def writeState(dir: String, st: IndexState): Unit =
+    ControlFile.publishJson(metaPath(dir), ListMap("active" -> st.active,
+      "fingerprint" -> st.fingerprint, "model" -> st.model,
+      "dimension" -> st.dimension, "activated_at" -> st.activatedAt))
 
   private def nowUtc(): String =
     java.time.format.DateTimeFormatter.ISO_INSTANT.format(
@@ -140,10 +69,8 @@ object VectorIndex {
   def beginGeneration(dir: String, model: String = "",
       dimension: Int = 0): Long = {
     val next = readState(dir).map(_.active + 1).getOrElse(0L)
-    Files.createDirectories(Paths.get(dir))
-    atomicWrite(buildingPath(dir),
-      (s"""{"id":$next,"model":"${jsonEscape(model)}","dimension":$dimension,""" +
-        s""""started_at":"${nowUtc()}"}""").getBytes("UTF-8"))
+    ControlFile.publishJson(buildingPath(dir), ListMap("id" -> next,
+      "model" -> model, "dimension" -> dimension, "started_at" -> nowUtc()))
     next
   }
 
@@ -163,7 +90,7 @@ object VectorIndex {
       model = building.map(_.model).getOrElse(""),
       dimension = building.map(_.dimension).getOrElse(0),
       activatedAt = nowUtc()))
-    Files.deleteIfExists(buildingPath(dir))
+    ControlFile.delete(buildingPath(dir))
     next
   }
 
@@ -294,9 +221,10 @@ object VectorIndex {
     val bld = building.map { b =>
       // progress: rows already written to the building dir (partial
       // cluster output is observable) vs those plus the pending queue
+      val gen = new Path(dir, s"gen=${b.id}")
       val done =
-        if (Files.exists(Paths.get(dir, s"gen=${b.id}")))
-          spark.read.parquet(s"$dir/gen=${b.id}").count()
+        if (gen.getFileSystem(spark.sessionState.newHadoopConf()).exists(gen))
+          spark.read.parquet(gen.toString).count()
         else 0L
       BuildingSummary(b.id, b.model, b.dimension, b.startedAt,
         done = done, total = done + pendingBuilding)

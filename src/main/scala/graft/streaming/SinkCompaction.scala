@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
+import graft.ControlFile
+
 /** Small-files maintenance for the streaming sinks ([[VectorStreaming]]
   * lists, [[DocStreaming]] curated corpus + band sidecar): every drain
   * appends its own `batch=<tag>` partition, so a long-lived stream
@@ -56,7 +58,7 @@ import org.apache.hadoop.fs.Path
   */
 object SinkCompaction {
 
-  private val manifestDirName = "_graft_compactions"
+  private[graft] val manifestDirName = "_graft_compactions"
 
   /** Default stale-maintenance-lease expiry: a lease older than this is
     * presumed crashed and may be stolen. Should exceed the longest
@@ -123,7 +125,7 @@ object SinkCompaction {
 
     // (1) manifest first: from here on, a completed data write makes the
     // sources dead even if their deletes never run
-    writeManifest(fs, root, tag, sources)
+    writeManifest(root, tag, sources)
 
     onPreRewriteCheck()
     // Cheap ownership re-check BEFORE the expensive rewrite: if this
@@ -133,7 +135,7 @@ object SinkCompaction {
     // instead of paying the full rewrite only for the commit-time check
     // below to discard it. The commit-time manifest re-check remains the
     // authoritative guard for steals that land MID-rewrite.
-    if (!leaseStillHeld(fs, root, leaseToken)) {
+    if (!leaseStillHeld(root, leaseToken)) {
       fs.delete(new Path(new Path(root, manifestDirName), s"$tag.json"), false)
       throw new IllegalStateException(
         s"maintenance lease lost before compacting $dir (displaced by a " +
@@ -204,6 +206,22 @@ object SinkCompaction {
         finishInterrupted(fs, root))
   }
 
+  /** Test seam: runs between manifest publication and the pre-rewrite
+    * lease re-check (no-op in production) — the displaced-owner race is
+    * a cross-process timing window a spec cannot hit otherwise.
+    */
+  private[streaming] var onPreRewriteCheck: () => Unit = () => ()
+
+  /** Does the lease path still hold OUR token? Cheap re-verification an
+    * owner runs before expensive work: if a stealer displaced us (stale
+    * judgment + failed tombstone rename-back), abort early instead of
+    * paying a full rewrite the commit-time manifest check would discard.
+    */
+  private def leaseStillHeld(root: Path, token: String): Boolean =
+    ControlFile.read(
+      new Path(new Path(root, manifestDirName), "_MAINTENANCE_LEASE"))
+      .contains(token)
+
   /** Exclusive maintenance lease: create-no-overwrite of a lease file
     * under the manifest dir. Single-writer create is atomic on HDFS; on
     * the local FS, Hadoop's create(overwrite=false) is exists-then-create
@@ -217,36 +235,6 @@ object SinkCompaction {
     * N concurrent stealers exactly one wins and re-acquires; delete+
     * re-create would let a slow stealer remove the winner's FRESH lease.
     */
-  private def fileContent(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): Option[String] =
-    try {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](256)
-        var n = in.read(tmp)
-        while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        Some(new String(buf.toByteArray, "UTF-8"))
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-
-  /** Test seam: runs between manifest publication and the pre-rewrite
-    * lease re-check (no-op in production) — the displaced-owner race is
-    * a cross-process timing window a spec cannot hit otherwise.
-    */
-  private[streaming] var onPreRewriteCheck: () => Unit = () => ()
-
-  /** Does the lease path still hold OUR token? Cheap re-verification an
-    * owner runs before expensive work: if a stealer displaced us (stale
-    * judgment + failed tombstone rename-back), abort early instead of
-    * paying a full rewrite the commit-time manifest check would discard.
-    */
-  private def leaseStillHeld(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, token: String): Boolean =
-    fileContent(fs,
-      new Path(new Path(root, manifestDirName), "_MAINTENANCE_LEASE"))
-      .contains(token)
-
   private def withMaintenanceLease[T](fs: org.apache.hadoop.fs.FileSystem,
       root: Path, staleMs: Long = leaseMs)(body: String => T): T = {
     val mdir = new Path(root, manifestDirName)
@@ -258,7 +246,6 @@ object SinkCompaction {
     // else's fresh lease by the time we act on it
     val myToken = s"${ProcessHandle.current().pid()} " +
       s"${System.currentTimeMillis()} ${System.nanoTime()}"
-    def content(p: Path): Option[String] = fileContent(fs, p)
     def tryAcquire(): Boolean =
       try {
         if (isLocal) {
@@ -283,7 +270,7 @@ object SinkCompaction {
       // that replaced the stale one between our stat and our rename is
       // detected instead of silently displaced (the TOCTOU that would
       // mint two concurrent owners)
-      val observed = content(lease)
+      val observed = ControlFile.read(lease)
       val stale =
         try System.currentTimeMillis() -
           fs.getFileStatus(lease).getModificationTime > staleMs
@@ -298,7 +285,7 @@ object SinkCompaction {
         val won = try fs.rename(lease, tombstone)
           catch { case _: java.io.IOException => false }
         if (won) {
-          if (content(tombstone) == observed) {
+          if (ControlFile.read(tombstone) == observed) {
             fs.delete(tombstone, false)
             acquired = tryAcquire()
           } else {
@@ -323,7 +310,9 @@ object SinkCompaction {
       // release ONLY our own lease: if ours expired and was stolen
       // mid-body, the path now holds the stealer's FRESH lease — an
       // unconditional delete would reopen the double-owner door
-      if (content(lease).contains(myToken)) { fs.delete(lease, false); () }
+      if (ControlFile.read(lease).contains(myToken)) {
+        fs.delete(lease, false); ()
+      }
     }
   }
 
@@ -395,7 +384,7 @@ object SinkCompaction {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
       .map { s =>
         val tag = s.getPath.getName.stripSuffix(".json")
-        (tag, readManifest(fs, s.getPath),
+        (tag, readManifest(s.getPath),
           fs.exists(new Path(root, s"batch=$tag/$doneMarker")))
       }
       .sortBy(_._1)
@@ -442,7 +431,7 @@ object SinkCompaction {
           // manifest outliving its purpose would shadow any FUTURE
           // batch that happened to mint a colliding tag, silently and
           // forever
-          val sources = readManifest(fs, s.getPath)
+          val sources = readManifest(s.getPath)
           sources.foreach(src =>
             fs.delete(new Path(root, s"batch=$src"), true))
           if (sources.forall(src => !fs.exists(new Path(root, s"batch=$src"))))
@@ -456,26 +445,15 @@ object SinkCompaction {
       }
   }
 
-  // manifest format: one JSON array of source tag strings — parsed with
-  // a tolerant hand parser to avoid a JSON dependency (tags are
-  // [A-Za-z0-9-]+ by construction: uuid fragments and batch ids)
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, tag: String, sources: Set[String]): Unit = {
-    val mdir = new Path(root, manifestDirName)
-    fs.mkdirs(mdir)
-    val body = sources.toSeq.sorted
-      .map(s => "\"" + s + "\"").mkString("[", ",", "]")
-    val tmp = new Path(mdir, s".$tag.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, new Path(mdir, s"$tag.json")))
-      throw new IllegalStateException(
-        s"could not publish compaction manifest for $tag under $mdir")
-  }
+  // manifest format: one JSON array of source tag strings
+  private[graft] def writeManifest(root: Path, tag: String,
+      sources: Set[String]): Unit =
+    ControlFile.publishJson(
+      new Path(new Path(root, manifestDirName), s"$tag.json"),
+      sources.toSeq.sorted)
 
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: Path): Seq[String] =
-    HadoopIo.readUtf8(fs, path)
-      .split("[\\[\\],]").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
+  // a manifest retired between the listing and this read has no sources:
+  // the listing's second scan in [[read]] sees it gone and retries
+  private[graft] def readManifest(path: Path): Seq[String] =
+    ControlFile.readJson(path).fold(Seq.empty[String])(_.strings)
 }

@@ -1,11 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.collection.immutable.ListMap
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ControlFile
 import graft.operators.Packing
 
 /** Streaming INCREMENTAL packing — the continuous-ingest twin of
@@ -39,29 +41,21 @@ import graft.operators.Packing
   */
 object StreamPacking {
 
-  private def ledgerPath(dir: String) = Paths.get(dir, "_pack_offsets.json")
+  private def ledgerPath(dir: String) = new Path(dir, "_pack_offsets.json")
 
   /** The per-batch offset ledger: ordinal → (base, after). */
-  private[graft] def readLedger(dir: String): Map[Long, (Long, Long)] = {
-    val p = ledgerPath(dir)
-    if (!Files.exists(p)) Map.empty
-    else {
-      val s = new String(Files.readAllBytes(p), "UTF-8")
-      """"(\d+)"\s*:\s*\{\s*"base"\s*:\s*(-?\d+)\s*,\s*"after"\s*:\s*(-?\d+)\s*\}""".r
-        .findAllMatchIn(s)
-        .map(m => m.group(1).toLong -> (m.group(2).toLong, m.group(3).toLong))
-        .toMap
-    }
-  }
+  private[graft] def readLedger(dir: String): Map[Long, (Long, Long)] =
+    ControlFile.readJson(ledgerPath(dir)).fold(Map.empty[Long, (Long, Long)])(
+      j => j.entries.map { case (k, e) =>
+        k.toLongOption.getOrElse(j.fail(s"ordinal '$k'")) ->
+          (e.long("base"), e.long("after"))
+      }.toMap)
 
-  private def writeLedger(dir: String, m: Map[Long, (Long, Long)]): Unit = {
-    val body = m.toSeq.sortBy(_._1).map { case (k, (b, a)) =>
-      s""""$k": {"base": $b, "after": $a}"""
-    }.mkString("{", ", ", "}")
-    Files.createDirectories(Paths.get(dir))
-    Files.write(ledgerPath(dir), body.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
+  private[graft] def writeLedger(dir: String, m: Map[Long, (Long, Long)]): Unit =
+    ControlFile.publishJson(ledgerPath(dir), ListMap(
+      m.toSeq.sortBy(_._1).map { case (k, (b, a)) =>
+        k.toString -> ListMap("base" -> b, "after" -> a)
+      }: _*))
 
   /** Drain every unconsumed document shard in `srcDir`, appending each
     * batch's placement rows (doc_id, n_tokens, tok_offset, pack_first,

@@ -118,9 +118,7 @@ object VectorStreaming {
     // the marker can VANISH between an exists() and the read (a racer
     // deleting a legacy empty marker) — that is a retry condition for
     // the loop below, not a crash
-    def read(): Option[String] =
-      try Some(HadoopIo.readUtf8(fs, marker).trim)
-      catch { case _: java.io.FileNotFoundException => None }
+    def read(): Option[String] = graft.ControlFile.read(marker).map(_.trim)
     // Write-then-RENAME, never create-in-place: a crash between a direct
     // create and its write would leave a permanent zero-byte marker
     // (identity "" forever — and shared by every other crashed

@@ -77,6 +77,21 @@ class SessionSpec extends AnyFunSuite {
     assert(readers == Seq("graft/Sizing.scala"))
   }
 
+  test("only graft/ControlFile.scala reads or publishes control files") {
+    // the retired recipes: in-place truncating writes, java.nio slurps,
+    // java.nio atomic moves and the streaming sinks' own reader
+    val recipes = Seq("TRUNCATE_EXISTING", "Files.readAllBytes",
+      "ATOMIC_MOVE", "HadoopIo")
+    val users = mainSources.filter(p =>
+      recipes.exists(Files.readString(p).contains))
+      .map(p => mainRoot.relativize(p).toString).sorted
+    assert(users.isEmpty)
+    val publishers = mainSources.filter(p =>
+      Files.readString(p).contains("Options.Rename.OVERWRITE"))
+      .map(p => mainRoot.relativize(p).toString)
+    assert(publishers == Seq("graft/ControlFile.scala"))
+  }
+
   test("spark.graft.memo.releaseGraceMs is the only spark.graft.* key in src/main") {
     // a new key must update this set AND the README's runtime
     // configuration table

@@ -141,6 +141,25 @@ class SinkCompactionSpec extends SparkTestBase {
     assert(SinkCompaction.read(spark, dir).count() == 150)
   }
 
+  test("a crashed publish's tmp and .crc files stay out of every listing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cmpt").toString
+    writeBatches(dir, Seq("s-b0", "s-b1", "s-b2"))
+    val mdir = new java.io.File(s"$dir/_graft_compactions")
+    mdir.mkdirs()
+    // a publish cut between its tmp write and its rename, with the
+    // sidecars a checksummed FS leaves, in the manifest dir and the root
+    Seq(s"$mdir/.compact-x.json.7-1.tmp", s"$dir/._pack_offsets.json.7-2.tmp")
+      .foreach(f => java.nio.file.Files.write(java.nio.file.Paths.get(f),
+        "[\"s-b0\"".getBytes("UTF-8")))
+    Seq(s"$mdir/..compact-x.json.7-1.tmp.crc", s"$mdir/.compact-y.json.crc")
+      .foreach(f => java.nio.file.Files.write(java.nio.file.Paths.get(f),
+        Array[Byte](1, 2, 3)))
+    assert(spark.read.parquet(dir).count() == 150)
+    assert(SinkCompaction.read(spark, dir).count() == 150)
+    assert(SinkCompaction.compact(spark, dir) == 2)
+    assert(SinkCompaction.read(spark, dir).count() == 150)
+  }
+
   test("maintenance is single-owner: a live lease excludes compact/reclaim") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cmpl").toString
     writeBatches(dir, Seq("s-b0", "s-b1", "s-b2"))
