@@ -43,46 +43,23 @@ object IvfIndex {
     * is sorted for a stable centroid order), assign every vector to its
     * max-cosine centroid. `assigned` carries (vec_id, embedding, cluster).
     *
-    * `rProbe` (opt-in, 0 = exact flat default — same contract as
-    * [[Similarity.semanticAssignHierarchical]]): route the assignment
-    * through the two-level coarse structure. Flat assignment is
-    * O(n·nList) — quadratic overall in the documented regime where
-    * nList ∝ corpus keeps mean list size flat (the r11 100× probe
-    * measured ~30×/decade at 200k × 2000); routing drops per-row work to
-    * O(rProbe·√nList). `rProbe = ⌈√nList⌉` reproduces flat bit-for-bit;
-    * smaller rProbe is the standard IVF build-side approximation
-    * (a boundary vector may land in a neighboring list, costing probe
-    * recall, never wrong scores — search re-ranks with exact cosines).
+    * `rProbe` (opt-in, 0 = exact flat default — [[Similarity.assign]]'s
+    * contract): route the assignment through the two-level coarse
+    * structure. Flat assignment is O(n·nList) — quadratic overall in the
+    * documented regime where nList ∝ corpus keeps mean list size flat
+    * (the r11 100× probe measured ~30×/decade at 200k × 2000); routing
+    * drops per-row work to O(rProbe·√nList). `rProbe ≥ ⌈√nList⌉`
+    * reproduces flat bit-for-bit; smaller rProbe is the standard IVF
+    * build-side approximation (a boundary vector may land in a
+    * neighboring list, costing probe recall, never wrong scores — search
+    * re-ranks with exact cosines).
     */
   def build(emb: DataFrame, id: Column, vec: Column, nList: Int,
       rProbe: Int = 0): Index = {
     val base = emb.select(id.as("vec_id"), vec.as("embedding"))
     val centroids = Similarity.centroidSampleBy(base, nList)(stride =>
       pmod(xxhash64(col("vec_id")), lit(stride)))
-    val assigned =
-      if (rProbe > 0) Similarity.assignRouted(base, centroids, rProbe)
-      else assign(base, centroids)
-    Index(centroids, assigned)
-  }
-
-  /** Nearest-centroid assignment: per-row argmax of cosine over the
-    * centroid literals — `greatest(struct(score, idx))` picks the max
-    * score (ties → higher idx, deterministic). No shuffle; one scan.
-    */
-  private[operators] def assign(base: DataFrame,
-      centroids: Seq[Seq[Float]]): DataFrame = {
-    // ONE expression evaluation per row (TopCentroids), not an
-    // nList-wide greatest(struct(cosine…)) tree: the flat tree exceeds
-    // the codegen/JIT method budget once nList grows with the corpus and
-    // drops the projection to interpreted tree-walking — measured 70×
-    // slower at nList=160 (see TopCentroids scaladoc). Ranking/tie
-    // semantics are bit-identical (s desc, centroid id desc).
-    val cluster =
-      if (centroids.length == 1) lit(0)
-      else element_at(
-        org.apache.spark.sql.graft.TopCentroids(col("embedding"), centroids, 1),
-        1)
-    base.withColumn("cluster", cluster)
+    Index(centroids, Similarity.assign(base, centroids, rProbe = rProbe))
   }
 
   /** Probe-and-re-rank search: rank centroids by cosine to the query
@@ -99,7 +76,7 @@ object IvfIndex {
     */
   def searchAssigned(assigned: DataFrame, centroids: Seq[Seq[Float]],
       query: Seq[Float], k: Int, nProbe: Int): DataFrame = {
-    // tie-break must MATCH assignment: greatest(struct) sends an exact
+    // tie-break must MATCH assignment: TopCentroids sends an exact
     // cosine tie to the HIGHER centroid index, so the probe ranking
     // prefers -i too — ranking the lower duplicate first would probe an
     // EMPTY list and miss every tied vector at small nProbe.

@@ -282,72 +282,61 @@ object Similarity {
     *
     * Scale shape: centroid pick is a bounded `limit(nList).collect()`
     * (≤ nList rows on the driver); assignment is one scan with no shuffle
-    * ([[IvfIndex.assign]]); the pair stage shuffles on `cluster` once and
+    * ([[assign]]); the pair stage shuffles on `cluster` once and
     * is quadratic only WITHIN a cluster, so `nList` must grow with the
     * corpus to hold the mean cluster size (≈ n/nList) at the budget — the
     * same knob as the paper's k. Centroids here are an md5-stride sample
     * over the ids (id-structure-immune AND cross-engine reproducible,
-    * hence oracle-able — see [[semanticAssign]]); a deployment can swap
+    * hence oracle-able — see [[strideCentroids]]); a deployment can swap
     * in MLlib KMeans without touching the pair stage.
     */
   def semanticDedup(emb: DataFrame, id: Column, vec: Column,
-      nList: Int, eps: Double, hashStride: Boolean = true): DataFrame =
-    semanticDupes(semanticAssign(emb, id, vec, nList, hashStride), eps,
+      nList: Int, eps: Double): DataFrame =
+    semanticDupes(semanticAssign(emb, id, vec, nList), eps,
       clusterHint = nList)
 
   /** The build-once half of [[semanticDedup]]: centroid pick + cluster
-    * assignment → a (cluster, vec_id, embedding) relation. This is the
+    * assignment → a (vec_id, embedding, cluster) relation. This is the
     * persistent artifact of the pipeline (the paper's k-means pass) —
     * callers memoize/persist it and run [[semanticDupes]] per snapshot,
     * the same build-once/probe-many split as the LSH and IVF indexes.
+    * Exactly `assign(base, strideCentroids(base, nList))`.
+    */
+  def semanticAssign(emb: DataFrame, id: Column, vec: Column,
+      nList: Int): DataFrame = {
+    val base = emb.select(id.as("vec_id"), vec.as("embedding"))
+    assign(base, strideCentroids(base, nList))
+  }
+
+  /** Deterministic ~`nList`-centroid sample behind [[semanticAssign]];
+    * ≤ nList rows reach the driver. Public because the centroid set is
+    * the FROZEN half of an incremental index: build it from the indexed
+    * corpus once, then [[assign]] each fresh shard against it without
+    * touching the existing lists. `base` must carry (vec_id, embedding)
+    * columns.
     *
-    * `hashStride` (default): centroid candidates are rows whose md5 id
-    * draw ([[Sampling.hashBucket]]'s recipe — cross-engine replayable,
-    * unlike xxhash64) lands on the stride. A plain `id % stride` pick is
-    * NOT structure-immune: production ids carry block structure (shard
+    * Centroid candidates are rows whose md5 id draw
+    * ([[Sampling.hashBucket]]'s recipe — cross-engine replayable, unlike
+    * xxhash64) lands on the stride. A plain `id % stride` pick is NOT
+    * structure-immune: production ids carry block structure (shard
     * offsets, snowflake epochs), and any common factor between the block
     * size and the stride collapses the centroid set — measured on the
     * 20× replicated corpus (BASELINE.md "Scale probe"; ids shifted by
-    * 1 M per copy, stride 125):
-    * 16 distinct centroids out of 320, mean cluster 2 500 instead of
-    * 125, and the quadratic within-cluster pair stage blew up 20×.
-    * `hashStride = false` keeps the dense-id mod pick for hand-built
-    * fixtures where WHICH rows seed the clusters must be predictable.
+    * 1 M per copy, stride 125): 16 distinct centroids out of 320, mean
+    * cluster 2 500 instead of 125, and the quadratic within-cluster pair
+    * stage blew up 20×. A fixture that must control WHICH rows seed the
+    * clusters passes its centroids to [[assign]] directly.
     */
-  // Flat assignment is O(n·nList) — quadratic overall once nList grows
-  // with the corpus (the r11 100× probe measured ~30×/decade at 200k ×
-  // 2000). It stays the DEFAULT because it is exact and the hash-gated
-  // contract; at web scale switch to [[semanticAssignHierarchical]]
-  // explicitly — an approximation (bounded recall loss on cluster-
-  // boundary vectors) must be the caller's informed choice, not a
-  // silent default flip.
-  def semanticAssign(emb: DataFrame, id: Column, vec: Column,
-      nList: Int, hashStride: Boolean = true): DataFrame = {
-    val base = emb.select(id.as("vec_id"), vec.as("embedding"))
-    IvfIndex.assign(base, strideCentroids(base, nList, hashStride))
-  }
-
-  /** Deterministic ~`nList`-centroid sample shared by [[semanticAssign]]
-    * and [[semanticAssignMulti]]; ≤ nList rows reach the driver. Public
-    * because the centroid set is the FROZEN half of an incremental
-    * index: build it from the indexed corpus once, then [[assignTo]]
-    * each fresh shard against it without touching the existing lists.
-    * `base` must carry (vec_id, embedding) columns.
-    */
-  def strideCentroids(base: DataFrame, nList: Int,
-      hashStride: Boolean = true): Seq[Seq[Float]] =
-    centroidSampleBy(base, nList) { stride =>
-      // the ONE cross-engine stable draw (Sampling.hashBucket) — never
-      // inline a second copy of the md5 recipe here, or a recipe fix
-      // breaks the replay guarantee between samplers and centroid picks
-      if (hashStride) Sampling.hashBucket(col("vec_id"), stride)
-      else pmod(col("vec_id"), lit(stride))
-    }
+  def strideCentroids(base: DataFrame, nList: Int): Seq[Seq[Float]] =
+    // the ONE cross-engine stable draw (Sampling.hashBucket) — never
+    // inline a second copy of the md5 recipe here, or a recipe fix
+    // breaks the replay guarantee between samplers and centroid picks
+    centroidSampleBy(base, nList)(Sampling.hashBucket(col("vec_id"), _))
 
   /** The one stride-sample pipeline behind every centroid pick
-    * ([[strideCentroids]]'s md5/dense draws, [[IvfIndex.build]]'s
-    * xxhash64 draw): filter on the caller's stride draw, stabilize order
-    * by id, bound the driver collect at nList rows.
+    * ([[strideCentroids]]'s md5 draw, [[IvfIndex.build]]'s xxhash64
+    * draw): filter on the caller's stride draw, stabilize order by id,
+    * bound the driver collect at nList rows.
     */
   private[operators] def centroidSampleBy(base: DataFrame, nList: Int)(
       drawOf: Long => Column): Seq[Seq[Float]] = {
@@ -366,143 +355,58 @@ object Similarity {
     centroids
   }
 
-  /** Nearest-centroid assignment against a FROZEN centroid set — the
-    * incremental-maintenance half of the coarse index: a daily shard of
-    * fresh vectors is one narrow scan (no shuffle, no index rebuild,
-    * existing lists untouched), appended to its lists' partitions. Same
-    * argmax + tie-break as [[semanticAssign]], so incremental and
-    * from-scratch assignment agree row-for-row given the same centroids.
-    */
-  def assignTo(emb: DataFrame, id: Column, vec: Column,
-      centroids: Seq[Seq[Float]]): DataFrame =
-    IvfIndex.assign(emb.select(id.as("vec_id"), vec.as("embedding")),
-      centroids)
-
-  /** Top-p centroid multi-assignment — the recall lever for cluster-
-    * bucketed pair generation ([[knnGraph]], [[semanticDupes]]): each
-    * vector lands in its p highest-cosine centroid lists instead of one,
-    * so neighbors split across a single-assignment boundary still meet
-    * in some shared list. Classic IVF build-side multi-probe: storage
-    * and pair fan-out scale by p, recall loss shrinks roughly
-    * geometrically. Ranking and tie-breaks ([s desc, then HIGHER
-    * centroid id] — `reverse(array_sort)` over (s, i) structs) match
-    * [[semanticAssign]]'s `greatest(struct)` exactly, so p=1 reproduces
-    * the single-assignment relation bit-for-bit.
-    */
-  def semanticAssignMulti(emb: DataFrame, id: Column, vec: Column,
-      nList: Int, p: Int, hashStride: Boolean = true): DataFrame = {
-    require(p >= 1 && p <= nList, s"p ($p) must be in [1, nList=$nList]")
-    val base = emb.select(id.as("vec_id"), vec.as("embedding"))
-    val centroids = strideCentroids(base, nList, hashStride)
-    // strideCentroids may return FEWER than nList centroids (corpus
-    // smaller than the stride allows); with p > the actual count, slice()
-    // would silently emit fewer than p assignments per vector — degrade
-    // loudly instead of quietly breaking the stated contract
-    require(p <= centroids.length,
-      s"p ($p) exceeds the ${centroids.length} centroids actually " +
-        s"derived (requested nList=$nList; corpus too small?)")
-    // one TopCentroids evaluation per row (was: reverse(array_sort) over
-    // an nList-wide struct array — the same interpreted-fallback trap as
-    // the single-assignment greatest() form; identical ranking:
-    // [s desc, HIGHER centroid id on ties])
-    base.select(col("vec_id"), col("embedding"),
-      explode(org.apache.spark.sql.graft.TopCentroids(
-        col("embedding"), centroids, p)).as("cluster"))
-  }
-
-  /** Hierarchical (two-level, IVF-of-centroids) assignment — the
-    * 100 TB scale path for the SemDeDup/knn-graph family. The documented
-    * contract grows nList ∝ corpus to hold the mean cluster size flat,
-    * which makes FLAT assignment O(n·nList) = quadratic overall: the r11
-    * 100× probe measured ~30× per decade at 200k × 2000 centroids
-    * (18.7 s, i.e. ~2000 s one decade later; BASELINE r11 batch 3). Routing through a
-    * √nList-sized coarse level ([[org.apache.spark.sql.graft.RoutedCentroids]])
-    * drops per-row work to O(rProbe·√nList): each vector ranks the
-    * coarse sample, then argmaxes only the top-`rProbe` groups' member
-    * centroids. `rProbe = nCoarse` reproduces the flat argmax
-    * bit-for-bit (same (score desc, index desc) rule at every level);
-    * smaller rProbe is the standard IVF recall trade — a vector near a
-    * group boundary may land in a neighboring cluster, which for
-    * SemDeDup/knn-graph costs recall (a missed pair), never wrong pairs
-    * (the ε-ball verify still computes exact cosines).
+  /** THE vector → cluster assignment, against a FROZEN centroid set:
+    * every (vec_id, embedding) row of `base` lands in its `p` highest-
+    * cosine centroid lists, one output row per list — (vec_id,
+    * embedding, cluster). One narrow scan, no shuffle: the build step of
+    * [[IvfIndex.build]], SemDeDup and the knn graph, and the incremental
+    * step that appends a fresh shard to an existing index (same ranking
+    * as a from-scratch build, so the two agree row for row given the
+    * same centroids).
     *
-    * Everything is deterministic and engine-replayable: the coarse
-    * sample is an index stride over the centroid list, member routing
-    * is the same argmax run driver-side, and the expression's
-    * arithmetic is [[org.apache.spark.sql.graft.CosineSimilarity]]'s
-    * exact index-order fold.
+    * Ranking is one [[org.apache.spark.sql.graft.TopCentroids]]
+    * evaluation per row: (cosine desc, HIGHER centroid id on ties).
+    *  - `p` ∈ [1, centroids.length]; p > 1 is the recall lever for
+    *    cluster-bucketed pair generation ([[knnGraph]],
+    *    [[semanticDupes]]): neighbors split across a
+    *    single-assignment boundary still meet in some shared list;
+    *    storage and pair fan-out scale by p. The top-p prefix does not
+    *    depend on p, so p = 1 is each vector's argmax.
+    *  - `0 < rProbe < nCoarse` (nCoarse = ⌈√nList⌉, see
+    *    [[routedStructure]]) routes each row through the two-level
+    *    coarse structure: it ranks the coarse rows, then only the
+    *    top-`rProbe` groups' member centroids — O(rProbe·√nList) per row
+    *    instead of O(nList), the scale path once nList ∝ corpus (the
+    *    r11 100× probe measured flat at ~30×/decade at 200k × 2000). A
+    *    vector near a group boundary may land in a neighboring list,
+    *    which costs SemDeDup/knn-graph recall, never wrong pairs. Every
+    *    other rProbe runs the flat kernel: probing all groups reproduces
+    *    the flat ranking bit for bit, at a higher cost.
+    *
+    * A row that gets no cluster — a NULL embedding, or a routed row
+    * whose probed groups are all member-empty — is dropped, in every
+    * cell; a routed row whose probed groups hold fewer than p members
+    * emits only those. Both match the SQL replays' `assigned` CTEs
+    * (an inner join on `rn <= p`).
     */
-  def semanticAssignHierarchical(emb: DataFrame, id: Column, vec: Column,
-      nList: Int, rProbe: Int = 4, hashStride: Boolean = true): DataFrame = {
-    val base = emb.select(id.as("vec_id"), vec.as("embedding"))
-    assignRouted(base, strideCentroids(base, nList, hashStride), rProbe)
-  }
-
-  /** The routed-assignment core over a FROZEN centroid set (the
-    * incremental hook, mirroring [[assignTo]]): coarse level = every
-    * ⌈nList/√nList⌉-th centroid of the list; each centroid routed
-    * driver-side to its nearest coarse row ((s desc, idx desc), the
-    * expression's exact rule — nList·√nList driver cosines, trivial);
-    * per-row assignment via one [[org.apache.spark.sql.graft.RoutedCentroids]]
-    * evaluation. `rProbe` clamps to the coarse count.
-    */
-  def assignRouted(base: DataFrame, centroids: Seq[Seq[Float]],
-      rProbe: Int): DataFrame = {
-    val rs = routedStructure(centroids)
-    // get() (null on out-of-bounds), not element_at: if every probed
-    // group is member-empty (possible only under duplicated coarse
-    // vectors) the expression now yields an EMPTY array — where
-    // element_at would raise under ANSI mode. The unassignable row is
-    // then DROPPED (cluster IS NOT NULL), so the relation's cardinality
-    // matches the SQL replay's `assigned` CTE exactly (an inner join on
-    // the argmax row): a consumer counting assigned rows sees the same
-    // number either way, not a phantom NULL-cluster row.
-    base.withColumn("cluster",
-      get(org.apache.spark.sql.graft.RoutedCentroids(
-        col("embedding"), rs.cents, rs.coarse, rs.members,
-        rs.clampProbe(rProbe), 1),
-        lit(0)))
-      .filter(col("cluster").isNotNull)
-  }
-
-  /** Top-p ROUTED multi-assignment — [[semanticAssignMulti]]'s build-side
-    * recall lever at [[assignRouted]]'s O(rProbe·√nList) per-row cost,
-    * for the regime where BOTH knobs grow (nList ∝ corpus for bounded
-    * lists, p > 1 for pair recall). Ranking rule is identical at every
-    * level ((score desc, index desc)); `rProbe = nCoarse` reproduces
-    * [[semanticAssignMulti]] bit-for-bit. May emit FEWER than p rows for
-    * a vector when its probed groups hold fewer than p member centroids
-    * — the routed analogue of semanticAssignMulti's p ≤ nList guard,
-    * and exactly what the SQL replay's `rn <= p` yields.
-    */
-  def assignRoutedMulti(base: DataFrame, centroids: Seq[Seq[Float]],
-      rProbe: Int, p: Int): DataFrame = {
-    require(p >= 1 && p <= centroids.length,
-      s"p ($p) must be in [1, ${centroids.length}]")
-    val rs = routedStructure(centroids)
+  def assign(base: DataFrame, centroids: Seq[Seq[Float]], p: Int = 1,
+      rProbe: Int = 0): DataFrame = {
+    val routing =
+      if (rProbe <= 0) None
+      else Some(routedStructure(centroids)).filter(rProbe < _.coarse.length)
+        .map(rs => org.apache.spark.sql.graft.TopCentroids.Routing(
+          rs.coarse, rs.members, rProbe))
+    // explode drops NULL and empty results itself. A get(…, 0) projection
+    // plus a `cluster IS NOT NULL` filter would run the kernel twice per
+    // row: Catalyst pushes the filter below the projection with the
+    // expression inlined (8k × 160: ~290 ms vs ~200 ms, 4 cores).
     base.select(col("vec_id"), col("embedding"),
-      explode(org.apache.spark.sql.graft.RoutedCentroids(
-        col("embedding"), rs.cents, rs.coarse, rs.members,
-        rs.clampProbe(rProbe), p))
-        .as("cluster"))
-  }
-
-  /** [[semanticAssignMulti]] through the two-level router — the
-    * multi-assign twin of [[semanticAssignHierarchical]].
-    */
-  def semanticAssignMultiRouted(emb: DataFrame, id: Column, vec: Column,
-      nList: Int, p: Int, rProbe: Int,
-      hashStride: Boolean = true): DataFrame = {
-    val base = emb.select(id.as("vec_id"), vec.as("embedding"))
-    val centroids = strideCentroids(base, nList, hashStride)
-    require(p <= centroids.length,
-      s"p ($p) exceeds the ${centroids.length} centroids actually " +
-        s"derived (requested nList=$nList; corpus too small?)")
-    assignRoutedMulti(base, centroids, rProbe, p)
+      explode(org.apache.spark.sql.graft.TopCentroids(col("embedding"),
+        centroids, p, routing)).as("cluster"))
   }
 
   /** The two-level routing structure shared by every routed consumer
-    * ([[assignRouted]], [[assignRoutedMulti]],
+    * ([[assign]] at `0 < rProbe < nCoarse`,
     * [[IvfIndex.searchAssignedRouted]]'s driver-side probe ranking):
     * coarse = every ⌈nList/⌈√nList⌉⌉-th centroid (first ⌈√nList⌉ of the
     * index order); each centroid routed driver-side to its nearest
@@ -663,7 +567,7 @@ object Similarity {
       .select(col("__c.vec_id").as("vec_id"),
         col("__c.neighbor_id").as("neighbor_id"),
         col("__c.cosine").as("cosine"))
-    // a multi-assigned relation ([[semanticAssignMulti]]) emits a shared
+    // a multi-assigned relation ([[assign]] at p > 1) emits a shared
     // neighbor once per shared list (identical cosine — same embeddings,
     // same fold) — without the dedup it would occupy several of the k
     // rank slots. The explicit repartition(vec_id) makes the dedup and

@@ -714,7 +714,7 @@ object DocQueries {
       |ORDER BY ${duckBucket("dup_id")}, dup_id ASC""".stripMargin
 
   /** SemDeDup over the ROUTED (two-level) assignment — the O(n·√nList)
-    * scale path ([[Similarity.assignRouted]]) the r11 100× probe
+    * scale path ([[Similarity.assign]] at rProbe = 2) the r11 100× probe
     * motivated (flat assignment kneed at ~25-30×/decade with nList ∝
     * corpus; routed runs the same leg 3.6× faster at 200k×2000 —
     * 17.4 → 4.84 s, decade ratio 7.1 vs 25.4, per the r13 re-measure
@@ -730,8 +730,8 @@ object DocQueries {
     val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     bucketOrdered(
       Similarity.semanticDupes(
-        Similarity.assignRouted(base,
-          Similarity.strideCentroids(base, 16), rProbe = 2),
+        Similarity.assign(base, Similarity.strideCentroids(base, 16),
+          rProbe = 2),
         eps = 0.33, clusterHint = 16),
       col("dup_id"))
   }

@@ -155,7 +155,7 @@ object EmbedQueries {
        |ORDER BY vec_id ASC, rnk ASC""".stripMargin
 
   /** knn graph over a ROUTED top-p multi-assignment
-    * ([[Similarity.semanticAssignMultiRouted]] — both scale levers at
+    * ([[Similarity.assign]] at p = 2, rProbe = 2 — both scale levers at
     * once: p = 2 for pair recall, two-level routing for the
     * nList ∝ corpus assignment knee). The oracle replays BOTH routing
     * levels AND the top-p cut in SQL (duckRoutedAssignedCtes at
@@ -174,9 +174,9 @@ object EmbedQueries {
     */
   private def routedAssigned(s: SparkSession, dir: String): DataFrame =
     memoizedIndex(s, dir, "routed_assign_16_p2_r2") {
-      val a = Similarity.semanticAssignMultiRouted(
-        t(s, dir, "embeddings"), col("vec_id"),
-        col("embedding"), nList = 16, p = 2, rProbe = 2)
+      val base = t(s, dir, "embeddings")
+      val a = Similarity.assign(base, Similarity.strideCentroids(base, 16),
+        p = 2, rProbe = 2)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       a.count()
       a
@@ -279,8 +279,7 @@ object EmbedQueries {
           .select(col("vec_id"), col("embedding")), nList = 16)
     }
     bucketOrdered(
-      Similarity.assignTo(emb.filter(col("vec_id") % 7 === 0),
-        col("vec_id"), col("embedding"), cents)
+      Similarity.assign(emb.filter(col("vec_id") % 7 === 0), cents)
         .select(col("vec_id"), col("cluster")),
       col("vec_id"))
   }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{MsgEngine, MsgVault}
 import graft.model._
@@ -930,24 +930,33 @@ object FacadeQueries {
       graft.functions.Mime.deflateUdf(
         encode(concat(lit("Subject: s\r\n\r\n"), col("text")), "utf-8"))
         .as("raw_data"))
+    engine(s, dir).messageDetail(44L, bodies, Some(raw))
+      .select(Seq(col("id"), col("subject"), col("snippet"), col("sent_at"),
+        col("message_type"), col("size_estimate")) ++ detailLists ++
+        Seq(col("body_text"), col("body_html")): _*)
+  }
+
+  /** The detail pivot's list columns serialized to scalars (the compare
+    * layer hashes scalars only), shared by every detail entry:
+    * from/to/cc parties as `email|name` joined by `;`, attachments as
+    * `id:filename:mime:size:hash` joined by `;`, labels joined by `,` —
+    * a NULL list serializes as ''.
+    */
+  private[queries] def detailLists: Seq[Column] = {
     def party(c: String) = array_join(
       transform(coalesce(col(c), array().cast(
         "array<struct<email:string,name:string>>")),
         x => concat_ws("|", x.getField("email"), x.getField("name"))), ";")
-    engine(s, dir).messageDetail(44L, bodies, Some(raw))
-      .select(col("id"), col("subject"), col("snippet"), col("sent_at"),
-        col("message_type"), col("size_estimate"),
-        party("from").as("from_list"), party("to").as("to_list"),
-        party("cc").as("cc_list"),
-        array_join(transform(coalesce(col("attachments"), array().cast(
-          "array<struct<id:bigint,filename:string,mime_type:string,size:bigint,content_hash:string>>")),
-          a => concat_ws(":", a.getField("id").cast("string"),
-            a.getField("filename"), a.getField("mime_type"),
-            a.getField("size").cast("string"), a.getField("content_hash"))),
-          ";").as("att_list"),
-        array_join(coalesce(col("labels"), array().cast("array<string>")),
-          ",").as("labels"),
-        col("body_text"), col("body_html"))
+    Seq(party("from").as("from_list"), party("to").as("to_list"),
+      party("cc").as("cc_list"),
+      array_join(transform(coalesce(col("attachments"), array().cast(
+        "array<struct<id:bigint,filename:string,mime_type:string,size:bigint,content_hash:string>>")),
+        a => concat_ws(":", a.getField("id").cast("string"),
+          a.getField("filename"), a.getField("mime_type"),
+          a.getField("size").cast("string"), a.getField("content_hash"))),
+        ";").as("att_list"),
+      array_join(coalesce(col("labels"), array().cast("array<string>")),
+        ",").as("labels"))
   }
 
   val messageDetailSql: String =

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -72,11 +72,6 @@ object PointLookupQueries {
 
   // --- GetMessageBySourceID (engine.go:28, duckdb.go:1412-1422) -------------
 
-  private def party(c: String): Column = array_join(
-    transform(coalesce(col(c), array().cast(
-      "array<struct<email:string,name:string>>")),
-      x => concat_ws("|", x.getField("email"), x.getField("name"))), ";")
-
   /** Source-id point lookup: 'sm-77' resolves to live id 77; 'sm-97'
     * resolves to a dedup-deleted message (97 % 97 = 0) and must yield
     * NO row — the "lowest live id wins" rule's deleted_at filter is
@@ -89,19 +84,9 @@ object PointLookupQueries {
     val e = engine(s, dir)
     e.messageDetailBySourceId("sm-77")
       .unionByName(e.messageDetailBySourceId("sm-97"))
-      .select(col("id"), col("source_message_id"), col("subject"),
+      .select(Seq(col("id"), col("source_message_id"), col("subject"),
         col("snippet"), col("sent_at"), col("message_type"),
-        col("size_estimate"),
-        party("from").as("from_list"), party("to").as("to_list"),
-        party("cc").as("cc_list"),
-        array_join(transform(coalesce(col("attachments"), array().cast(
-          "array<struct<id:bigint,filename:string,mime_type:string,size:bigint,content_hash:string>>")),
-          a => concat_ws(":", a.getField("id").cast("string"),
-            a.getField("filename"), a.getField("mime_type"),
-            a.getField("size").cast("string"), a.getField("content_hash"))),
-          ";").as("att_list"),
-        array_join(coalesce(col("labels"), array().cast("array<string>")),
-          ",").as("labels"))
+        col("size_estimate")) ++ FacadeQueries.detailLists: _*)
       .orderBy(col("id").asc)
   }
 

@@ -217,7 +217,8 @@ package object queries {
 
   /** [[duckCentsCtes]] + the argmax assignment replay of
     * [[graft.operators.Similarity.semanticAssign]] (ties → higher cid,
-    * matching `greatest(struct)`), ending in an `assigned` CTE.
+    * matching [[graft.operators.Similarity.assign]]), ending in an
+    * `assigned` CTE.
     */
   private[queries] def duckAssignedCtes(src: String): String =
     s"""${duckCentsCtes(src)},
@@ -232,16 +233,16 @@ package object queries {
        |  WHERE rn = 1)""".stripMargin
 
   /** [[duckCentsCtes]] + the TWO-LEVEL assignment replay of
-    * [[graft.operators.Similarity.assignRouted]], ending in an
-    * `assigned` CTE: coarse = every ⌈m/⌈√m⌉⌉-th centroid of the cid
-    * order (first ⌈√m⌉ of them), each centroid routed to its nearest
+    * [[graft.operators.Similarity.assign]] at `0 < rProbe < ⌈√m⌉`,
+    * ending in an `assigned` CTE: coarse = every ⌈m/⌈√m⌉⌉-th centroid of
+    * the cid order (first ⌈√m⌉ of them), each centroid routed to its nearest
     * coarse row (ties → higher gid — the expression's exact rule), each
     * vector probing its top-`rProbe` coarse groups and argmaxing only
     * their members (ties → higher cid). Every level replays the Scala
     * side bit-for-bit, so the hash gate certifies the APPROXIMATION
     * path itself, not just its verified outputs.
     *
-    * `p` (default 1) replays [[graft.operators.Similarity.assignRoutedMulti]]:
+    * `p` (default 1) replays [[graft.operators.Similarity.assign]]'s `p`:
     * the `assigned` CTE keeps each vector's top-p probed-member centroids
     * instead of the argmax — and, like the expression's truncated output,
     * naturally yields FEWER than p rows when the probed groups hold

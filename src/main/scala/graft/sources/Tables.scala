@@ -152,9 +152,10 @@ object Tables {
     * lazily, and there is no per-read DataFrameReader option for it) — so
     * a plain set→read→restore would blow up at action time. Instead the
     * frame is EAGERLY materialized (`localCheckpoint`) while the conf is
-    * set, severing the plan from the conf-dependent scan, and the conf is
-    * restored in a finally. Memoized per (session, path): the checkpoint
-    * job must run once, not per `load` call.
+    * set ([[withNanosConf]]), severing the plan from the conf-dependent
+    * scan, and the conf is restored at the scope's exit. Memoized per
+    * (session, path): the checkpoint job must run once, not per `load`
+    * call.
     *
     * The eager read is a deliberate compatibility-shim cost: the legacy
     * NANOS encoding only appears in driver-regenerated testdata, never on
@@ -166,17 +167,58 @@ object Tables {
     val key = (System.identityHashCode(spark), path)
     val hit = legacyNanos.get(key)
     if (hit != null) return hit
-    val conf = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(conf)
-    spark.conf.set(conf, "true")
     val df =
-      try spark.read.parquet(path).localCheckpoint(true)
-      finally prior match {
-        case Some(v) => spark.conf.set(conf, v)
-        case None => spark.conf.unset(conf)
-      }
+      withNanosConf(spark)(spark.read.parquet(path).localCheckpoint(true))
     val prev = legacyNanos.putIfAbsent(key, df)
     if (prev != null) prev else df
+  }
+
+  /** Run `f` with the legacy-nanos parquet conf set, restoring the prior
+    * value at the scope's exit: a session-wide leak would silently change
+    * how every LATER TIMESTAMP(NANOS) read in the session behaves. The
+    * one owner of `spark.sql.legacy.parquet.nanosAsLong` — the batch
+    * loader ([[legacyNanosRead]]) and the streaming drains
+    * ([[graft.streaming.EventsStreaming]]) both scope it here.
+    */
+  // Reentrancy/concurrency guard: two overlapping scopes in one session
+  // (two drains, or a drain overlapping a legacy batch load) must not
+  // clobber each other's restore — a naive save/set/restore pair entered
+  // twice captures prev="true" on the inner entry and leaves the legacy
+  // flag set for every later read in the session. A per-session refcount
+  // makes the scope reentrant: only the OUTERMOST entry captures the
+  // prior value, only the LAST exit restores it. A concurrent UNRELATED
+  // parquet read in the same session still observes the flipped conf
+  // while a scope holds it (the conf is session-global by nature) — a
+  // caller needing full isolation runs on spark.newSession(), which
+  // shares the context but not the SQLConf.
+  // keyed by SESSION REFERENCE (IdentityHashMap), never by
+  // identityHashCode alone: two live sessions can share an identity
+  // hash, and a shared scope entry would skip setting the flag on the
+  // second session (its read fails) and restore the wrong session's
+  // prior value. Entries are removed at the last exit, so the strong
+  // key reference does not pin stopped sessions.
+  private val nanosScopes =
+    new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]()
+
+  private[graft] def withNanosConf[T](spark: SparkSession)(f: => T): T = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    nanosScopes.synchronized {
+      val cur = nanosScopes.get(spark)
+      if (cur == null) {
+        nanosScopes.put(spark, (1, spark.conf.getOption(key)))
+        spark.conf.set(key, "true")
+      } else nanosScopes.put(spark, (cur._1 + 1, cur._2))
+    }
+    try f finally nanosScopes.synchronized {
+      val (n, prev) = nanosScopes.get(spark)
+      if (n <= 1) {
+        nanosScopes.remove(spark)
+        prev match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
+      } else nanosScopes.put(spark, (n - 1, prev))
+    }
   }
 
   /** EXACT epoch-ns → epoch-µs for long columns: decimal FLOOR division,

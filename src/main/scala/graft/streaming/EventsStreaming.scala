@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.sources.Tables.withNanosConf
 
 /** Structured-Streaming surface over the `events` table. The reference has
   * no true streams — its incremental pattern is a watermark-batched ETL
@@ -22,54 +23,6 @@ object EventsStreaming {
     */
   private val probedSchemas = new java.util.concurrent.ConcurrentHashMap[
     (Int, String, String), org.apache.spark.sql.types.StructType]()
-
-  /** Run `f` with the legacy-nanos parquet conf set, restoring the prior
-    * value in a finally: a session-wide leak would silently change how
-    * every LATER TIMESTAMP(NANOS) read in the session behaves
-    * ([[graft.sources.Tables]]' batch loader pays real complexity to
-    * avoid exactly that leak — the streaming path must not reintroduce
-    * it).
-    */
-  // Reentrancy/concurrency guard for the scope below: two overlapping
-  // drains in one session (or a drain overlapping probeSchema's
-  // fallback) must not clobber each other's restore — a naive
-  // save/set/restore pair entered twice captures prev="true" on the
-  // inner entry and leaves the legacy flag set for every later read in
-  // the session. A per-session refcount makes the scope reentrant: only
-  // the OUTERMOST entry captures the prior value, only the LAST exit
-  // restores it. A concurrent UNRELATED parquet read in the same session
-  // still observes the flipped conf while a drain holds it (the conf is
-  // session-global by nature) — a caller needing full isolation drains
-  // on spark.newSession(), which shares the context but not the SQLConf.
-  // keyed by SESSION REFERENCE (IdentityHashMap), never by
-  // identityHashCode alone: two live sessions can share an identity
-  // hash, and a shared scope entry would skip setting the flag on the
-  // second session (its drain misreads) and restore the wrong session's
-  // prior value. Entries are removed at the last exit, so the strong
-  // key reference does not pin stopped sessions.
-  private val nanosScopes =
-    new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]()
-
-  private[streaming] def withNanosConf[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    nanosScopes.synchronized {
-      val cur = nanosScopes.get(spark)
-      if (cur == null) {
-        nanosScopes.put(spark, (1, spark.conf.getOption(key)))
-        spark.conf.set(key, "true")
-      } else nanosScopes.put(spark, (cur._1 + 1, cur._2))
-    }
-    try f finally nanosScopes.synchronized {
-      val (n, prev) = nanosScopes.get(spark)
-      if (n <= 1) {
-        nanosScopes.remove(spark)
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      } else nanosScopes.put(spark, (n - 1, prev))
-    }
-  }
 
   /** One footer probe per (session, dir, CONTENT fingerprint): the
     * attribution join builds TWO branches of the same directory, and on a

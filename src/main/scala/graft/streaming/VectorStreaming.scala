@@ -13,7 +13,7 @@ import graft.operators.Similarity
   *
   * Fresh embedding shards land as parquet files in a drop directory;
   * each micro-batch is assigned against the ACTIVE generation's FROZEN
-  * centroids ([[Similarity.assignTo]] — one narrow scan, no shuffle
+  * centroids ([[Similarity.assign]] — one narrow scan, no shuffle
   * beyond the per-list write clustering) and appended into the inverted
   * lists' hive partitions ([[graft.operators.IvfIndex.writeLists]]
   * layout, so probe queries keep pruning to nProbe/nList of the data as
@@ -86,8 +86,7 @@ object VectorStreaming {
         // own batch=<tag>-b<id> partitions and OVERWRITE them (dynamic
         // mode), or the lists would accumulate duplicate vectors;
         // cluster stays a partition column below it, so probes still prune
-        Similarity.assignTo(batch, col("vec_id"), col("embedding"),
-          centroids)
+        Similarity.assign(batch, centroids)
           .withColumn("batch", lit(s"$streamTag-b$batchId"))
           .repartition(col("cluster")) // one writer per list, no small files
           .write.mode(SaveMode.Overwrite)

@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Top-p nearest centroids by cosine, over a FROZEN centroid matrix, in
-  * ONE expression evaluation per row.
+  * ONE expression evaluation per row — flat, or routed through a
+  * two-level coarse structure.
   *
   * Why this exists: the straightforward assignment formulation —
   * `greatest(struct(cosine(v, lit(c₀)), 0), …, struct(cosine(v, lit(c₁₅₉)),
@@ -25,6 +26,17 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   * JIT-compiled Scala regardless of expression-tree size. Measured ~70×
   * on the 20 k × 160 assignment (16.6 s → 0.24 s).
   *
+  * `routing` (optional) is the O(n·√nList) scale path: the flat loop is
+  * still O(nList) per row, and the SemDeDup/knn-graph contract grows
+  * nList ∝ corpus to hold the mean cluster size flat, so flat assignment
+  * is O(n²/b) overall — the r11 100× probe measured ~30× per decade at
+  * 200k × 2000 centroids (18.7 s; ~2000 s at the next decade — BASELINE
+  * r11 batch 3). A routed row ranks the coarse level first (classic
+  * IVF-of-centroids), then only the top-`rProbe` groups' member
+  * centroids ([[topKRouted]]). Probing every group degenerates to the
+  * exact flat argmax, so the caller (Similarity.assign) passes a routing
+  * only when rProbe is below the coarse count.
+  *
   * Semantics are bit-identical to the greatest/array_sort formulations it
   * replaces (both rank by (s desc, centroid-id desc), nulls losing to any
   * real score — struct comparison treats a null field as smallest):
@@ -33,17 +45,27 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
   *    mismatch, or null element makes that score null;
   *  - result = the p centroid indexes ranked by (score desc, index desc),
   *    null scores ranked below all real scores (and among themselves by
-  *    index desc) — exactly `reverse(array_sort(structs))` order;
+  *    index desc) — exactly `reverse(array_sort(structs))` order; the
+  *    routed kernel applies the same rule at both levels;
   *  - a NULL input vector yields NULL (the one divergence from the
   *    greatest() form, which manufactured cluster nList−1 out of an
-  *    all-null struct comparison — an accident, not a contract; no data
-  *    path feeds null embeddings to assignment).
+  *    all-null struct comparison — an accident, not a contract);
+  *  - a routed row whose probed groups hold fewer than p members yields
+  *    only those (an empty array when every probed group is empty).
   */
 case class TopCentroids(child: Expression, centroids: Array[Array[Float]],
-    p: Int) extends UnaryExpression with ExpectsInputTypes {
+    p: Int, routing: Option[TopCentroids.Routing])
+    extends UnaryExpression with ExpectsInputTypes {
   require(centroids.nonEmpty, "centroids must be non-empty")
   require(p >= 1 && p <= centroids.length,
     s"p ($p) must be in [1, ${centroids.length}]")
+  routing.foreach { r =>
+    require(r.coarse.nonEmpty, "coarse matrix must be non-empty")
+    require(r.members.length == r.coarse.length,
+      s"members (${r.members.length}) must map 1:1 to coarse (${r.coarse.length})")
+    require(r.rProbe >= 1 && r.rProbe <= r.coarse.length,
+      s"rProbe (${r.rProbe}) must be in [1, ${r.coarse.length}]")
+  }
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType)
 
@@ -66,17 +88,32 @@ case class TopCentroids(child: Expression, centroids: Array[Array[Float]],
 
   @transient private lazy val norms2: Array[Double] =
     TopCentroids.norms2Of(centroids)
+  @transient private lazy val coarseNorms2: Array[Double] =
+    routing.map(r => TopCentroids.norms2Of(r.coarse)).orNull
 
-  override def nullSafeEval(v: Any): Any =
-    TopCentroids.topK(v.asInstanceOf[ArrayData], centroids, norms2, p,
-      isFloatElems)
+  override def nullSafeEval(v: Any): Any = routing match {
+    case None =>
+      TopCentroids.topK(v.asInstanceOf[ArrayData], centroids, norms2, p,
+        isFloatElems)
+    case Some(r) =>
+      TopCentroids.topKRouted(v.asInstanceOf[ArrayData], centroids, norms2,
+        r.coarse, coarseNorms2, r.members, r.rProbe, p, isFloatElems)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
     val norms = ctx.addReferenceObj("centroidNorms2", norms2, "double[]")
+    val (kernel, args) = routing match {
+      case None => ("topK", s"$cents, $norms, $p, $isFloatElems")
+      case Some(r) =>
+        val crs = ctx.addReferenceObj("coarse", r.coarse, "float[][]")
+        val crsN = ctx.addReferenceObj("coarseNorms2", coarseNorms2, "double[]")
+        val mem = ctx.addReferenceObj("members", r.members, "int[][]")
+        ("topKRouted",
+          s"$cents, $norms, $crs, $crsN, $mem, ${r.rProbe}, $p, $isFloatElems")
+    }
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.TopCentroids.topK(" +
-        s"$a, $cents, $norms, $p, $isFloatElems);")
+      s"${ev.value} = org.apache.spark.sql.graft.TopCentroids.$kernel($a, $args);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): TopCentroids =
@@ -85,99 +122,19 @@ case class TopCentroids(child: Expression, centroids: Array[Array[Float]],
   override def prettyName: String = "top_centroids"
 }
 
-/** Two-level (routed) top-p nearest centroids — the O(n·√nList) scale
-  * path for assignments whose nList grows with the corpus.
-  *
-  * Why this exists: [[TopCentroids]] made per-row assignment a single
-  * compiled loop, but the loop is still O(nList) per row — and the
-  * SemDeDup/knn-graph contract grows nList ∝ corpus to hold the mean
-  * cluster size flat, so flat assignment is O(n²/b) overall. The r11
-  * 100× probe measured the knee: ~30× per decade at 200k × 2000
-  * centroids (18.7 s; ~2000 s at the next decade — BASELINE r11 batch 3). This expression
-  * routes each row through a coarse level first (classic IVF-of-
-  * centroids): argmax over `coarse` (√nList rows), then argmax over
-  * only the routed groups' member centroids — O(rProbe·√nList) per
-  * row. With `rProbe = coarse.length` it degenerates to the exact flat
-  * argmax (bit-identical ranking rule); smaller rProbe is the standard
-  * IVF recall trade, deterministic and engine-replayable either way.
-  *
-  * Ranking rule everywhere (stage 1, stage 2, and the driver-side
-  * member routing in Similarity.assignRouted): (score desc, index
-  * desc), null/zero-norm scores below everything — [[TopCentroids]]'s
-  * exact semantics, expressed order-independently so cross-group
-  * iteration order cannot change ties.
-  */
-case class RoutedCentroids(child: Expression,
-    centroids: Array[Array[Float]], coarse: Array[Array[Float]],
-    members: Array[Array[Int]], rProbe: Int, p: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  require(centroids.nonEmpty && coarse.nonEmpty, "centroid matrices non-empty")
-  require(members.length == coarse.length,
-    s"members (${members.length}) must map 1:1 to coarse (${coarse.length})")
-  require(rProbe >= 1 && rProbe <= coarse.length,
-    s"rProbe ($rProbe) must be in [1, ${coarse.length}]")
-  require(p >= 1 && p <= centroids.length,
-    s"p ($p) must be in [1, ${centroids.length}]")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType)
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"routed_centroids requires array<float|double>, got ${other.catalogString}")
-    }
-
-  private def isFloatElems: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  @transient private lazy val norms2: Array[Double] =
-    TopCentroids.norms2Of(centroids)
-  @transient private lazy val coarseNorms2: Array[Double] =
-    TopCentroids.norms2Of(coarse)
-
-  override def nullSafeEval(v: Any): Any =
-    TopCentroids.topKRouted(v.asInstanceOf[ArrayData], centroids, norms2,
-      coarse, coarseNorms2, members, rProbe, p, isFloatElems)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    val norms = ctx.addReferenceObj("centroidNorms2", norms2, "double[]")
-    val crs = ctx.addReferenceObj("coarse", coarse, "float[][]")
-    val crsN = ctx.addReferenceObj("coarseNorms2", coarseNorms2, "double[]")
-    val mem = ctx.addReferenceObj("members", members, "int[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = org.apache.spark.sql.graft.TopCentroids.topKRouted(" +
-        s"$a, $cents, $norms, $crs, $crsN, $mem, $rProbe, $p, $isFloatElems);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RoutedCentroids =
-    copy(child = newChild)
-
-  override def prettyName: String = "routed_centroids"
-}
-
-object RoutedCentroids {
-  /** Column-API entry point. */
-  def apply(vec: Column, centroids: Array[Array[Float]],
-      coarse: Array[Array[Float]], members: Array[Array[Int]],
-      rProbe: Int, p: Int): Column =
-    ExpressionUtils.column(RoutedCentroids(ExpressionUtils.expression(vec),
-      centroids, coarse, members, rProbe, p))
-}
-
 object TopCentroids {
+  /** The two-level structure a routed row probes: `coarse` rows, each
+    * owning the centroid indexes in `members` (1:1 with `coarse`), and
+    * the per-row probe budget `rProbe` in [1, coarse.length].
+    */
+  final case class Routing(coarse: Array[Array[Float]],
+      members: Array[Array[Int]], rProbe: Int)
+
   /** Column-API entry point. */
-  def apply(vec: Column, centroids: Seq[Seq[Float]], p: Int): Column =
+  def apply(vec: Column, centroids: Seq[Seq[Float]], p: Int,
+      routing: Option[Routing] = None): Column =
     ExpressionUtils.column(TopCentroids(ExpressionUtils.expression(vec),
-      centroids.map(_.toArray).toArray, p))
+      centroids.map(_.toArray).toArray, p, routing))
 
   /** ‖c‖² per centroid, folded in index order — the same accumulation the
     * per-pair cosine performed, hoisted out of the row loop.
@@ -255,7 +212,7 @@ object TopCentroids {
     UnsafeArrayData.fromPrimitiveArray(bestI)
   }
 
-  /** Two-level top-p for one row (see [[RoutedCentroids]]): rank the
+  /** Two-level top-p for one row (see [[Routing]]): rank the
     * coarse level, then score only the top-rProbe groups' member
     * centroids. Unlike [[topK]]'s scan-order `>=` trick, the insertion
     * rule here is the EXPLICIT lexicographic (score desc, index desc) —

@@ -92,6 +92,23 @@ class SessionSpec extends AnyFunSuite {
     assert(publishers == Seq("graft/ControlFile.scala"))
   }
 
+  test("Similarity.assign is the one centroid-assignment path in src/main") {
+    // the retired per-cell functions, the routed expression twin and the
+    // dense-id centroid pick switch
+    val retired = Seq("RoutedCentroids", "assignTo", "assignRouted",
+      "semanticAssignMulti", "semanticAssignHierarchical", "hashStride")
+    val users = mainSources.filter(p =>
+      retired.exists(Files.readString(p).contains))
+      .map(p => mainRoot.relativize(p).toString).sorted
+    assert(users.isEmpty)
+    val definition = "org/apache/spark/sql/graft/TopCentroids.scala"
+    val constructors = mainSources.filter(p =>
+      Files.readString(p).contains("TopCentroids("))
+      .map(p => mainRoot.relativize(p).toString)
+      .filter(_ != definition)
+    assert(constructors == Seq("graft/operators/Similarity.scala"))
+  }
+
   test("spark.graft.memo.releaseGraceMs is the only spark.graft.* key in src/main") {
     // a new key must update this set AND the README's runtime
     // configuration table

@@ -244,7 +244,7 @@ class OperatorsSpec extends SparkTestBase {
     val cents = Seq(Seq(1.0f, 0.0f), Seq(1.0f, 0.0f))
     val emb = Seq((1L, Seq(0.9f, 0.1f)), (2L, Seq(1.0f, 0.05f)))
       .toDF("vec_id", "embedding")
-    val assigned = Similarity.assignTo(emb, col("vec_id"), col("embedding"), cents)
+    val assigned = Similarity.assign(emb, cents)
     assert(assigned.select(col("cluster")).distinct().collect()
       .map(_.getInt(0)).toSeq == Seq(1))
     val hits = IvfIndex.searchAssigned(assigned, cents,
@@ -278,17 +278,18 @@ class OperatorsSpec extends SparkTestBase {
       (5L, Seq(0.0f, 0.3f, 0.9f, 0.0f)),
       (6L, Seq(0.2f, 0.0f, 0.8f, -0.4f)),
       (7L, Seq(0.0f, 0.0f, 0.7f, 0.7f))).toDF("vec_id", "embedding")
-    // hashStride=false: the fixture PLANTS which ids seed the clusters
-    val pruned = Similarity.semanticDedup(emb, col("vec_id"),
-      col("embedding"), nList = 2, eps = 0.99, hashStride = false).collect()
+    // the fixture PLANTS which ids seed the clusters: ids 0 and 4
+    val seeds = Seq(Seq(1.0f, 0.05f, 0.0f, 0.0f), Seq(0.0f, 0.0f, 1.0f, 0.05f))
+    def dedup(eps: Double) = Similarity.semanticDupes(
+      Similarity.assign(emb, seeds), eps, clusterHint = 2)
+    val pruned = dedup(0.99).collect()
     assert(pruned.length == 1)
     assert(pruned.head.getAs[Long]("dup_id") == 3L)
     assert(pruned.head.getAs[Long]("kept_id") == 1L)
     assert(pruned.head.getAs[Long]("cluster") == 0L)
     assert(pruned.head.getAs[Double]("max_cosine") > 0.999)
     // a threshold no cosine can exceed prunes nothing
-    assert(Similarity.semanticDedup(emb, col("vec_id"), col("embedding"),
-      nList = 2, eps = 1.01, hashStride = false).isEmpty)
+    assert(dedup(1.01).isEmpty)
   }
 
   test("knnGraph: within-cluster top-k matches local brute force, no self/cross pairs") {
@@ -301,8 +302,8 @@ class OperatorsSpec extends SparkTestBase {
       (5L, Seq(0.0f, 0.3f, 0.9f, 0.0f)),
       (6L, Seq(0.2f, 0.0f, 0.8f, -0.4f)),
       (7L, Seq(0.0f, 0.0f, 0.7f, 0.7f))).toDF("vec_id", "embedding")
-    val assigned = Similarity.semanticAssign(emb, col("vec_id"),
-      col("embedding"), nList = 2, hashStride = false)
+    val assigned = Similarity.assign(emb,
+      Seq(Seq(1.0f, 0.05f, 0.0f, 0.0f), Seq(0.0f, 0.0f, 1.0f, 0.05f)))
     val got = Similarity.knnGraph(assigned, k = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     // local replay: same cluster, cosineLocal ranking, same tie-breaks
@@ -334,12 +335,13 @@ class OperatorsSpec extends SparkTestBase {
     val embN = spark.range(4).crossJoin(emb1)
       .select((col("id") * 1000000 + col("vec_id")).as("vec_id"),
         col("embedding"))
-    def distinctClusters(hashStride: Boolean): Long =
-      Similarity.semanticAssign(embN, col("vec_id"), col("embedding"),
-        nList = 16, hashStride = hashStride)
-        .select(col("cluster")).distinct().count()
-    val dense = distinctClusters(false)
-    val hashed = distinctClusters(true)
+    def distinctClusters(assigned: org.apache.spark.sql.DataFrame): Long =
+      assigned.select(col("cluster")).distinct().count()
+    // the dense-id mod pick, spelled out: pmod(vec_id, stride) == 0
+    val dense = distinctClusters(Similarity.assign(embN,
+      Similarity.centroidSampleBy(embN, 16)(s => pmod(col("vec_id"), lit(s)))))
+    val hashed = distinctClusters(Similarity.semanticAssign(embN,
+      col("vec_id"), col("embedding"), nList = 16))
     assert(dense <= 6, s"fixture no longer triggers the collapse ($dense)")
     assert(hashed >= 10, s"hash stride still collapsed: $hashed clusters")
   }
@@ -348,7 +350,7 @@ class OperatorsSpec extends SparkTestBase {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.strideCentroids(
       emb.select(col("vec_id"), col("embedding")), nList = 16)
-    val inc = Similarity.assignTo(emb, col("vec_id"), col("embedding"), cents)
+    val inc = Similarity.assign(emb, cents)
       .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     val scratch = Similarity.semanticAssign(emb, col("vec_id"),
@@ -364,14 +366,14 @@ class OperatorsSpec extends SparkTestBase {
       col("embedding"), nList = 16)
       .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val multi1 = Similarity.semanticAssignMulti(emb, col("vec_id"),
-      col("embedding"), nList = 16, p = 1)
+    val base = emb.select(col("vec_id"), col("embedding"))
+    val cents = Similarity.strideCentroids(base, nList = 16)
+    val multi1 = Similarity.assign(base, cents, p = 1)
       .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(multi1 == single) // same ranking + tie-breaks by construction
     // p=2 emits exactly two DISTINCT lists per vector
-    val multi2 = Similarity.semanticAssignMulti(emb, col("vec_id"),
-      col("embedding"), nList = 16, p = 2)
+    val multi2 = Similarity.assign(base, cents, p = 2)
       .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getInt(1)))
     assert(multi2.groupBy(_._1).values.forall(_.toSet.size == 2))
@@ -384,8 +386,7 @@ class OperatorsSpec extends SparkTestBase {
         .sortBy { case (nid, c) => (-c, nid) }.take(5).map(_._1).toSet
     }.toMap
     def recall(p: Int): Double = {
-      val assigned = Similarity.semanticAssignMulti(emb, col("vec_id"),
-        col("embedding"), nList = 16, p = p)
+      val assigned = Similarity.assign(base, cents, p = p)
       val got = Similarity.knnGraph(assigned, k = 5, dedupCandidates = true)
         .collect().map(r => (r.getLong(0), r.getLong(2)))
         .groupBy(_._1).map { case (id, xs) => id -> xs.map(_._2).toSet }
@@ -465,8 +466,8 @@ class OperatorsSpec extends SparkTestBase {
       (i, Seq((math.cos(i * 0.37)).toFloat, (math.sin(i * 0.37)).toFloat,
         ((i % 7).toFloat) / 7.0f, ((i % 3).toFloat) / 3.0f)))
       .toDF("vec_id", "embedding")
-    val assigned = Similarity.semanticAssignMulti(emb, col("vec_id"),
-      col("embedding"), nList = 4, p = 2)
+    val assigned = Similarity.assign(emb,
+      Similarity.strideCentroids(emb, nList = 4), p = 2)
     def rows(hint: Int) = Similarity.knnGraph(assigned, k = 3,
       dedupCandidates = true, clusterHint = hint)
       .collect().map(r =>
@@ -522,8 +523,9 @@ class OperatorsSpec extends SparkTestBase {
       (2L, Seq(0.1f, -0.4f, 0.9f)), (3L, Seq(0.0f, 0.8f, 0.6f)),
       (4L, Seq(-0.7f, 0.1f, 0.7f)), (5L, Seq(0.3f, 0.3f, 0.9f)))
       .toDF("vec_id", "embedding")
-    val assigned = Similarity.semanticAssignMulti(emb, col("vec_id"),
-      col("embedding"), nList = 2, p = 2, hashStride = false)
+    // planted seeds (ids 0 and 3); p = 2 puts every vector in both lists
+    val assigned = Similarity.assign(emb,
+      Seq(Seq(1.0f, 0.05f, 0.0f), Seq(0.0f, 0.8f, 0.6f)), p = 2)
     val got = Similarity.knnGraph(assigned, k = 3, dedupCandidates = true)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val vecs = emb.collect().map(r =>

@@ -138,6 +138,25 @@ class TestdataSchemaSpec extends SparkTestBase {
     assert(Tables.load(spark, dir, "events").count() == 5L)
   }
 
+  test("a legacy load inside an open nanos scope keeps the scope's value; the scope's exit restores the original") {
+    // a FRESH path: the legacy frame is memoized per (session, path), and
+    // a memo hit would never touch the conf
+    val dir = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get("src/test/resources/events_nanos/events.parquet"),
+      java.nio.file.Paths.get(dir, "events.parquet"))
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "false")
+    Tables.withNanosConf(spark) {
+      assert(Tables.load(spark, dir, "events").count() == 5L)
+      // the load's own scope nests inside this one: its exit must not
+      // restore "false" under a scope that still holds the conf
+      assert(spark.conf.get(key) == "true")
+    }
+    assert(spark.conf.get(key) == "false")
+    spark.conf.unset(key)
+  }
+
   test("nsToMicros is exact past double precision (61-bit epoch nanos)") {
     import org.apache.spark.sql.functions._
     // 1723622400000000999 ns: the double path rounds 1723622400000000.999

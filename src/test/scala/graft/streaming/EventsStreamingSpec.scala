@@ -162,9 +162,9 @@ class EventsStreamingSpec extends SparkTestBase {
     // the default even when unset — restore-to-default is the contract
     val original = spark.conf.get(key)
     assert(original != "true")
-    EventsStreaming.withNanosConf(spark) {
+    graft.sources.Tables.withNanosConf(spark) {
       assert(spark.conf.get(key) == "true")
-      EventsStreaming.withNanosConf(spark) {
+      graft.sources.Tables.withNanosConf(spark) {
         assert(spark.conf.get(key) == "true")
       }
       // inner exit must NOT restore yet — the outer scope still holds it
@@ -175,8 +175,8 @@ class EventsStreamingSpec extends SparkTestBase {
 
     // and with a pre-existing explicit value
     spark.conf.set(key, "false")
-    EventsStreaming.withNanosConf(spark) {
-      EventsStreaming.withNanosConf(spark)(())
+    graft.sources.Tables.withNanosConf(spark) {
+      graft.sources.Tables.withNanosConf(spark)(())
       assert(spark.conf.get(key) == "true")
     }
     assert(spark.conf.get(key) == "false")

@@ -29,7 +29,7 @@ class VectorStreamingSpec extends SparkTestBase {
     val streamed = spark.read.parquet(lists)
       .select(col("vec_id"), col("cluster").cast("int"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val batch = Similarity.assignTo(emb, col("vec_id"), col("embedding"), cents)
+    val batch = Similarity.assign(emb, cents)
       .select(col("vec_id"), col("cluster"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(streamed == batch) // incremental drains ≡ one batch assignment
