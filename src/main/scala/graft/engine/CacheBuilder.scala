@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ControlFile
+import graft.streaming.Drain
 
 /** ETL: normalized input → denormalized Parquet analytics star — the Spark
   * rebuild of `msgvault build-cache` (reference:
@@ -862,83 +863,47 @@ object CacheBuilder {
 
   /** Structured-Streaming face of the incremental build (SURVEY §2.12
     * mapping (b)): a file stream over the normalized messages directory,
-    * drained with Trigger.AvailableNow into the partitioned star via
-    * foreachBatch — the stream CHECKPOINT replaces `_last_sync.json`
-    * (files already processed are never re-read, so re-running after new
-    * files arrive appends exactly the new rows). Returns when drained.
+    * a [[graft.streaming.Drain]] into the partitioned star — the stream
+    * CHECKPOINT replaces `_last_sync.json` (files already processed are
+    * never re-read, so re-running after new files arrive appends exactly
+    * the new rows). Returns when drained.
     */
   def streamBuild(spark: SparkSession, srcDir: String, outDir: String,
-      checkpoint: String): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
-    // a scheduled drain can fire before the first delivery lands — an
-    // empty or not-yet-created source is the steady-state NO-OP the
-    // sibling drains (VectorStreaming/DocStreaming) already treat it as,
-    // not a pipeline alert
-    val schemaOpt =
-      try Some(spark.read.parquet(srcDir).schema)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-              e.getCondition == "PATH_NOT_FOUND" => None
+      checkpoint: String): Unit =
+    Drain.run(spark, srcDir, checkpoint) {
+      // Legacy-format guard: sinks written before batch tags were
+      // stream-namespaced used bare b<id>. A pre-upgrade batch that
+      // crashed between its write and the checkpoint commit would replay
+      // under the NEW <streamId>-b<id> tag instead of replacing its old
+      // b<id> partition — a one-time duplicate copy MsgVault.open unions
+      // silently. Refuse loudly instead: the operator migrates (rename
+      // each batch=b<id> dir to batch=<streamId>-b<id> for the checkpoint
+      // that owns the sink) or rebuilds.
+      val msgPath = new Path(s"$outDir/messages")
+      val msgFs = msgPath.getFileSystem(spark.sessionState.newHadoopConf())
+      if (msgFs.exists(msgPath)) {
+        val legacy = msgFs.listStatus(msgPath).map(_.getPath.getName)
+          .filter(_.matches("batch=b\\d+"))
+        require(legacy.isEmpty,
+          s"streamBuild: $outDir/messages holds legacy un-namespaced batch " +
+            s"partitions (${legacy.sorted.take(3).mkString(", ")}); a " +
+            "replayed batch would duplicate them under the new " +
+            "<streamId>-b<id> tags. Rename each batch=b<id> directory to " +
+            "batch=<streamId>-b<id> for the stream that owns this " +
+            "checkpoint, or rebuild the sink.")
       }
-    if (schemaOpt.isEmpty) return
-    val schema = schemaOpt.get
-    // Legacy-format guard: sinks written before batch tags were
-    // stream-namespaced used bare b<id>. A pre-upgrade batch that crashed
-    // between its write and the checkpoint commit would replay under the
-    // NEW <streamId>-b<id> tag instead of dynamic-overwriting its old
-    // b<id> partition — a one-time duplicate copy MsgVault.open unions
-    // silently. Refuse loudly instead: the operator migrates (rename each
-    // batch=b<id> dir to batch=<streamId>-b<id> for the checkpoint that
-    // owns the sink) or rebuilds.
-    val msgPath = new org.apache.hadoop.fs.Path(s"$outDir/messages")
-    val msgFs = msgPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (msgFs.exists(msgPath)) {
-      val legacy = msgFs.listStatus(msgPath).map(_.getPath.getName)
-        .filter(_.matches("batch=b\\d+"))
-      require(legacy.isEmpty,
-        s"streamBuild: $outDir/messages holds legacy un-namespaced batch " +
-          s"partitions (${legacy.sorted.take(3).mkString(", ")}); a " +
-          "replayed batch would duplicate them under the new " +
-          "<streamId>-b<id> tags. Rename each batch=b<id> directory to " +
-          "batch=<streamId>-b<id> for the stream that owns this " +
-          "checkpoint, or rebuild the sink.")
+      (batch, tag, _) =>
+        Drain.replaceBatch(
+          batch
+            // same export gate as the batch face (build_cache.go:308): no
+            // dedup losers, no undated rows (an undated row would create
+            // the null year partition the reference never emits)
+            .filter(col("deleted_at").isNull && col("sent_at").isNotNull)
+            .withColumn("year", year(col("sent_at")))
+            .withColumn("month", month(col("sent_at")))
+            .repartition(col("year")),
+          s"$outDir/messages", tag, innerPartitions = Seq("year"))
     }
-    // batch tags are NAMESPACED by the checkpoint's stream identity: a
-    // bare b<id> tag would let a deleted-and-recreated checkpoint (or a
-    // second stream sharing outDir) dynamic-overwrite a prior
-    // incarnation's low-numbered batches while its stale higher batches
-    // survive — re-exported rows alongside leftovers, unioned by
-    // MsgVault.open with no error (the bug class VectorStreaming's
-    // streamIdentity exists to prevent)
-    val streamId =
-      graft.streaming.VectorStreaming.streamIdentity(spark, checkpoint)
-    val q = spark.readStream.schema(schema).parquet(srcDir)
-      // same export gate as the batch face (build_cache.go:308): no
-      // dedup losers, no undated rows (an undated row would create the
-      // null year partition the reference never emits)
-      .filter(col("deleted_at").isNull && col("sent_at").isNotNull)
-      .withColumn("year", year(col("sent_at")))
-      .withColumn("month", month(col("sent_at")))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent per micro-batch: a batch replayed after a crash
-        // between the write and the checkpoint commit OVERWRITES its own
-        // batch partitions (dynamic mode) instead of appending a second
-        // copy — the foreachBatch exactly-once contract
-        batch.withColumn("batch", lit(s"$streamId-b$batchId"))
-          .repartition(col("year"))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch", "year")
-          .option("compression", "zstd").parquet(s"$outDir/messages")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   /** Boolean face of [[staleness]] (reference cacheNeedsBuild,
     * tui.go:197-330) — callers that also want the full-vs-incremental

@@ -82,49 +82,36 @@ object IvfIndex {
     // EMPTY list and miss every tied vector at small nProbe.
     // This flat ranking is driver-side O(nList) per query — fine to
     // ~10⁵–10⁶ lists (≈1 ms/10⁴ at ~100 ns/dim·cosine over 64 dims),
-    // a real knee past ~1M; [[searchAssignedRouted]] is the scale path.
+    // a real knee past ~1M; [[searchRouted]] is the scale path.
     val probes = centroids.zipWithIndex
       .sortBy { case (c, i) => (-Similarity.cosineLocal(c, query), -i) }
       .take(nProbe).map(_._2)
     probeLists(assigned, probes, query, k)
   }
 
-  /** [[searchAssigned]] with the probe RANKING routed through the same
-    * two-level coarse structure the routed build uses — the de-knee for
-    * nList ∝ corpus, where flat ranking's O(nList) driver cosines per
-    * query become the serving bottleneck (~1M lists): rank the ⌈√nList⌉
-    * coarse rows, keep the top `rProbe` groups, rank only their member
-    * centroids — O(rProbe·√nList) per query. Tie rules match
-    * [[searchAssigned]] and the assignment expression at both levels
-    * ((score desc, index desc)); `rProbe = ⌈√nList⌉` reproduces the flat
-    * probe set exactly. Smaller rProbe is the usual IVF recall trade: a
-    * near-boundary query may rank a neighboring group's list out of its
-    * probe budget — fewer lists scanned, never wrong scores.
-    */
-  def searchAssignedRouted(assigned: DataFrame, centroids: Seq[Seq[Float]],
-      query: Seq[Float], k: Int, nProbe: Int, rProbe: Int): DataFrame =
-    searchWithRouting(assigned, Similarity.routedStructure(centroids),
-      query, k, nProbe, rProbe)
-
-  /** [[search]]'s routed twin over a built [[Index]] — reuses the
-    * index's ONE prepared routing structure, so the per-query driver
-    * cost is O(rProbe·√nList), with no per-call structure rebuild.
+  /** [[search]] with the probe RANKING routed through the index's
+    * two-level coarse structure ([[Index.routing]], built once per
+    * index) — the de-knee for nList ∝ corpus, where flat ranking's
+    * O(nList) driver cosines per query become the serving bottleneck
+    * (~1M lists): rank the ⌈√nList⌉ coarse rows, keep the top `rProbe`
+    * groups, rank only their member centroids — O(rProbe·√nList) per
+    * query. Tie rules match [[searchAssigned]] and the assignment
+    * expression at both levels ((score desc, index desc)); `rProbe =
+    * ⌈√nList⌉` reproduces the flat probe set exactly. Smaller rProbe is
+    * the usual IVF recall trade: a near-boundary query may rank a
+    * neighboring group's list out of its probe budget — fewer lists
+    * scanned, never wrong scores.
     */
   def searchRouted(index: Index, query: Seq[Float], k: Int, nProbe: Int,
-      rProbe: Int): DataFrame =
-    searchWithRouting(index.assigned, index.routing, query, k, nProbe,
-      rProbe)
-
-  private def searchWithRouting(assigned: DataFrame,
-      rs: Similarity.RoutedStructure, query: Seq[Float], k: Int,
-      nProbe: Int, rProbe: Int): DataFrame = {
+      rProbe: Int): DataFrame = {
+    val rs = index.routing
     val groups = rs.coarse.indices
       .sortBy(g => (-Similarity.cosineLocal(rs.coarse(g).toSeq, query), -g))
       .take(rs.clampProbe(rProbe))
     val probes = groups.flatMap(g => rs.members(g))
       .sortBy(c => (-Similarity.cosineLocal(rs.cents(c).toSeq, query), -c))
       .take(nProbe)
-    probeLists(assigned, probes, query, k)
+    probeLists(index.assigned, probes, query, k)
   }
 
   /** The shared probe tail: scan ONLY the ranked lists (a partition

@@ -271,31 +271,7 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
-  /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
-    * cluster the corpus around coarse centroids, then report every
-    * document whose cosine to a LOWER-id member of its own cluster exceeds
-    * `eps` — the canonical "prune ε-balls within k-means clusters" recipe
-    * for embedding-level near-dup removal in LLM training pipelines.
-    * Output: one row per pruned doc — (dup_id, cluster, kept_id = its
-    * smallest qualifying neighbor, max_cosine) — anti-join `dup_id`
-    * against the corpus to materialize the deduplicated set.
-    *
-    * Scale shape: centroid pick is a bounded `limit(nList).collect()`
-    * (≤ nList rows on the driver); assignment is one scan with no shuffle
-    * ([[assign]]); the pair stage shuffles on `cluster` once and
-    * is quadratic only WITHIN a cluster, so `nList` must grow with the
-    * corpus to hold the mean cluster size (≈ n/nList) at the budget — the
-    * same knob as the paper's k. Centroids here are an md5-stride sample
-    * over the ids (id-structure-immune AND cross-engine reproducible,
-    * hence oracle-able — see [[strideCentroids]]); a deployment can swap
-    * in MLlib KMeans without touching the pair stage.
-    */
-  def semanticDedup(emb: DataFrame, id: Column, vec: Column,
-      nList: Int, eps: Double): DataFrame =
-    semanticDupes(semanticAssign(emb, id, vec, nList), eps,
-      clusterHint = nList)
-
-  /** The build-once half of [[semanticDedup]]: centroid pick + cluster
+  /** The build-once half of semantic dedup: centroid pick + cluster
     * assignment → a (vec_id, embedding, cluster) relation. This is the
     * persistent artifact of the pipeline (the paper's k-means pass) —
     * callers memoize/persist it and run [[semanticDupes]] per snapshot,
@@ -407,7 +383,7 @@ object Similarity {
 
   /** The two-level routing structure shared by every routed consumer
     * ([[assign]] at `0 < rProbe < nCoarse`,
-    * [[IvfIndex.searchAssignedRouted]]'s driver-side probe ranking):
+    * [[IvfIndex.searchRouted]]'s driver-side probe ranking):
     * coarse = every ⌈nList/⌈√nList⌉⌉-th centroid (first ⌈√nList⌉ of the
     * index order); each centroid routed driver-side to its nearest
     * coarse row by the expression's exact rule (score desc, index desc).
@@ -419,7 +395,7 @@ object Similarity {
     */
   private[graft] final case class RoutedStructure(
       cents: Array[Array[Float]], coarse: Array[Array[Float]],
-      coarseIdx: Array[Int], members: Array[Array[Int]]) {
+      members: Array[Array[Int]]) {
     def clampProbe(rProbe: Int): Int =
       math.min(math.max(1, rProbe), coarse.length)
   }
@@ -429,8 +405,7 @@ object Similarity {
     val cents = centroids.map(_.toArray).toArray
     val nCoarse = math.max(1, math.ceil(math.sqrt(cents.length.toDouble)).toInt)
     val stride = math.max(1, cents.length / nCoarse)
-    val coarseIdx = cents.indices.by(stride).take(nCoarse).toArray
-    val coarse = coarseIdx.map(cents)
+    val coarse = cents.indices.by(stride).take(nCoarse).map(cents).toArray
     val members = Array.fill(coarse.length)(
       new scala.collection.mutable.ArrayBuffer[Int]())
     var c = 0
@@ -445,7 +420,7 @@ object Similarity {
       members(bg) += c
       c += 1
     }
-    RoutedStructure(cents, coarse, coarseIdx, members.map(_.toArray))
+    RoutedStructure(cents, coarse, members.map(_.toArray))
   }
 
   /** The within-cluster collect shared by every compiled cluster-scan
@@ -489,8 +464,26 @@ object Similarity {
     (grouped, salt)
   }
 
-  /** The recurring half of [[semanticDedup]]: within-cluster ε-ball pair
-    * report over an assignment relation (fresh or reopened/persisted).
+  /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540),
+    * the recurring half over a [[semanticAssign]] relation (fresh or
+    * reopened/persisted): cluster the corpus around coarse centroids,
+    * then report every document whose cosine to a LOWER-id member of its
+    * own cluster exceeds `eps` — the canonical "prune ε-balls within
+    * k-means clusters" recipe for embedding-level near-dup removal in
+    * LLM training pipelines. Output: one row per pruned doc — (dup_id,
+    * cluster, kept_id = its smallest qualifying neighbor, max_cosine) —
+    * anti-join `dup_id` against the corpus to materialize the
+    * deduplicated set.
+    *
+    * Scale shape: centroid pick is a bounded `limit(nList).collect()`
+    * (≤ nList rows on the driver); assignment is one scan with no shuffle
+    * ([[assign]]); the pair stage shuffles on `cluster` once and
+    * is quadratic only WITHIN a cluster, so `nList` must grow with the
+    * corpus to hold the mean cluster size (≈ n/nList) at the budget — the
+    * same knob as the paper's k. Centroids here are an md5-stride sample
+    * over the ids (id-structure-immune AND cross-engine reproducible,
+    * hence oracle-able — see [[strideCentroids]]); a deployment can swap
+    * in MLlib KMeans without touching the pair stage.
     *
     * Pair stage: [[org.apache.spark.sql.graft.ClusterEpsAgg]] — one
     * compiled scan per (cluster, salt) group emitting each dup's

@@ -600,7 +600,7 @@ object DocQueries {
   /** The fully-ROUTED IVF serving path: build-side assignment routed
     * (rProbe=2 of the 4 coarse groups — the nList ∝ corpus knee fix,
     * [[IvfIndex.build]]) AND query-side probe ranking routed
-    * ([[IvfIndex.searchAssignedRouted]] — the ~1M-list driver-ranking
+    * ([[IvfIndex.searchRouted]] — the ~1M-list driver-ranking
     * knee fix). Both approximations active at once, recall-gated vs
     * brute force like `vector_knn_ivf`. Measured (BASELINE history,
     * nProbe=14, searchRouted rProbe=3): recall@10 = 1.0 / 0.8 / 0.7 at
@@ -1527,44 +1527,17 @@ object DocQueries {
   }
 
   private def buildStreamPackSink(s: SparkSession, dir: String): String = {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_spack")
-    sys.addShutdownHook {
-      try {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-    val drop = root.resolve("drop"); Files.createDirectories(drop)
-    val sinkDir = root.resolve("sink").toString
     // four CONTIGUOUS ascending id ranges (ntile over doc_id), delivered
-    // with strictly ascending mtimes so micro-batch k = range k — the
-    // arrival order under which incremental == batch placement
+    // so micro-batch k = range k — the arrival order under which
+    // incremental == batch placement
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      .withColumn("__q", ntile(4).over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))))
-    val base = System.currentTimeMillis() - 60000
-    (1 to 4).foreach { k =>
-      val tmp = root.resolve(s"shard$k")
-      docs.filter(col("__q") === k).drop("__q")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val l = Files.list(tmp)
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-        } finally l.close()
-      }
-      val dst = drop.resolve(s"shard-$k.parquet")
-      Files.move(part, dst)
-      dst.toFile.setLastModified(base + k * 1000L)
-    }
-    graft.streaming.StreamPacking.runPackAvailableNow(s, drop.toString,
-      sinkDir, root.resolve("ckpt").toString, seqLen = 512,
-      id = "doc_id", tokens = TextFunctions.tokenCount(col("text")))
+      .withColumn("__q", ntile(4).over(Window.orderBy(col("doc_id"))))
+    val root = deliverShards("graft_spack",
+      (1 to 4).map(k => docs.filter(col("__q") === k).drop("__q")))
+    val sinkDir = root.resolve("sink").toString
+    graft.streaming.StreamPacking.runPackAvailableNow(s,
+      root.resolve("drop").toString, sinkDir, root.resolve("ckpt").toString,
+      seqLen = 512, id = "doc_id", tokens = TextFunctions.tokenCount(col("text")))
     sinkDir
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.ArchiveVerify
 import graft.functions.TextEncoding
 import graft.sources.Tables
-import graft.streaming.SinkCompaction
+import graft.streaming.{Drain, SinkCompaction}
 
 /** Archive-maintenance entries: the integrity audit (reference
   * cmd/verify.go) and the encoding-repair pass
@@ -140,56 +140,18 @@ object MaintenanceQueries {
   }
 
   private def buildCompactedSink(s: SparkSession, dir: String): String = {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_cmpq")
-    sys.addShutdownHook {
-      try {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-    val drop = root.resolve("drop"); Files.createDirectories(drop)
-    val sinkDir = root.resolve("sink").toString
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("n_chars"))
-    // four deliveries, one FILE each: delivery k holds doc_id % 4 == k,
-    // mtimes strictly ascending in k so the file stream source (which
-    // orders by modification time) assigns shard k to micro-batch k —
-    // the oracle's `doc_id % 4 <> 3` replay of from_compacted rides on
-    // that mapping being deterministic
-    val base = System.currentTimeMillis() - 60000
-    (0 to 3).foreach { k =>
-      val tmp = root.resolve(s"shard$k")
-      docs.filter(pmod(col("doc_id"), lit(4)) === k)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val l = Files.list(tmp)
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-        } finally l.close()
-      }
-      val dst = drop.resolve(s"shard-$k.parquet")
-      Files.move(part, dst)
-      dst.toFile.setLastModified(base + k * 1000L)
+    // four deliveries, one file each: delivery k holds doc_id % 4 == k
+    // and becomes micro-batch k — the oracle's `doc_id % 4 <> 3` replay
+    // of from_compacted rides on that mapping being deterministic
+    val root = deliverShards("graft_cmpq",
+      (0 to 3).map(k => docs.filter(pmod(col("doc_id"), lit(4)) === k)))
+    val sinkDir = root.resolve("sink").toString
+    Drain.run(s, root.resolve("drop").toString, root.resolve("ckpt").toString,
+      oneFilePerBatch = true) { (batch, tag, _) =>
+      Drain.replaceBatch(batch, sinkDir, tag)
     }
-    val schema = s.read.parquet(drop.toString).schema
-    s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(drop.toString)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.withColumn("batch", lit(s"cs-b$id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(sinkDir)
-        ()
-      }
-      .start().awaitTermination()
     // loud gate: the query's claim is "reads correctly THROUGH a
     // compaction" — a no-op fold would pass the row comparison with
     // from_compacted all-false and must abort instead

@@ -427,6 +427,42 @@ package object queries {
     }
   }
 
+  /** A streaming fixture's temp root (deleted at JVM exit) whose `drop`
+    * dir holds each of `shards` as ONE parquet file, mtimes strictly
+    * ascending in order: the file stream source orders by modification
+    * time, so a one-file-per-batch drain turns shard k into micro-batch
+    * k, the mapping the fixtures' oracles replay.
+    */
+  private[queries] def deliverShards(prefix: String,
+      shards: Seq[DataFrame]): java.nio.file.Path = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory(prefix)
+    sys.addShutdownHook {
+      try {
+        val walk = Files.walk(root)
+        try walk.sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+    val drop = Files.createDirectories(root.resolve("drop"))
+    val base = System.currentTimeMillis() - 60000
+    shards.zipWithIndex.foreach { case (shard, k) =>
+      val tmp = root.resolve(s"shard$k")
+      shard.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val listing = Files.list(tmp)
+      val part =
+        try listing.iterator().asScala
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        finally listing.close()
+      val dst = drop.resolve(s"shard-$k.parquet")
+      Files.move(part, dst)
+      dst.toFile.setLastModified(base + k * 1000L)
+    }
+    root
+  }
+
   /** Drops every memo entry session `s` owns, each released through the
     * eviction path (after the owner's grace, when it set one), and
     * returns how many it dropped: the next lookup rebuilds. A profiler

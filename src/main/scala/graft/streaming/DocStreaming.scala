@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.functions.TextFunctions
 import graft.operators.Dedup
 
@@ -29,13 +28,12 @@ import graft.operators.Dedup
   *    re-shingles the curated corpus; curated text is loaded only for
   *    verify candidates, pruned by a member semi-join.
   *
-  * Exactly-once: same discipline as [[VectorStreaming]] — foreachBatch is
-  * at-least-once, so each micro-batch writes its docs AND its band rows
-  * under its own `batch=<stream>-b<id>` partition with dynamic overwrite;
-  * a replayed batch REPLACES its own partial output. Replays are also
-  * deterministic: the prior-curated probe explicitly EXCLUDES the
-  * current batch's own partition, so a half-written crash cannot make a
-  * replay see (and dedup against) its own first attempt.
+  * Exactly-once is [[Drain]]'s: each micro-batch writes its docs AND its
+  * band rows under its own batch partition, and a replayed batch
+  * replaces its own partial output. Replays are also deterministic: the
+  * prior-curated probe explicitly EXCLUDES the current batch's own
+  * partition, so a half-written crash cannot make a replay see (and
+  * dedup against) its own first attempt.
   *
   * Cross-batch semantics: arrival order wins — a doc near-dupping an
   * EARLIER batch's survivor is dropped, like the reference's ingest-time
@@ -64,43 +62,20 @@ object DocStreaming {
       indexed: DataFrame, curatedDir: String, bandsDir: String,
       checkpoint: String, minQuality: Double = 0.35,
       threshold: Double = 0.8): Unit = {
-    val schema =
-      try spark.read.parquet(srcDir).schema
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if Option(e.getCondition).exists(c =>
-              c.contains("UNABLE_TO_INFER_SCHEMA")) =>
-          return // empty drop dir: steady state between deliveries
-        case e: org.apache.spark.sql.AnalysisException
-            if Option(e.getCondition).exists(_.contains("PATH_NOT_FOUND")) =>
-          System.err.println(
-            s"[graft] doc-stream drain: source dir '$srcDir' does not " +
-              "exist — treating as empty (no shards delivered yet). If " +
-              "this repeats across drains, the path is misconfigured.")
-          return
-      }
-    // the frozen index's band table is built ONCE per drain and persisted
-    // — every micro-batch probes the same artifact (the production form
-    // writes it next to the index and reads it back; the rebuild is the
-    // batch pipeline's job, not the stream's)
     val idx = indexed.select(col("id").cast("long").as("id"),
       col("text").cast("string").as("text"))
-    val bIdx = Dedup.indexedBandTable(idx, col("id"), col("text")).persist()
-    bIdx.count()
-    val streamTag = VectorStreaming.streamIdentity(spark, checkpoint)
-    try {
-      val q = spark.readStream.schema(schema).parquet(srcDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          curateBatch(spark, batch, idx, bIdx, curatedDir, bandsDir,
-            s"$streamTag-b$batchId", minQuality, threshold)
-          ()
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally bIdx.unpersist(blocking = false)
+    var bIdx: Option[DataFrame] = None
+    try Drain.run(spark, srcDir, checkpoint) {
+      // the frozen index's band table is built ONCE per drain and
+      // persisted — every micro-batch probes the same artifact (the
+      // production form writes it next to the index and reads it back;
+      // the rebuild is the batch pipeline's job, not the stream's)
+      val bands = Dedup.indexedBandTable(idx, col("id"), col("text")).persist()
+      bIdx = Some(bands)
+      bands.count()
+      (batch, tag, _) => curateBatch(spark, batch, idx, bands, curatedDir,
+        bandsDir, tag, minQuality, threshold)
+    } finally bIdx.foreach(_.unpersist(blocking = false))
   }
 
   /** One micro-batch of the curation pipeline; graft-private so the spec
@@ -151,11 +126,11 @@ object DocStreaming {
     // 4. near-dup vs PRIOR curated output via the stream's own band
     //    sidecar — own-tag partitions excluded so a crash replay never
     //    dedups against its own first attempt
-    val prior = readOrEmpty(spark, curatedDir,
+    val prior = Drain.readSink(spark, curatedDir,
       "doc_id bigint, text string, batch string")
       .filter(col("batch") =!= tag)
       .select(col("doc_id").as("id"), col("text"))
-    val priorBands = readOrEmpty(spark, bandsDir,
+    val priorBands = Drain.readSink(spark, bandsDir,
       "band int, band_hash bigint, members array<bigint>, batch string")
       .filter(col("batch") =!= tag)
       .select(col("band"), col("band_hash"), col("members"))
@@ -168,57 +143,13 @@ object DocStreaming {
       .localCheckpoint(true) // two writes below must see ONE survivor set
 
     // 5. exactly-once writes: docs + band sidecar, each under this
-    //    batch's own partition, dynamic overwrite (replay = replace)
-    def overwriteOwn(df: DataFrame, dir: String): Unit = {
-      // dynamic overwrite only replaces partitions the frame EMITS — a
-      // replay whose survivor set is EMPTY (the frozen index grew
-      // between attempts and now rejects everything) writes no
-      // partitions and deletes nothing, so the first attempt's rows
-      // would stay live against the authoritative replay's verdict.
-      // Deleting the own-tag partition first makes "a replayed batch
-      // REPLACES its own partial output" hold unconditionally; a crash
-      // between delete and write reads as "first attempt never
-      // happened", which the replay covers.
-      val own = new org.apache.hadoop.fs.Path(dir, s"batch=$tag")
-      val fs = own.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(own)) { fs.delete(own, true); () }
-      df.withColumn("batch", lit(tag))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(dir)
-    }
-    overwriteOwn(kept, curatedDir)
-    // sidecar = the already-computed band rows filtered to survivors —
-    // no re-shingle of kept
-    overwriteOwn(
+    //    batch's own partition (replay = replace). The sidecar is the
+    //    already-computed band rows filtered to survivors — no
+    //    re-shingle of kept
+    Drain.replaceBatch(kept, curatedDir, tag)
+    Drain.replaceBatch(
       Dedup.bandTableFromRows(
         freshBands.join(kept.select(col("doc_id").as("new_id")),
-          Seq("new_id"), "left_semi")), bandsDir)
+          Seq("new_id"), "left_semi")), bandsDir, tag)
   }
-
-  /** Read a partitioned sink that may not exist yet (first batch) —
-    * a missing/empty dir is an empty frame of the declared schema.
-    */
-  private def readOrEmpty(spark: SparkSession, dir: String,
-      ddl: String): DataFrame =
-    try {
-      // compaction-aware: excludes batch partitions shadowed by a
-      // completed SinkCompaction pass (they may linger after a crash
-      // mid-delete, and double-reading prior history would inflate the
-      // candidate-verify work every drain)
-      val df = SinkCompaction.read(spark, dir)
-      // first write may be in flight for OTHER partitions only; missing
-      // columns (never-written sink discovered as empty) fall through
-      if (df.columns.isEmpty) emptyOf(spark, ddl) else df
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).exists(c =>
-            c.contains("PATH_NOT_FOUND") ||
-              c.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        emptyOf(spark, ddl)
-    }
-
-  private def emptyOf(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 }

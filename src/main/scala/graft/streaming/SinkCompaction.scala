@@ -7,11 +7,12 @@ import org.apache.hadoop.fs.Path
 import graft.ControlFile
 
 /** Small-files maintenance for the streaming sinks ([[VectorStreaming]]
-  * lists, [[DocStreaming]] curated corpus + band sidecar): every drain
-  * appends its own `batch=<tag>` partition, so a long-lived stream
-  * accumulates one directory (and its files) per micro-batch — the
-  * classic streaming-sink problem that turns a 100 TB index into
-  * millions of tiny files and partition-discovery into the bottleneck.
+  * lists, [[DocStreaming]] curated corpus + band sidecar): every
+  * [[Drain]] batch writes its own `batch=<tag>` partition, so a
+  * long-lived stream accumulates one directory (and its files) per
+  * micro-batch — the classic streaming-sink problem that turns a 100 TB
+  * index into millions of tiny files and partition-discovery into the
+  * bottleneck.
   *
   * `compact` rewrites a set of batch partitions into ONE new partition,
   * crash-safely WITHOUT a transactional table format, by ordering writes
@@ -36,9 +37,9 @@ import graft.ControlFile
   *
   * Replay safety is structural, not operational: each stream's LATEST
   * batch partition is never eligible for compaction (see [[compact]]),
-  * because it is the one batch a crashed drain can replay — so running
-  * compaction against a crashed-but-restartable stream cannot corrupt
-  * the replay's own-partition overwrite or DocStreaming's own-tag
+  * because it is the one batch a crashed [[Drain]] can replay — so
+  * running compaction against a crashed-but-restartable stream cannot
+  * corrupt the replay's [[Drain.replaceBatch]] or DocStreaming's own-tag
   * exclusion. Invariants callers own: consumers must read via [[read]]
   * (or a reader built on it, e.g. `IvfIndex.openLists`) rather than a
   * bare `spark.read.parquet`, and [[reclaim]] should run only when
@@ -93,7 +94,7 @@ object SinkCompaction {
     withMaintenanceLease(fs, root, staleLeaseMs) { leaseToken =>
     finishInterrupted(fs, root)
 
-    // NEVER fold a stream's LATEST batch: foreachBatch is at-least-once,
+    // NEVER fold a stream's LATEST batch: a drain batch is at-least-once,
     // and the one batch a crashed drain can replay is its last
     // uncommitted one. Folding it would (a) move its first attempt out
     // from under the replay's own-tag dynamic overwrite (duplicates) and
@@ -316,23 +317,21 @@ object SinkCompaction {
     }
   }
 
-  /** For tags of the drain form `<streamId>-b<batchId>`: the max-batchId
-    * tag per streamId (the only batch a crashed drain can replay).
-    * Tags without the suffix (batch builds' "full", compact tags) have
-    * no replay semantics and are always foldable.
+  /** For drain tags ([[Drain.parseTag]]): the max-batchId tag per
+    * stream (the only batch a crashed drain can replay). Other tags
+    * (batch builds' "full", compact tags) have no replay semantics and
+    * are always foldable.
     */
-  private def latestPerStream(tags: Set[String]): Set[String] = {
-    val drainTag = "^(.*)-b(\\d+)$".r
+  private def latestPerStream(tags: Set[String]): Set[String] =
     tags.toSeq
       // a compact tag has no replay semantics — and its random 8-hex
       // fragment can LOOK like a drain tag ('compact-b1234567'), which
       // would permanently exempt it from future folding
       .filterNot(_.startsWith("compact-"))
-      .collect { case t @ drainTag(stream, n) => (stream, n.toLong, t) }
+      .flatMap(t => Drain.parseTag(t).map { case (s, n) => (s, n, t) })
       .groupBy(_._1)
       .map { case (_, ts) => ts.maxBy(_._2)._3 }
       .toSet
-  }
 
   /** Read a batch-partitioned sink with compaction manifests applied:
     * sources of COMPLETE compactions are excluded even if their

@@ -3,9 +3,8 @@ package graft.streaming
 import scala.collection.immutable.ListMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ControlFile
 import graft.operators.Packing
@@ -29,14 +28,12 @@ import graft.operators.Packing
   * carried in a per-batch state ledger (`_pack_offsets.json` in the
   * sink), NOT derived by re-aggregating prior placements.
   *
-  * Exactly-once, same discipline as [[DocStreaming]]/[[VectorStreaming]]:
-  * foreachBatch is at-least-once, so each batch writes its placement
-  * under its own `batch=<stream>-b<id>` partition (own partition deleted
-  * first — a replay whose row set changed replaces, never merges), and
-  * the ledger keys base/after offsets by BATCH ORDINAL — a replayed
-  * batch recomputes the same deterministic input rows (checkpoint
-  * contract) and rewrites its own entry with the same values. Micro-
-  * batches execute sequentially, and ordinal k's entry is written before
+  * Exactly-once is [[Drain]]'s: each batch's placement lands under its
+  * own batch partition, which a replay replaces. The ledger keys
+  * base/after offsets by BATCH ORDINAL — a replayed batch recomputes the
+  * same deterministic input rows (checkpoint contract) and rewrites its
+  * own entry with the same values. Micro-batches execute sequentially,
+  * one delivered file each, and ordinal k's entry is written before
   * batch k+1 starts, so the base lookup never races its predecessor.
   */
 object StreamPacking {
@@ -64,24 +61,11 @@ object StreamPacking {
     */
   def runPackAvailableNow(spark: SparkSession, srcDir: String,
       sinkDir: String, checkpoint: String, seqLen: Int,
-      id: String, tokens: Column,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val streamTag = VectorStreaming.streamIdentity(spark, checkpoint)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packBatch(spark, batch, sinkDir, s"$streamTag-b$batchId", batchId,
-          seqLen, id, tokens)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      id: String, tokens: Column): Unit =
+    Drain.run(spark, srcDir, checkpoint, oneFilePerBatch = true) {
+      (batch, tag, batchId) =>
+        packBatch(spark, batch, sinkDir, tag, batchId, seqLen, id, tokens)
+    }
 
   /** One micro-batch: place the batch's documents at the running offset,
     * write under the batch's own partition, advance the ledger.
@@ -116,21 +100,12 @@ object StreamPacking {
       val row = shifted.agg(coalesce(sum(col("n_tokens")), lit(0L))).head()
       row.getLong(0)
     }
-    // own-partition replace (DocStreaming.overwriteOwn rationale: dynamic
-    // overwrite alone would leave a first attempt's rows live when the
-    // replay emits no partitions)
-    val own = new org.apache.hadoop.fs.Path(sinkDir, s"batch=$tag")
-    val fs = own.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(own)) { fs.delete(own, true); () }
     // file count follows batch size (Sizing.streamPackFiles), not the
     // placement scan's partition count: writing that layout verbatim
     // emits up to a core count of near-empty files per micro-batch.
     // coalesce is narrow and reduce-only — a small batch never shuffles.
     val files = graft.Sizing.streamPackFiles(total, graft.Sizing.cores(spark))
-    shifted.coalesce(files).withColumn("batch", lit(tag))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(sinkDir)
+    Drain.replaceBatch(shifted.coalesce(files), sinkDir, tag)
     writeLedger(sinkDir, ledger + (ordinal -> (base, base + total)))
   }
 }

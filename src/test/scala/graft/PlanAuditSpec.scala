@@ -410,8 +410,10 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("semantic dedup: hash shuffles only — no range exchange, no window") {
     val emb = Tables.load(spark, sf, "embeddings")
-    val df = graft.operators.Similarity.semanticDedup(emb,
-      col("vec_id"), col("embedding"), nList = 8, eps = 0.33)
+    import graft.operators.Similarity
+    val df = Similarity.semanticDupes(Similarity.semanticAssign(emb,
+      col("vec_id"), col("embedding"), nList = 8), eps = 0.33,
+      clusterHint = 8)
     val plan = executed(df).toString
     // assignment is a pure projection and the pair stage keys on cluster;
     // a range exchange or window here would mean a global-order stage

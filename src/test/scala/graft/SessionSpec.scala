@@ -109,6 +109,15 @@ class SessionSpec extends AnyFunSuite {
     assert(constructors == Seq("graft/operators/Similarity.scala"))
   }
 
+  test("graft/streaming/Drain.scala is the only file-stream drain in src/main") {
+    // the drain loop, the stream-identity marker and the batch-tag format
+    val marks = Seq("foreachBatch", "graft_stream_id", "-b$")
+    val drains = mainSources.filter(p =>
+      marks.exists(Files.readString(p).contains))
+      .map(p => mainRoot.relativize(p).toString).sorted
+    assert(drains == Seq("graft/streaming/Drain.scala"))
+  }
+
   test("spark.graft.memo.releaseGraceMs is the only spark.graft.* key in src/main") {
     // a new key must update this set AND the README's runtime
     // configuration table
