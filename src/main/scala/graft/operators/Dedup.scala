@@ -90,100 +90,117 @@ object Dedup {
     * (id_a, id_b) with id_a < id_b.
     *
     * Plan: signature (narrow, computed ONCE) → explode bands (×bands rows)
-    * → ONE shuffle on (band, band_hash) → collect bucket members → pairs by
-    * double-explode. Buckets larger than `maxBucket` are dropped (standard
-    * LSH practice: a bucket that big means the band is degenerate, and
-    * keeping it makes candidate count quadratic in the bucket) — so the
-    * pair fan-out is bounded by bands × maxBucket²/2 regardless of corpus
-    * size, and the corpus is scanned exactly once.
+    * → ONE shuffle on (band, band_hash) → [[bucketPairs]]. Buckets larger
+    * than `maxBucket` are dropped (standard LSH practice: a bucket that
+    * big means the band is degenerate, and keeping it makes candidate
+    * count quadratic in the bucket) — so the pair fan-out is bounded by
+    * bands × maxBucket²/2 regardless of corpus size, and the corpus is
+    * scanned exactly once.
     */
   def minhashCandidates(df: DataFrame, id: Column, text: Column,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       maxBucket: Int = 1000): DataFrame =
-    candidatesRaw(df, id, text, numHashes, bands, shingleSize, maxBucket)
+    candidatesFromBands(
+      bandRows(df, id, text, numHashes, bands, shingleSize), maxBucket)
       .distinct()
 
-  /** (doc_id, band, band_hash) band rows for LSH bucketing — shared by
-    * the batch candidate generator and the incremental probe.
+  /** (doc_id, band, band_hash) band rows for LSH bucketing — THE MinHash
+    * pass over a frame, shared by the batch candidate generator, the
+    * indexed band table and the incremental probe. Factored out so a
+    * caller probing SEVERAL references with the same batch (e.g.
+    * streaming curation: frozen index + own history) computes the
+    * signatures once and feeds [[nearDuplicatesWithBands]],
+    * [[probeCandidates]] and [[bandTableFromRows]].
     */
-  private def bandRows(df: DataFrame, id: Column, text: Column,
-      numHashes: Int, bands: Int, shingleSize: Int): DataFrame = {
+  def bandRows(df: DataFrame, id: Column, text: Column,
+      numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    minhashSignatures(df, id, text, numHashes, shingleSize)
+    minhashSignatures(df.select(id.as("doc_id"), text.as("doc_text")),
+      col("doc_id"), col("doc_text"), numHashes, shingleSize)
       .select(col("doc_id"), posexplode(org.apache.spark.sql.graft
         .HashingExpressions.bandHashes(col("sig"), bands, rows)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_hash")
   }
 
-  /** [[minhashCandidates]] WITHOUT the dedup shuffle: a pair sharing j
-    * band buckets appears j times — for probes/consumers that dedup
-    * downstream anyway.
+  /** The bucket-local pair fan-out every blocked pair generator shares
+    * (MinHash bands, SimHash bit-bands, winnow fingerprints, sign-LSH
+    * buckets): ONE shuffle grouping `rows` on `key`, each bucket's
+    * `member`s collected, singletons and buckets over `maxBucket` dropped,
+    * members paired by double-explode. Returns (id_a, id_b) member pairs
+    * with id(id_a) < id(id_b) — for scalar members (a bare doc id, `id` =
+    * identity) that is already the pair-id shape; struct members carry
+    * their payload through the shuffle and callers unwrap it.
     */
-  private[graft] def candidatesRaw(df: DataFrame, id: Column, text: Column,
-      numHashes: Int, bands: Int, shingleSize: Int,
-      maxBucket: Int): DataFrame =
-    candidatesFromBands(
-      bandRows(df, id, text, numHashes, bands, shingleSize), maxBucket)
-
-  /** Bucket-capped pair fan-out from (band, band_hash, doc_id) rows —
-    * the candidate half of [[candidatesRaw]], split out so callers that
-    * already hold the band rows ([[freshBandRows]] reuse) skip the
-    * MinHash pass.
-    */
-  private[graft] def candidatesFromBands(banded: DataFrame,
-      maxBucket: Int): DataFrame = {
-    val buckets = banded
-      .groupBy(col("band"), col("band_hash"))
-      .agg(collect_list(col("doc_id")).as("members"))
+  private[operators] def bucketPairs(rows: DataFrame, key: Seq[Column],
+      member: Column, id: Column => Column, maxBucket: Int): DataFrame =
+    rows.groupBy(key: _*)
+      .agg(collect_list(member).as("members"))
       .filter(size(col("members")) > 1 && size(col("members")) <= maxBucket)
-    buckets
       .select(explode(col("members")).as("id_a"), col("members"))
       .select(col("id_a"), explode(col("members")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-  }
+      .filter(id(col("id_a")) < id(col("id_b")))
 
-  /** Exact n-gram Jaccard for candidate pairs: re-rank LSH candidates with
-    * the true similarity. `withTexts` must carry (id_a, id_b, text_a,
-    * text_b) — join texts before calling (pairs ≪ corpus, so the join is
-    * cheap).
+  /** [[bucketPairs]] over (band, band_hash, doc_id) rows, WITHOUT a dedup
+    * shuffle: a pair sharing j band buckets appears j times.
     */
-  def jaccard(textA: Column, textB: Column, shingleSize: Int = 3): Column = {
-    // compiled shingle expression (≈µs/doc vs ms/doc for the interpreted
-    // transform/slice/concat_ws HOF chain); NULL for zero-token inputs,
-    // so degenerate docs yield NULL jaccard instead of matching on [""]
+  private[operators] def candidatesFromBands(banded: DataFrame,
+      maxBucket: Int): DataFrame =
+    bucketPairs(banded, Seq(col("band"), col("band_hash")), col("doc_id"),
+      identity, maxBucket)
+
+  /** THE MinHash verify: exact word-shingle Jaccard for the candidate
+    * pairs in `cand`'s two id columns, which join `left` and `right`
+    * ((doc_id, doc_text)-shaped) in that order; keeps pairs at or above
+    * `threshold`. Each side is a candidate-independent shingle projection,
+    * so each pair joins exactly one row per side and `cand` is the one
+    * spine. No broadcast HINT on either join: for a web corpus where
+    * 30-50% of docs sit in some near-dup pair, the candidate set is
+    * O(corpus·dup-rate) and a forced broadcast collects it to the driver
+    * (found by the 100× probe: >1 GiB of task results at 500k docs under a
+    * dense dup fixture). AQE picks each join from the REAL runtime sizes —
+    * broadcast when a side is genuinely small, co-partitioned shuffle join
+    * when it is not. The shingle expression is compiled (≈µs/doc vs
+    * ms/doc for an interpreted HOF chain) and NULL for zero-token inputs,
+    * so degenerate docs never match on an empty set.
+    */
+  private def verify(cand: DataFrame, left: DataFrame, right: DataFrame,
+      threshold: Double, shingleSize: Int): DataFrame = {
     import org.apache.spark.sql.graft.HashingExpressions._
-    distinctJaccard(wordShingles(rawTokens(textA), shingleSize),
-      wordShingles(rawTokens(textB), shingleSize))
+    val (l, r) = (cand.columns(0), cand.columns(1))
+    def shingled(d: DataFrame) = d.select(col("doc_id"),
+      wordShingles(rawTokens(col("doc_text")), shingleSize).as("__sh"))
+    cand
+      .join(shingled(left).as("L"), col(l) === col("L.doc_id"))
+      .join(shingled(right).as("R"), col(r) === col("R.doc_id"))
+      .withColumn("jaccard", distinctJaccard(col("L.__sh"), col("R.__sh")))
+      .filter(col("jaccard") >= threshold)
+      .select(col(l), col(r), col("jaccard"))
   }
 
   /** Near-dup via MinHash-LSH candidates + exact Jaccard threshold.
     *
     * Re-rank plan shape: the candidate pair set is referenced ONCE — it
-    * is the spine of the verify join — and the corpus side is a
+    * is the spine of the [[verify]] join — and the corpus side is a
     * candidate-independent shingle projection joined to it as A and
     * again as B. Every document is shingled once per side; that is
     * cheaper per document than the 64-hash signature every document
     * already paid in banding, so it costs less than re-running the
     * MinHash pass to semi-join the corpus down to candidate members
     * (Spark re-executes each reference to the candidate set: exchange
-    * reuse was measured not to fire on these subplans). Each pair joins
-    * exactly one A-row and one B-row; the joins are un-hinted (see
-    * [[nearDuplicatesWithBands]]).
+    * reuse was measured not to fire on these subplans).
     */
   def nearDuplicates(df: DataFrame, id: Column, text: Column,
       threshold: Double = 0.8, numHashes: Int = 64, bands: Int = 16,
       shingleSize: Int = 3, maxBucket: Int = 1000): DataFrame =
     nearDuplicatesWithBands(df, id, text,
-      bandRows(df.select(id.as("doc_id"), text.as("doc_text")),
-        col("doc_id"), col("doc_text"), numHashes, bands, shingleSize),
+      bandRows(df, id, text, numHashes, bands, shingleSize),
       threshold, shingleSize, maxBucket)
 
-  /** [[nearDuplicates]] with the band rows precomputed (same banding
-    * parameters, (band, band_hash, doc_id)-shaped) — the reuse hook for
-    * callers that already paid the MinHash pass.
+  /** [[nearDuplicates]] with the [[bandRows]] precomputed (same banding
+    * parameters) — the reuse hook for callers that already paid the
+    * MinHash pass.
     */
   def nearDuplicatesWithBands(df: DataFrame, id: Column, text: Column,
       banded: DataFrame, threshold: Double = 0.8,
@@ -196,52 +213,11 @@ object Dedup {
     // bands=32). The distinct shuffles two longs per candidate — orders
     // of magnitude less data than the redundant verifications it removes
     // once documents are big enough for the intersection to cost.
-    val cand = candidatesFromBands(banded, maxBucket)
-      .distinct()
-    // `shingled` does not depend on `cand`, so the MinHash pass behind
-    // `cand` runs once. No broadcast HINT on either verify join: for a
-    // web corpus where 30-50% of docs sit in some near-dup pair, the
-    // candidate set is O(corpus·dup-rate) and a forced broadcast
-    // collects it to the driver (found by the 100× probe: >1 GiB of
-    // task results at 500k docs under a dense dup fixture). AQE picks
-    // each join from the REAL runtime sizes — broadcast when a side is
-    // genuinely small, co-partitioned shuffle join when it is not.
-    val shingled = docs.select(col("doc_id"),
-      org.apache.spark.sql.graft.HashingExpressions
-        .wordShingles(rawTokens(col("doc_text")), shingleSize).as("__sh"))
-    cand
-      .join(shingled.as("A"), col("id_a") === col("A.doc_id"))
-      .join(shingled.as("B"), col("id_b") === col("B.doc_id"))
-      .withColumn("jaccard", org.apache.spark.sql.graft.HashingExpressions
-        .distinctJaccard(col("A.__sh"), col("B.__sh")))
-      .filter(col("jaccard") >= threshold)
-      // no trailing distinct: cand is already distinct and each pair
-      // joins exactly one A-row and one B-row
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    // No trailing distinct: cand is already distinct and each pair joins
+    // exactly one row per side.
+    verify(candidatesFromBands(banded, maxBucket).distinct(), docs, docs,
+      threshold, shingleSize)
   }
-
-  /** INCREMENTAL near-dup: new docs probed against an already-indexed
-    * corpus — the daily-ingest path, where re-running batch dedup over
-    * corpus+delta would redo O(corpus) work for an O(delta)-sized
-    * question. Candidates pair a fresh doc with an indexed doc only
-    * (never fresh×fresh or indexed×indexed); the fresh side's band rows
-    * broadcast into the indexed side's (bucket-capped) band table, so
-    * the indexed corpus is scanned once and never shuffled, and the
-    * exact-Jaccard verify is bounded by the candidate set exactly as in
-    * [[nearDuplicates]]. At production scale the indexed band table is
-    * a materialized artifact (build once, probe per batch — the
-    * memoizedIndex pattern the inverted-index and IVF queries use).
-    *
-    * Returns (new_id, indexed_id, jaccard) with jaccard ≥ threshold.
-    */
-  def incrementalNearDuplicates(indexed: DataFrame, fresh: DataFrame,
-      id: Column, text: Column, threshold: Double = 0.8,
-      numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
-      maxBucket: Int = 1000): DataFrame =
-    incrementalProbe(
-      indexedBandTable(indexed, id, text, numHashes, bands, shingleSize,
-        maxBucket),
-      indexed, fresh, id, text, threshold, numHashes, bands, shingleSize)
 
   /** The indexed corpus's (band, band_hash) → members table — the
     * materialized artifact a production pipeline builds once and probes
@@ -251,92 +227,61 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
       maxBucket: Int = 1000): DataFrame =
     bandTableFromRows(
-      bandRows(indexed.select(id.as("doc_id"), text.as("doc_text")),
-        col("doc_id"), col("doc_text"), numHashes, bands, shingleSize),
-      maxBucket, idCol = "doc_id")
+      bandRows(indexed, id, text, numHashes, bands, shingleSize), maxBucket)
 
-  /** Probe half of [[incrementalNearDuplicates]]: fresh docs against a
-    * prebuilt [[indexedBandTable]]. `indexed` is still needed for the
-    * exact-Jaccard verify, but only candidate members are shingled.
-    *
-    * `materializeCandidates = true` eagerly `localCheckpoint`s the
-    * bounded candidate set: its lineage holds the MinHash pass over the
-    * whole fresh batch, and the verify plan references it three times
-    * (spine + two semi-joins that keep the shingling O(delta)). Exchange
-    * reuse was measured NOT to fire on those identical subplans, so
-    * without the checkpoint the MinHash pass over `fresh` runs three
-    * times; the checkpoint makes the single pass structural (a
-    * measured ~15% win on the probe). It is OFF by default because it (a)
-    * runs a Spark job at DataFrame-construction time — a surprise for a
-    * plan-building API — and (b) stores lineage-truncated blocks on
-    * executors, which a dynamic-allocation decommission cannot recompute.
-    * Opt in from single-tenant batch pipelines (the driver queries do).
-    */
-  def incrementalProbe(bIdx: DataFrame, indexed: DataFrame, fresh: DataFrame,
-      id: Column, text: Column, threshold: Double = 0.8,
-      numHashes: Int = 64, bands: Int = 16,
-      shingleSize: Int = 3, materializeCandidates: Boolean = false): DataFrame =
-    incrementalProbeWithBands(bIdx, indexed, fresh,
-      freshBandRows(fresh, id, text, numHashes, bands, shingleSize),
-      id, text, threshold, shingleSize, materializeCandidates)
-
-  /** The probe frame's (band, band_hash, new_id) rows — the MinHash pass
-    * over `fresh`, factored out so a caller probing SEVERAL references
-    * with the same batch (e.g. streaming curation: frozen index + own
-    * history) computes the signatures once and feeds
-    * [[incrementalProbeWithBands]]/[[bandTableFromRows]].
-    */
-  def freshBandRows(fresh: DataFrame, id: Column, text: Column,
-      numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3): DataFrame =
-    bandRows(fresh.select(id.as("doc_id"), text.as("doc_text")),
-      col("doc_id"), col("doc_text"), numHashes, bands, shingleSize)
-      .select(col("band"), col("band_hash"), col("doc_id").as("new_id"))
-
-  /** Group band rows into the [[indexedBandTable]] layout — THE
+  /** Group [[bandRows]] into the [[indexedBandTable]] layout — THE
     * definition of the (band, band_hash) → members grouping
     * ([[indexedBandTable]] delegates here), so a sidecar built from
-    * reused [[freshBandRows]] cannot drift from a fresh build.
+    * reused band rows cannot drift from a fresh build.
     */
-  def bandTableFromRows(rows: DataFrame, maxBucket: Int = 1000,
-      idCol: String = "new_id"): DataFrame =
+  def bandTableFromRows(rows: DataFrame, maxBucket: Int = 1000): DataFrame =
     rows.groupBy(col("band"), col("band_hash"))
-      .agg(collect_list(col(idCol)).as("members"))
+      .agg(collect_list(col("doc_id")).as("members"))
       .filter(size(col("members")) <= maxBucket)
 
-  /** [[incrementalProbe]] with the probe side's band rows precomputed
-    * ([[freshBandRows]], which bakes in the banding parameters — only
-    * the verify's `shingleSize` remains a knob here, so a banding
-    * mismatch between bNew and bIdx is impossible to express through
-    * this signature).
+  /** The candidate pairs of an INCREMENTAL probe: the fresh batch's
+    * [[bandRows]] `bNew` broadcast into the prebuilt [[indexedBandTable]]
+    * `bIdx` (same banding parameters), so the indexed corpus is scanned
+    * once and never shuffled. Pairs a fresh doc with an indexed doc only
+    * (never fresh×fresh or indexed×indexed). Returns distinct
+    * (new_id, indexed_id) — the input of [[incrementalProbe]].
     */
-  def incrementalProbeWithBands(bIdx: DataFrame, indexed: DataFrame,
-      fresh: DataFrame, bNew: DataFrame, id: Column, text: Column,
-      threshold: Double = 0.8,
-      shingleSize: Int = 3, materializeCandidates: Boolean = false): DataFrame = {
-    val candLazy = bIdx.join(broadcast(bNew), Seq("band", "band_hash"))
-      .select(col("new_id"), explode(col("members")).as("indexed_id"))
+  def probeCandidates(bIdx: DataFrame, bNew: DataFrame): DataFrame =
+    bIdx.join(broadcast(bNew), Seq("band", "band_hash"))
+      .select(col("doc_id").as("new_id"),
+        explode(col("members")).as("indexed_id"))
       .distinct()
-    val cand = if (materializeCandidates) candLazy.localCheckpoint(true)
-      else candLazy
-    // un-hinted verify joins, as in [[nearDuplicatesWithBands]]: AQE
-    // picks from the runtime candidate size, which survives dense-dup
-    // corpora where candidates grow O(corpus·dup-rate)
-    val shingleOf = (d: DataFrame) => d.select(col("doc_id"),
-      org.apache.spark.sql.graft.HashingExpressions
-        .wordShingles(rawTokens(col("doc_text")), shingleSize).as("__sh"))
-    val shIdx = shingleOf(indexed.select(id.as("doc_id"), text.as("doc_text"))
-      .join(cand.select(col("indexed_id").as("doc_id")),
-        Seq("doc_id"), "left_semi"))
-    val shNew = shingleOf(fresh.select(id.as("doc_id"), text.as("doc_text"))
-      .join(cand.select(col("new_id").as("doc_id")),
-        Seq("doc_id"), "left_semi"))
-    cand
-      .join(shNew.as("N"), col("new_id") === col("N.doc_id"))
-      .join(shIdx.as("I"), col("indexed_id") === col("I.doc_id"))
-      .withColumn("jaccard", org.apache.spark.sql.graft.HashingExpressions
-        .distinctJaccard(col("N.__sh"), col("I.__sh")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id"), col("indexed_id"), col("jaccard"))
+
+  /** INCREMENTAL near-dup: new docs probed against an already-indexed
+    * corpus — the daily-ingest path, where re-running batch dedup over
+    * corpus+delta would redo O(corpus) work for an O(delta)-sized
+    * question. `cand` is the [[probeCandidates]] frame; the exact-Jaccard
+    * [[verify]] is bounded by it exactly as in [[nearDuplicates]].
+    * `indexed` and `fresh` are still needed for the verify, but each is
+    * semi-joined to its candidate members before shingling, so the
+    * verify stays O(delta).
+    *
+    * The plan references `cand` three times (spine + two semi-joins), and
+    * exchange reuse was measured NOT to fire on those subplans: each
+    * reference recomputes the candidate join and its distinct shuffle,
+    * and the MinHash pass behind `bNew` too unless that is materialized.
+    * A single-tenant batch caller `localCheckpoint`s `cand` (the
+    * `dedup_incremental` query does: it makes the one MinHash pass over
+    * the fresh slice structural); a caller probing several references
+    * with one batch materializes the batch's band rows instead
+    * (streaming curation).
+    * This function itself runs no job.
+    *
+    * Returns (new_id, indexed_id, jaccard) with jaccard ≥ threshold.
+    */
+  def incrementalProbe(cand: DataFrame, indexed: DataFrame, fresh: DataFrame,
+      id: Column, text: Column, threshold: Double = 0.8,
+      shingleSize: Int = 3): DataFrame = {
+    def members(d: DataFrame, ids: String) =
+      d.select(id.as("doc_id"), text.as("doc_text"))
+        .join(cand.select(col(ids).as("doc_id")), Seq("doc_id"), "left_semi")
+    verify(cand, members(fresh, "new_id"), members(indexed, "indexed_id"),
+      threshold, shingleSize)
   }
 
   /** 64-bit SimHash: per-bit majority vote of token hashes, frequency-
@@ -374,7 +319,7 @@ object Dedup {
     *
     * Plan shape: the full signature is ONE long, so it rides through the
     * band shuffle alongside the doc id — explode bands (× bands rows of
-    * three longs), ONE shuffle on (band, band_bits), bucket-local pair
+    * three longs), ONE shuffle on (band, band_bits), [[bucketPairs]]
     * fan-out capped at `maxBucket` (a 2^bandBits-space collision bucket
     * that large means a degenerate corpus slice — same bound and caveat
     * as LSH), Hamming verified INLINE from the carried signatures. One
@@ -399,15 +344,10 @@ object Dedup {
           .bitwiseAND(lit(mask))): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_bits")
-    banded
-      .groupBy(col("band"), col("band_bits"))
-      .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("members"))
-      .filter(size(col("members")) > 1 && size(col("members")) <= maxBucket)
-      .select(explode(col("members")).as("a"), col("members"))
-      .select(col("a"), explode(col("members")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        hamming64(col("a.simhash"), col("b.simhash")).cast("long")
+    bucketPairs(banded, Seq(col("band"), col("band_bits")),
+        struct(col("doc_id"), col("simhash")), _("doc_id"), maxBucket)
+      .select(col("id_a.doc_id").as("id_a"), col("id_b.doc_id").as("id_b"),
+        hamming64(col("id_a.simhash"), col("id_b.simhash")).cast("long")
           .as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
@@ -425,8 +365,8 @@ object Dedup {
     * shared fingerprint.
     *
     * Plan shape: fingerprints are a per-row scalar (ONE corpus scan, no
-    * shuffle), then explode → ONE shuffle on the fingerprint → bucket-
-    * local pair fan-out (capped at `maxBucket`, same bound and rationale
+    * shuffle), then explode → ONE shuffle on the fingerprint →
+    * [[bucketPairs]] fan-out (capped at `maxBucket`, same bound and rationale
     * as [[minhashCandidates]]) → count shared per pair. Pair rows enter
     * the final groupBy once per shared fingerprint; the count is the
     * map-side-combinable aggregate.
@@ -441,17 +381,12 @@ object Dedup {
     // an explode of) an aliased fps column is pushed below the spread as
     // a second fingerprint evaluation (the optimizer infers
     // `size(fps) > 0 AND fps IS NOT NULL` for an explode of an attribute)
-    graft.sources.Tables.spread(
+    val fps = graft.sources.Tables.spread(
       df.select(id.as("doc_id"), text.as("__text")))
       .select(col("doc_id"), explode(
         org.apache.spark.sql.graft.TextExpressions.winnowFingerprints(
           rawTokens(col("__text")), k, w)).as("fp"))
-      .groupBy(col("fp"))
-      .agg(collect_list(col("doc_id")).as("members"))
-      .filter(size(col("members")) > 1 && size(col("members")) <= maxBucket)
-      .select(explode(col("members")).as("id_a"), col("members"))
-      .select(col("id_a"), explode(col("members")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
+    bucketPairs(fps, Seq(col("fp")), col("doc_id"), identity, maxBucket)
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

@@ -232,7 +232,7 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs at corpus scale: bucket by
     * sign-LSH signature (one shuffle), generate pairs only within buckets
-    * (bounded by `maxBucket`, like [[Dedup.minhashCandidates]]), exact
+    * ([[Dedup.bucketPairs]], bounded by `maxBucket`), exact
     * cosine re-rank + threshold. Single-table LSH trades recall for a
     * linear scan: near-dups split across buckets are missed — raise recall
     * with fewer bits or multiple seeded passes unioned. The exact variant
@@ -259,15 +259,10 @@ object Similarity {
     val bucketed = emb.filter(vec.isNotNull)
       .select(id.as("__id"), vec.as("__v"),
         lshSignature(vec, planes).as("__sig"))
-    val buckets = bucketed.groupBy(col("__sig"))
-      .agg(collect_list(struct(col("__id"), col("__v"))).as("members"))
-      .filter(size(col("members")) > 1 && size(col("members")) <= maxBucket)
-    buckets
-      .select(explode(col("members")).as("a"), col("members"))
-      .select(col("a"), explode(col("members")).as("b"))
-      .filter(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
-        cosine(col("a.__v"), col("b.__v")).as("cosine"))
+    Dedup.bucketPairs(bucketed, Seq(col("__sig")),
+        struct(col("__id"), col("__v")), _("__id"), maxBucket)
+      .select(col("id_a.__id").as("id_a"), col("id_b.__id").as("id_b"),
+        cosine(col("id_a.__v"), col("id_b.__v")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 

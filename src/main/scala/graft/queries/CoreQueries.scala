@@ -351,13 +351,12 @@ object CoreQueries {
         col("l_orderkey") === col("__pg_ok"), "left_semi")
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("item_count"))
-    page
+    orderedAtTailExchanged(page
       .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"), "left")
       .join(li, col("o_orderkey") === col("l_orderkey"), "left")
       .select(col("o_orderkey"), col("o_totalprice"), col("c_name"),
-        coalesce(col("item_count"), lit(0L)).as("item_count"))
-      .repartition(1)
-      .sortWithinPartitions(col("o_totalprice").desc, col("o_orderkey").asc)
+        coalesce(col("item_count"), lit(0L)).as("item_count")),
+      col("o_totalprice").desc, col("o_orderkey").asc)
   }
 
   val paginateThenJoinSql: String =
@@ -491,21 +490,20 @@ object CoreQueries {
     // exact-ns (ts_ns, event_id) struct — same row the oracle's
     // ROW_NUMBER() OVER (ORDER BY ts DESC, event_id DESC) selects, without
     // a second scan + window + join branch
-    ev.groupBy(col("user_id"))
+    // exchanged tail, not coalesce(1): the cached events table is
+    // already clustered on user_id, so the aggregate is EXCHANGE-FREE
+    // — a narrow coalesce(1) here collapsed scan+aggregate+sort into
+    // ONE task (r15, graft.tools.Profile: 1 job/1 stage/1 task/0.36 s).
+    // repartition(1) moves only the |users| result rows to the sort.
+    orderedAtTailExchanged(ev.groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("event_count"),
         countDistinct(col("event_type")).as("distinct_types"),
         dsum(col("value")).as("total_value"),
         max(col("ts")).cast("date").as("last_day"),
         max_by(col("event_type"),
-          struct(col("ts_ns"), col("event_id"))).as("last_type"))
-      // exchanged tail, not coalesce(1): the cached events table is
-      // already clustered on user_id, so the aggregate is EXCHANGE-FREE
-      // — a narrow coalesce(1) here collapsed scan+aggregate+sort into
-      // ONE task (r15, graft.tools.Profile: 1 job/1 stage/1 task/0.36 s).
-      // repartition(1) moves only the |users| result rows to the sort.
-      .repartition(1)
-      .sortWithinPartitions(col("user_id").asc)
+          struct(col("ts_ns"), col("event_id"))).as("last_type")),
+      col("user_id").asc)
   }
 
   val aggGroupStatsSql: String =
@@ -608,7 +606,7 @@ object CoreQueries {
       ("l_suppkey", col("l_suppkey")),
       ("l_returnflag", col("l_returnflag")),
       ("l_shipdate", col("l_shipdate").cast("date")))
-    cols.map { case (n, c) =>
+    orderedAtTail(cols.map { case (n, c) =>
       t(s, dir, "lineitem")
         .groupBy(c.as("__v")).agg(count(lit(1)).as("__cnt"))
         .agg(
@@ -621,9 +619,7 @@ object CoreQueries {
           max(col("__v")).cast("string").as("max_value"))
         .select(col("column_name"), col("n_rows"), col("n_nulls"),
           col("n_distinct"), col("min_value"), col("max_value"))
-    }.reduce(_.unionAll(_))
-      .coalesce(1)
-      .sortWithinPartitions(col("column_name").asc)
+    }.reduce(_.unionAll(_)), col("column_name").asc)
   }
 
   val profileColumnsSql: String = {
@@ -657,17 +653,16 @@ object CoreQueries {
       .agg(date_trunc("week", min(col("ts"))).cast("date").as("cohort_week"))
     val a = ev.select(col("user_id"),
       date_trunc("week", col("ts")).cast("date").as("wk")).distinct()
-    a.join(u, Seq("user_id"))
+    // exchanged tail (see aggGroupStats): coalesce(1) would run the
+    // final distinct-count aggregate over the expanded (cohort,
+    // offset, user) stream on one task; only |weeks|^2 result rows
+    // need the single sort partition
+    orderedAtTailExchanged(a.join(u, Seq("user_id"))
       .groupBy(col("cohort_week"),
         (datediff(col("wk"), col("cohort_week")) / 7).cast("long")
           .as("week_offset"))
-      .agg(countDistinct(col("user_id")).as("n_active"))
-      // exchanged tail (see aggGroupStats): coalesce(1) would run the
-      // final distinct-count aggregate over the expanded (cohort,
-      // offset, user) stream on one task; only |weeks|^2 result rows
-      // need the single sort partition
-      .repartition(1)
-      .sortWithinPartitions(col("cohort_week").asc, col("week_offset").asc)
+      .agg(countDistinct(col("user_id")).as("n_active")),
+      col("cohort_week").asc, col("week_offset").asc)
   }
 
   val eventsRetentionSql: String =

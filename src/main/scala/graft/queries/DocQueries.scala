@@ -246,9 +246,7 @@ object DocQueries {
     * Runs over [[boundedDocs]] so the oracle is tractable at every SF.
     */
   def dedupMinhash(s: SparkSession, dir: String): DataFrame =
-    nearDupPairs05(s, dir)
-      .coalesce(1)
-      .sortWithinPartitions(col("id_a").asc, col("id_b").asc)
+    orderedAtTail(nearDupPairs05(s, dir), col("id_a").asc, col("id_b").asc)
 
   /** Full-corpus throughput witness (bench-only — no DuckDB oracle is
     * tractable above sf0.01; the construction is hash-gated through
@@ -257,14 +255,13 @@ object DocQueries {
     * production shape where the pair table is a per-snapshot artifact.
     */
   def dedupMinhashFull(s: SparkSession, dir: String): DataFrame =
-    memoizedIndex(s, dir, "neardup_pairs_0.5_b32_full") {
+    orderedAtTail(memoizedIndex(s, dir, "neardup_pairs_0.5_b32_full") {
       val df = Dedup.nearDuplicates(t(s, dir, "documents"), col("doc_id"),
         col("text"), threshold = 0.5, bands = 32)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count()
       df
-    }.coalesce(1)
-      .sortWithinPartitions(col("id_a").asc, col("id_b").asc)
+    }, col("id_a").asc, col("id_b").asc)
 
   /** Materialized near-dup pair set (threshold 0.5, 32×2 banding) shared
     * by the pair report, the cluster query, and the survivor query — the
@@ -394,7 +391,7 @@ object DocQueries {
        |ORDER BY id_a ASC, id_b ASC""".stripMargin
 
   /** Incremental near-dup: the "new shard vs indexed corpus" probe
-    * ([[Dedup.incrementalNearDuplicates]]) at the 0.5 threshold with
+    * ([[Dedup.incrementalProbe]]) at the 0.5 threshold with
     * recall-matched banding (32×2, as dedup_clusters). The oracle is the
     * exact cross-slice O(old×new) Jaccard join — so the gate certifies
     * the probe finds every cross-slice edge on this corpus while doing
@@ -414,10 +411,16 @@ object DocQueries {
       b.count()
       b
     }
+    val fresh = docs.filter(col("doc_id") >= 400)
+    // the probe plan reads the candidate set three times (verify spine +
+    // two semi-joins): snapshot it so the MinHash pass over the fresh
+    // slice and the candidate join run once
+    val cand = Dedup.probeCandidates(bIdx,
+      Dedup.bandRows(fresh, col("doc_id"), col("text"), bands = 32))
+      .localCheckpoint(true)
     orderedAtTail(
-      Dedup.incrementalProbe(bIdx, indexed, docs.filter(col("doc_id") >= 400),
-        col("doc_id"), col("text"), threshold = 0.5, bands = 32,
-        materializeCandidates = true),
+      Dedup.incrementalProbe(cand, indexed, fresh, col("doc_id"), col("text"),
+        threshold = 0.5),
       col("new_id").asc, col("indexed_id").asc)
   }
 

@@ -105,22 +105,21 @@ object DocStreaming {
     // ONE MinHash pass over the batch feeds the within-batch dedup, both
     // probes, AND the sidecar write below — without this the drain pays
     // the batch's most expensive text pass three extra times per delivery
-    val freshBands = Dedup.freshBandRows(freshAsRef, col("id"), col("text"))
+    val freshBands = Dedup.bandRows(fresh, col("doc_id"), col("text"))
       .localCheckpoint(true)
 
     // 2. WITHIN-batch near-dup: min-id wins. Greedy drop of every id
     //    that loses at least one pair to a smaller id — matching
     //    [[Dedup.nearDuplicates]]'s id_a < id_b pair orientation.
     val within = Dedup.nearDuplicatesWithBands(fresh, col("doc_id"),
-      col("text"),
-      freshBands.select(col("band"), col("band_hash"),
-        col("new_id").as("doc_id")),
-      threshold).select(col("id_b").as("doc_id")).distinct()
+      col("text"), freshBands, threshold)
+      .select(col("id_b").as("doc_id")).distinct()
 
     // 3. near-dup vs the frozen index (batch band rows broadcast against
     //    the prebuilt table; corpus touched only for candidate members)
-    val vsIndex = Dedup.incrementalProbeWithBands(bIdx, indexed, freshAsRef,
-      freshBands, col("id"), col("text"), threshold)
+    val vsIndex = Dedup.incrementalProbe(
+      Dedup.probeCandidates(bIdx, freshBands), indexed, freshAsRef,
+      col("id"), col("text"), threshold)
       .select(col("new_id").as("doc_id")).distinct()
 
     // 4. near-dup vs PRIOR curated output via the stream's own band
@@ -134,8 +133,9 @@ object DocStreaming {
       "band int, band_hash bigint, members array<bigint>, batch string")
       .filter(col("batch") =!= tag)
       .select(col("band"), col("band_hash"), col("members"))
-    val vsPrior = Dedup.incrementalProbeWithBands(priorBands, prior,
-      freshAsRef, freshBands, col("id"), col("text"), threshold)
+    val vsPrior = Dedup.incrementalProbe(
+      Dedup.probeCandidates(priorBands, freshBands), prior, freshAsRef,
+      col("id"), col("text"), threshold)
       .select(col("new_id").as("doc_id")).distinct()
 
     val dropIds = within.union(vsIndex).union(vsPrior).distinct()
@@ -149,7 +149,7 @@ object DocStreaming {
     Drain.replaceBatch(kept, curatedDir, tag)
     Drain.replaceBatch(
       Dedup.bandTableFromRows(
-        freshBands.join(kept.select(col("doc_id").as("new_id")),
-          Seq("new_id"), "left_semi")), bandsDir, tag)
+        freshBands.join(kept.select(col("doc_id")), Seq("doc_id"),
+          "left_semi")), bandsDir, tag)
   }
 }

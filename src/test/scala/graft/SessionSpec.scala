@@ -126,4 +126,23 @@ class SessionSpec extends AnyFunSuite {
       literal.findAllMatchIn(Files.readString(p)).map(_.group(1))).toSet
     assert(keys == Set("spark.graft.memo.releaseGraceMs"))
   }
+
+  test("only operators/Dedup.scala holds the bucket pair fan-out in src/main") {
+    val marks = Seq("explode(col(\"members\"))", "size(col(\"members\")) > 1")
+    val fanOuts = mainSources.filter(p =>
+      marks.exists(Files.readString(p).contains))
+      .map(p => mainRoot.relativize(p).toString)
+    assert(fanOuts == Seq("graft/operators/Dedup.scala"))
+  }
+
+  test("query tails take their total order from orderedAtTail*") {
+    // a single-partition sort written inline instead of through
+    // queries/package.scala's orderedAtTail / orderedAtTailExchanged
+    val inline = "(coalesce|repartition)\\(1\\)\\s*\\.sortWithinPartitions".r
+    val queries = mainRoot.resolve("graft/queries")
+    val tails = mainSources.filter(p => p.startsWith(queries) &&
+        inline.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(p => mainRoot.relativize(p).toString)
+    assert(tails == Seq("graft/queries/package.scala"))
+  }
 }

@@ -101,8 +101,12 @@ class OperatorsSpec extends SparkTestBase {
       (6L, "the quick brown fox jumps over the lazy dog near the river bank now"),
       (7L, "the quick brown fox jumps over the lazy dog near the river bank now!"))
       .toDF("doc_id", "text")
-    val got = Dedup.incrementalNearDuplicates(docs, six.union(docs.limit(0)),
-      col("doc_id"), col("text"), threshold = 0.6)
+    val fresh = six.union(docs.limit(0))
+    val cand = Dedup.probeCandidates(
+      Dedup.indexedBandTable(docs, col("doc_id"), col("text")),
+      Dedup.bandRows(fresh, col("doc_id"), col("text")))
+    val got = Dedup.incrementalProbe(cand, docs, fresh, col("doc_id"),
+      col("text"), threshold = 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.nonEmpty)
     assert(got.forall { case (n, i) => n >= 6L && i <= 5L },

@@ -189,8 +189,7 @@ class SinglePassSpec extends SparkTestBase {
   test("nearDuplicates ≡ the semi-joined three-pass verify") {
     val (threshold, shingleSize, maxBucket) = (0.5, 3, 4)
     val docs = corpus.select(col("doc_id"), col("text").as("doc_text"))
-    val banded = Dedup.freshBandRows(corpus, col("doc_id"), col("text"))
-      .withColumnRenamed("new_id", "doc_id")
+    val banded = Dedup.bandRows(corpus, col("doc_id"), col("text"))
     val cand = Dedup.candidatesFromBands(banded, maxBucket).distinct()
     val candIds = cand.select(explode(array(col("id_a"), col("id_b")))
       .as("doc_id"))
